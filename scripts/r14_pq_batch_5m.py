@@ -83,7 +83,7 @@ def main() -> None:
     qs.count()
     blas = {
         (r["query_id"], r["vec_id"])
-        for r in ivf.search_batch(qs, K, nprobe=nprobe, impl="blas").collect()
+        for r in ivf.search_batch(qs, K, nprobe=nprobe).collect()
     }
     pq_rows = {
         (r["query_id"], r["vec_id"])

@@ -1,10 +1,11 @@
-"""Round-15 optimization profiler: for each bench lane, capture
+"""Round-16 optimization profiler: for each bench lane, capture
 .explain('formatted') into plans/r16/<name>_<tag>.txt and measure
 (wall, #jobs, #stages) for the noop-sink action.
 
 Usage: python scripts/r16_profile.py <tag> [query ...]
   tag: 'before' / 'after' (plan file suffix)
   query: subset of bench lanes (default: all)
+Env: R16_PROFILE_REPEATS (default 3) runs per lane.
 """
 from __future__ import annotations
 
@@ -26,7 +27,7 @@ def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or BENCH_QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repeats = int(os.environ.get("R15_PROFILE_REPEATS", "3"))
+    repeats = int(os.environ.get("R16_PROFILE_REPEATS", "3"))
     spark = get_spark(app_name="r16-profile")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()  # warm-up

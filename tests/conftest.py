@@ -23,8 +23,13 @@ def spark():
     # (test_plans, test_dedup) are insensitive. bench.py is NOT
     # affected: it honors $SPARK_GRAFT_CPUS per the driver contract.
     # SPARK_GRAFT_TEST_CPUS overrides the cap either way.
-    env_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # A non-integer SPARK_GRAFT_CPUS (e.g. "*", which local[*] accepts)
+    # falls back to the cap instead of failing the whole session.
     cap = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
+    try:
+        env_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    except ValueError:
+        env_cpus = cap
     s = get_spark(
         app_name="vdb-tests",
         shuffle_partitions=8,

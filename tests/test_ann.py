@@ -1455,35 +1455,46 @@ def test_nprobe_for_rows_frac_worst_case_bound(spark, emb):
     assert k == hier.cell_stats().count()
 
 
-def test_search_batch_blas_matches_expr(spark, emb, queries):
-    """impl='blas' (cogroup per-cell matmul — the distributed-query
-    high-dim path, round 13) must return exactly the expression form's
-    rows on both classes, including through a reduced-geometry index
-    and for string ids; invalid impl raises."""
-    import pytest as _pytest
+def _assert_batch_matches_search(idx, queries, k, **probe):
+    """``search_batch`` (cogroup + per-cell BLAS) must return, for
+    every query of the batch, exactly the rows of the single-query
+    ``search`` at the same probe budget — which scores the same probed
+    cells with ``knn_exact``, the Catalyst reference scan. Ids and
+    order must be identical; distances agree within 1e-4 (one rounding
+    step: the expanded BLAS form and the elementwise sum may round a
+    boundary value apart)."""
+    got: dict = {}
+    for r in idx.search_batch(queries, k, **probe).collect():
+        got.setdefault(r["query_id"], []).append((r["vec_id"], r["dist"]))
+    qs = queries.collect()
+    assert sorted(got) == sorted(r["query_id"] for r in qs)
+    for r in qs:
+        want = [
+            (w["vec_id"], w["dist"])
+            for w in idx.search(r["query_embedding"], k, **probe).collect()
+        ]
+        have = got[r["query_id"]]
+        assert [v for v, _ in have] == [v for v, _ in want], r["query_id"]
+        assert all(
+            abs(dh - dw) <= 1e-4 for (_, dh), (_, dw) in zip(have, want)
+        ), r["query_id"]
 
+
+def test_search_batch_matches_search(spark, emb, queries):
+    """The one batch scoring path (``_cogroup_blas_topk``) against the
+    single-query reference on both index classes: the flat index, a
+    reduced-geometry (``coarse_dim=8``) index, a 3x3 hierarchical
+    index, string ids, and an empty batch."""
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
 
     idx = IVFIndex.build(emb, num_cells=16, seed=42)
-    want = [tuple(r) for r in idx.search_batch(queries, K, nprobe=6).collect()]
-    got = [
-        tuple(r)
-        for r in idx.search_batch(queries, K, nprobe=6, impl="blas").collect()
-    ]
-    assert got == want
-    with _pytest.raises(ValueError, match="impl"):
-        idx.search_batch(queries, K, impl="numpy")
+    _assert_batch_matches_search(idx, queries, K, nprobe=6)
 
     red = IVFIndex.build(emb, num_cells=16, seed=42, coarse_dim=8)
-    assert [
-        tuple(r)
-        for r in red.search_batch(queries, K, nprobe=8, impl="blas").collect()
-    ] == [tuple(r) for r in red.search_batch(queries, K, nprobe=8).collect()]
+    _assert_batch_matches_search(red, queries, K, nprobe=8)
 
     hier = HierarchicalIVF.build(emb, k1=3, k2=3, seed=42)
-    assert [
-        tuple(r) for r in hier.search_batch(queries, K, impl="blas").collect()
-    ] == [tuple(r) for r in hier.search_batch(queries, K).collect()]
+    _assert_batch_matches_search(hier, queries, K)
 
     docs = emb.select(
         F.concat(F.lit("d"), F.col("vec_id")).alias("vec_id"), "embedding"
@@ -1493,68 +1504,40 @@ def test_search_batch_blas_matches_expr(spark, emb, queries):
         F.col("embedding").alias("query_embedding"),
     )
     sidx = IVFIndex.build(docs, num_cells=8, seed=42)
-    assert [
-        tuple(r) for r in sidx.search_batch(sq, 5, nprobe=8, impl="blas").collect()
-    ] == [tuple(r) for r in sidx.search_batch(sq, 5, nprobe=8).collect()]
+    _assert_batch_matches_search(sidx, sq, 5, nprobe=8)
 
     empty = queries.limit(0)
-    assert idx.search_batch(empty, K, nprobe=4, impl="blas").count() == 0
+    assert idx.search_batch(empty, K, nprobe=4).collect() == []
+    assert hier.search_batch(empty, K).collect() == []
 
 
-def test_route_batch_impl_thresholds(spark, emb, queries):
-    """Round 14 (r13 verdict item 1 — the one open scale-killer): the
-    expr-vs-blas router. Small-volume batches keep the codegen
-    expression form; above the measured madds threshold or the
-    probed-pairs broadcast ceiling the auto route picks blas; an
-    EXPLICIT impl='expr' above the ceiling raises naming 'blas'
-    instead of riding into the measured >=5x wall."""
-    import pytest as _pytest
+def test_search_batch_builds_without_counting(spark, emb, queries):
+    """Building a ``search_batch`` plan runs no counting job on either
+    class: there is no batch-size router to feed, so ``count()`` must
+    not be called on the queries, the assignments, or anything else
+    while the plan is built (a per-call job re-executes the queries'
+    lineage on every serve)."""
+    from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
 
-    from vector_database_in_rust_spark.operators.ann import (
-        AUTO_BLAS_MADDS,
-        MAX_PROBED_BROADCAST_BYTES,
-        _route_batch_impl,
-    )
+    flat = IVFIndex.build(emb, num_cells=16, seed=42)
+    hier = HierarchicalIVF.build(emb, k1=3, k2=3, seed=42)
+    # poison count() on the concrete DataFrame class (the public
+    # pyspark.sql.DataFrame is an abstract parent that it overrides)
+    cls = type(queries)
+    called = {"n": 0}
+    orig = cls.count
 
-    # small volume -> expr; explicit blas honored; bogus impl raises
-    small = dict(nprobe=4, n_rows=500, num_cells=8, dim=64)
-    assert _route_batch_impl("auto", queries, **small) == "expr"
-    assert _route_batch_impl("blas", queries, **small) == "blas"
-    assert _route_batch_impl("expr", queries, **small) == "expr"
-    with _pytest.raises(ValueError, match="impl"):
-        _route_batch_impl("numpy", queries, **small)
+    def counting(self):
+        called["n"] += 1
+        return orig(self)
 
-    # the r13 top-decade parameters (5M x 384-d hier, nprobe=32): the
-    # per-query volume is 32 * ~1490 rows * 384 dims ~ 1.8e7 madds, so
-    # the cutoff is ~21 queries — a 100-query batch must route blas
-    top = dict(nprobe=32, n_rows=5_000_000, num_cells=3356, dim=384)
-    batch100 = spark.range(100).withColumnRenamed("id", "query_id")
-    assert _route_batch_impl("auto", batch100, **top) == "blas"
-    assert _route_batch_impl("auto", queries.limit(1), **top) == "expr"
-
-    # broadcast ceiling: at nprobe=32, dim=384 the probed-pairs
-    # broadcast passes 256 MiB at ~2709 queries — explicit expr must
-    # raise (naming blas), auto must reroute, even when the madds
-    # estimate is tiny (1-row corpus)
-    cut = MAX_PROBED_BROADCAST_BYTES // (32 * (8 * 384 + 24))
-    over = spark.range(cut + 10).withColumnRenamed("id", "query_id")
-    tiny_corpus = dict(nprobe=32, n_rows=1, num_cells=3356, dim=384)
-    with _pytest.raises(ValueError, match="blas"):
-        _route_batch_impl("expr", over, **tiny_corpus)
-    assert _route_batch_impl("auto", over, **tiny_corpus) == "blas"
-
-    # the sf0.01 16-query batch sits orders of magnitude under the
-    # threshold (16 * 6 * ~31 * 64 ~ 1.9e5 madds vs 4e8): the DEFAULT
-    # route must be expr and row-identical to both explicit impls
-    assert 16 * 6 * (emb.count() / 16) * 64 < AUTO_BLAS_MADDS
-    idx = IVFIndex.build(emb, num_cells=16, seed=42)
-    want = [
-        tuple(r)
-        for r in idx.search_batch(queries, K, nprobe=6, impl="expr").collect()
-    ]
-    assert [
-        tuple(r) for r in idx.search_batch(queries, K, nprobe=6).collect()
-    ] == want
+    try:
+        cls.count = counting
+        plans = [flat.search_batch(queries, K), hier.search_batch(queries, K)]
+    finally:
+        cls.count = orig
+    assert called["n"] == 0
+    assert all(p.columns == ["query_id", "vec_id", "dist"] for p in plans)
 
 
 def test_build_auto_coarse_dim_auto(spark, emb):

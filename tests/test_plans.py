@@ -570,9 +570,11 @@ def test_hier_search_batch_broadcast_topk(spark):
     """HierarchicalIVF.search_batch: both centroid tables and the probed
     cell set must broadcast (the corpus NEVER sits on the build side),
     the only nested-loop join is the tiny queries x L1 cross, no
-    sort-merge join appears, and the per-query top-k runs as a
-    map-side-bounded WindowGroupLimit — not a global sort of all
-    candidates. Shuffles: ranking windows + presentation sort only."""
+    sort-merge join appears, candidates reach the per-cell cogroup
+    through a broadcast semi-join on the probed cells, and the per-query
+    top-k runs as a map-side-bounded WindowGroupLimit — not a global
+    sort of all candidates. Shuffles: ranking windows, the two cogroup
+    sides, the probed-cell distinct and the presentation sort only."""
     from pyspark.sql import functions as F
 
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
@@ -587,13 +589,16 @@ def test_hier_search_batch_broadcast_topk(spark):
     a = audit(idx.search_batch(queries, 5))
     assert "CartesianProduct" not in a.formatted
     assert not a.sort_merge_joins
-    # formatted AQE output repeats the initial plan, so every node
-    # appears twice: the real plan is 1 nested-loop (queries x L1) +
-    # 2 hash joins (L2 ranking, candidate scan).
-    assert a.broadcast_joins.count("BroadcastNestedLoopJoin") <= 2
-    assert a.broadcast_joins.count("BroadcastHashJoin") >= 2
+    # formatted output names every join twice (tree + details), so the
+    # real plan is 2 nested loops (the queries x L1 cross, planned once
+    # for the probed pairs and once for the semi-join's probed-cell
+    # set) + 3 hash joins (L2 ranking twice, candidate semi-join).
+    assert a.broadcast_joins.count("BroadcastNestedLoopJoin") <= 4
+    assert a.broadcast_joins.count("BroadcastHashJoin") >= 3
+    assert "FlatMapCoGroupsInPandas" in a.formatted
+    assert "BroadcastHashJoin LeftSemi" in a.formatted
     assert a.has_partial_window_group_limit
-    assert a.n_shuffle_exchanges <= 4
+    assert a.n_shuffle_exchanges <= 7
 
 
 def test_corpus_shuffle_no_single_partition_exchange(audits):
@@ -693,12 +698,13 @@ def test_minhash_index_skips_alignment_when_known_small(spark):
 
 
 def test_blas_batch_search_prunes_unprobed_cells(spark):
-    """impl='blas' (round 13): the cogroup's candidate side must be
+    """search_batch's cogroup (round 13): the candidate side must be
     semi-joined down to the probed cells BEFORE the group exchange —
     without it every unprobed cell's rows shuffle into empty-probe
     groups (a full corpus shuffle for a selective serve). Pin the
-    broadcast semi-join in the plan and the expr-equality of the
-    result."""
+    broadcast semi-join in the plan, and the rows against the
+    driver-probed ``search_batch_pruned`` scan (same per-cell kernel,
+    different probe and candidate plumbing)."""
     from pyspark.sql import functions as F
 
     from tests.conftest import SF_SMOKE
@@ -711,9 +717,11 @@ def test_blas_batch_search_prunes_unprobed_cells(spark):
         F.col("embedding").alias("query_embedding"),
     )
     idx = IVFIndex.build(emb, num_cells=16, seed=42)
-    res = idx.search_batch(queries, 5, nprobe=2, impl="blas")
+    res = idx.search_batch(queries, 5, nprobe=2)
     plan = formatted_plan(res)
     assert "FlatMapCoGroupsInPandas" in plan
     assert "LeftSemi" in plan and "BroadcastHashJoin" in plan, plan
-    want = [tuple(r) for r in idx.search_batch(queries, 5, nprobe=2).collect()]
+    want = [
+        tuple(r) for r in idx.search_batch_pruned(queries, 5, nprobe=2).collect()
+    ]
     assert [tuple(r) for r in res.collect()] == want

@@ -14,7 +14,8 @@ Engine surface::
     eng.search_exact(query, k)                   # == VectorStore::search_knn
     eng.build_index(num_cells=..., start_id=..., end_id=...)  # == build_index
     eng.search(query, k, nprobe=...)             # == HnswIndex::search
-    eng.search_batch(queries_df, k)              # bulk generalization
+    eng.search_batch(queries_df, k)              # bulk generalization:
+                                                 # cogroup + per-cell BLAS
 
 Differences are deliberate and documented: (M, ef_construction) become
 (num_cells, nprobe) — see operators/ann.py; results come back as
@@ -284,26 +285,19 @@ class VectorEngine:
         *,
         nprobe: int | None = None,
         target_frac: float | None = None,
-        impl: str = "auto",
         known_queries: int | None = None,
     ) -> DataFrame:
-        """``impl`` routes candidate scoring (round 14): ``"auto"``
-        picks expr/blas on the measured volume thresholds — see
-        ``IVFIndex.search_batch``. ``known_queries`` (round 16,
-        forwarding the round-15 router knob through the facade): a
-        caller that knows its batch size skips the router's bounded
-        per-call counting job; routing is identical either way."""
+        """Batch ANN over the index (``IVFIndex.search_batch``: one
+        cogroup + per-cell BLAS scoring path at every batch size), or
+        exact ``knn_batch`` when no index is built. ``known_queries``
+        is accepted for older callers and ignored: no routing decision
+        needs the batch size any more."""
         if self.index is None:
             return knn_ops.knn_batch(
                 self.df, queries, k, id_col=self.id_col, vec_col=self.vec_col
             )
         return self.index.search_batch(
-            queries,
-            k,
-            nprobe=nprobe,
-            target_frac=target_frac,
-            impl=impl,
-            known_queries=known_queries,
+            queries, k, nprobe=nprobe, target_frac=target_frac
         )
 
     def search_filtered(

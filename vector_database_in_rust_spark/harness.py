@@ -1108,12 +1108,7 @@ def ann_search(spark, sf_dir):
     tests assert recall@k >= 0.9 vs knn_exact (the same exact-vs-ANN
     relationship the reference's own tests rely on, src/lib.rs:543-549)."""
     idx = _ivf_index(spark, sf_dir)
-    # known_queries=8 (round 15): the batch size is static here, so the
-    # router's bounded counting job — one Spark job per call, re-running
-    # the query-side scan — is pure overhead; routing is unchanged.
-    return idx.search_batch(
-        _query_vec_df(spark, sf_dir, 8), KNN_K, nprobe=4, known_queries=8
-    )
+    return idx.search_batch(_query_vec_df(spark, sf_dir, 8), KNN_K, nprobe=4)
 
 
 _SERVE_QUERIES = 1024
@@ -1138,26 +1133,20 @@ SELECT query_id, vec_id, dist FROM ranked WHERE r <= {KNN_K}
 @register("ann_serve_batch", _ANN_SERVE_ORACLE)
 def ann_serve_batch(spark, sf_dir):
     """SERVING-TIER batch probe (round 16, r15 verdict item 5): the
-    first {_SERVE_QUERIES} stored vectors as one query batch, full
-    probe (nprobe = all cells) over the shared IVF index, impl='auto'.
-    Full probe makes IVF exact, so the lane hash-checks against plain
-    exact-knn SQL while the ROUTE follows the measured volume
-    thresholds: at sf0.1 proportions (1024 queries x 2000 rows x 64-d,
-    16 cells) auto routes BLAS — the ``_cogroup_blas_topk`` matmul tier
-    the r13 campaign built for the 10k x 5M regime — so a regression
-    in the cogroup serving path now moves a bench lane (previously no
-    bench guard covered it); at the driver's sf0.01 correctness scale
-    (500 queries x 500 rows) the same router picks expr, hash-checked
-    against the same oracle. known_queries: the draw is vec_id <
-    {_SERVE_QUERIES}, bounded by the memoized corpus count — no
-    routing job."""
+    first 1024 stored vectors as one query batch, full probe
+    (nprobe = all cells) over the shared IVF index. Full probe makes
+    IVF exact, so the lane hash-checks against plain exact-knn SQL
+    while exercising ``search_batch``'s one scoring path — the
+    ``_cogroup_blas_topk`` per-cell matmul the r13 campaign built for
+    the 10k x 5M regime — at every scale: sf0.1 proportions in the
+    bench (1024 queries x 2000 rows x 64-d, 16 cells), the driver's
+    sf0.01 correctness scale (500 queries x 500 rows) in the
+    oracle check."""
     idx = _ivf_index(spark, sf_dir)
-    n_q = min(_SERVE_QUERIES, _emb_count(spark, sf_dir))
     return idx.search_batch(
         _query_vec_df(spark, sf_dir, _SERVE_QUERIES),
         KNN_K,
         nprobe=idx.num_cells,
-        known_queries=n_q,
     )
 
 
@@ -1567,7 +1556,6 @@ def ann_ingest_hier_verdict_q(spark, sf_dir):
             "query_id BIGINT, query_embedding ARRAY<DOUBLE>",
         ),
         1,
-        known_queries=1,
         nprobe=total_sub,
     ).first()
     self_exact = (
@@ -1652,7 +1640,6 @@ def ann_ingest_overflow_verdict_q(spark, sf_dir):
             "query_id BIGINT, query_embedding ARRAY<DOUBLE>",
         ),
         1,
-        known_queries=1,
         nprobe=grown.num_cells,
     ).first()
     self_query_exact = top["vec_id"] == 9_000_001 and top["dist"] == 0.0
@@ -1837,9 +1824,6 @@ def ann_pq_batch_q(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    # (Round 16 audit of remaining counting-job callers: the ADC batch
-    # path is fully declarative — no impl router, no per-call counting
-    # job — so there is no known_queries to thread here.)
     return pq.search_batch(
         queries,
         KNN_K,
@@ -1940,10 +1924,7 @@ def stream_ann_ingest(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    return idx.search_batch(
-        queries, KNN_K, nprobe=_INGEST_CELLS,
-        known_queries=len(_INGEST_QUERY_IDS),
-    )
+    return idx.search_batch(queries, KNN_K, nprobe=_INGEST_CELLS)
 
 
 _ANN_INGEST_STREAM_ORACLE = """
@@ -5088,8 +5069,8 @@ def ann_recall_verdict_q(spark, sf_dir):
     exact = knn_batch(_emb(spark, sf_dir), q, KNN_K)
     return topk_recall_verdict(
         exact,
-        idx.search_batch(q, KNN_K, nprobe=4, known_queries=8),
-        idx.search_batch(q, KNN_K, nprobe=16, known_queries=8),
+        idx.search_batch(q, KNN_K, nprobe=4),
+        idx.search_batch(q, KNN_K, nprobe=16),
         k=KNN_K,
         min_recall=0.5,
     )
@@ -5114,97 +5095,10 @@ def ann_hier_recall_verdict_q(spark, sf_dir):
     n_cells = sum(len(v) for v in idx.l2_centroids.values())
     return topk_recall_verdict(
         exact,
-        idx.search_batch(q, KNN_K, known_queries=8),
-        idx.search_batch(q, KNN_K, nprobe=n_cells, known_queries=8),
+        idx.search_batch(q, KNN_K),
+        idx.search_batch(q, KNN_K, nprobe=n_cells),
         k=KNN_K,
         min_recall=0.6,
-    )
-
-
-_ANN_AUTOROUTE_ORACLE = """
-SELECT TRUE AS small_routes_expr,
-       TRUE AS topdecade_routes_blas,
-       TRUE AS ceiling_guard_raises,
-       TRUE AS auto_equals_both_impls
-"""
-
-
-@register("ann_autoroute_verdict", _ANN_AUTOROUTE_ORACLE)
-def ann_autoroute_verdict_q(spark, sf_dir):
-    """Driver-verifiable verdict for the round-14 expr-vs-blas router
-    (r13 verdict item 1 — the one open scale-killer: search_batch's
-    unguarded expr default measured >=5x DNF at 10k queries x 5M x
-    384-d). Pins all four routing contracts against the live code:
-    (a) a small-volume batch keeps the codegen expression form — the
-    low-dim small-batch regime where expr measurably wins; (b) the r13
-    top-decade parameters (nprobe=32, 5M rows, 3356 cells, 384-d) route
-    a 100-query batch to blas — the regime the r13 run measured at
-    532 s blas vs killed-at-45-min expr; (c) an EXPLICIT impl='expr'
-    above the probed-pairs broadcast ceiling raises naming 'blas'
-    instead of riding into the wall; (d) the auto route's rows are
-    IDENTICAL to both explicit impls on the sf corpus (the equality
-    that makes routing purely a performance decision). Hash-checked:
-    any routing regression flips a boolean red."""
-    from vector_database_in_rust_spark.operators.ann import (
-        MAX_PROBED_BROADCAST_BYTES,
-        _route_batch_impl,
-    )
-
-    idx = _ivf_index(spark, sf_dir)
-    q = _query_vec_df(spark, sf_dir, 8)
-    # n_queries/known_queries everywhere (round 16, verdict item 6):
-    # every batch size in this verdict is a literal the harness wrote,
-    # so the router's bounded counting job — which re-executes the
-    # query-side lineage per call, and at plan-audit time made this
-    # lane's construction the registry's slowest — is pure overhead.
-    # All four contract booleans compare exactly as before: the count
-    # is only an input to the threshold compare.
-    small_routes_expr = (
-        _route_batch_impl(
-            "auto",
-            q,
-            nprobe=4,
-            n_rows=idx._corpus_rows(),
-            num_cells=idx.num_cells,
-            dim=idx._full_dim(),
-            n_queries=8,
-        )
-        == "expr"
-    )
-    top = dict(nprobe=32, n_rows=5_000_000, num_cells=3356, dim=384)
-    big = spark.range(100).withColumnRenamed("id", "query_id")
-    topdecade_routes_blas = (
-        _route_batch_impl("auto", big, n_queries=100, **top) == "blas"
-    )
-    cut = MAX_PROBED_BROADCAST_BYTES // (32 * (8 * 384 + 24))
-    over = spark.range(cut + 10).withColumnRenamed("id", "query_id")
-    try:
-        _route_batch_impl(
-            "expr", over, nprobe=32, n_rows=1, num_cells=3356, dim=384,
-            n_queries=cut + 10,
-        )
-        ceiling_guard_raises = False
-    except ValueError as exc:
-        ceiling_guard_raises = "blas" in str(exc)
-    rows_auto = [
-        tuple(r)
-        for r in idx.search_batch(q, KNN_K, nprobe=4, known_queries=8).collect()
-    ]
-    auto_equals_both_impls = all(
-        [tuple(r) for r in idx.search_batch(
-            q, KNN_K, nprobe=4, impl=impl, known_queries=8
-        ).collect()] == rows_auto
-        for impl in ("expr", "blas")
-    )
-    return spark.createDataFrame(
-        [(
-            small_routes_expr,
-            topdecade_routes_blas,
-            ceiling_guard_raises,
-            auto_equals_both_impls,
-        )],
-        "small_routes_expr BOOLEAN, topdecade_routes_blas BOOLEAN, "
-        "ceiling_guard_raises BOOLEAN, auto_equals_both_impls BOOLEAN",
     )
 
 

@@ -31,7 +31,9 @@ Scale notes (100 TB, ~1e11 vectors):
 - the probe reads nprobe/num_cells of the data: with 32 probes over 3e5
   cells that is ~0.01% of 100 TB per query — same contract as HNSW's
   "examine << N candidates" (readme.md:17);
-- batch search shuffles only scored (query_id, vec_id, dist) triples.
+- batch search shuffles the probed (query, cell) pairs and the probed
+  cells' rows once each, keyed by cell_id, then only per-cell top-k
+  (query_id, vec_id, dist) triples.
 """
 
 from __future__ import annotations
@@ -115,6 +117,72 @@ def _project_udf(proj: np.ndarray):
     return project
 
 
+def _cell_topk_fn(k: int, round_digits: int | None):
+    """The one per-cell BLAS scorer behind ``search_batch`` and
+    ``search_batch_pruned`` on both index classes, as an executor-side
+    closure factory (nested, so it pickles by value: executors need not
+    import this package). ``cell_topk(qids, qmat, ids, vecs)`` scores
+    the queries ``qmat`` probing a cell against the cell's candidate
+    vectors with one ``Q @ X.T`` and keeps each query's top-k under the
+    global window's exact (ROUNDED dist, vec_id) key — so the per-cell
+    cut provably contains the global top-k, and the ranking window
+    downstream sees cells x queries x k rows instead of every candidate
+    pair (``_rank_topk``).
+
+    Distances are the expanded ||q||^2 + ||x||^2 - 2 q.x, clamped to
+    >= 0 first (the expansion's tiny negative float error on a true
+    squared distance; an un-clamped -0.0 would hash-differ from 0.0),
+    then rounded HALF_UP — ``F.round``'s rule on a non-negative value
+    (np.round is half-even and can differ on exact boundary values).
+    The expanded form can differ from an elementwise sum in the last
+    float place, so a distance within one ulp of a rounding boundary
+    may round the other way (round-12 advisor note).
+
+    Id columns come back as object dtype: Arrow coerces to the declared
+    schema types, so int/string/etc ids all pass through unchanged (an
+    int64-forced Series crashed string ids, round 13)."""
+
+    def cell_topk(qids, qmat: np.ndarray, ids: np.ndarray, vecs: pd.Series):
+        x = np.vstack(vecs.apply(np.asarray, args=(np.float64,)))
+        d = (
+            (qmat * qmat).sum(axis=1)[:, None]
+            + (x * x).sum(axis=1)[None, :]
+            - 2.0 * (qmat @ x.T)
+        )
+        d = np.maximum(d, 0.0)
+        if round_digits is not None:
+            s = 10.0 ** round_digits
+            d = np.floor(d * s + 0.5) / s
+        kk = min(k, d.shape[1])
+        out_q, out_v, out_d = [], [], []
+        for qi in range(d.shape[0]):
+            order = np.lexsort((ids, d[qi]))[:kk]
+            out_q.extend([qids[qi]] * kk)
+            out_v.extend(ids[order])
+            out_d.extend(d[qi][order])
+        return pd.DataFrame(
+            {
+                "query_id": pd.Series(out_q, dtype=object),
+                "vec_id": pd.Series(out_v, dtype=object),
+                "dist": pd.Series(out_d, dtype="float64"),
+            }
+        )
+
+    return cell_topk
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Global per-query top-k over per-cell ``_cell_topk_fn`` output:
+    ``row_number() <= k`` under (dist, vec_id), presented sorted."""
+    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
+    return (
+        scored.withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= k)
+        .drop("_r")
+        .orderBy("query_id", "dist", "vec_id")
+    )
+
+
 def _pruned_blas_topk(
     assignments: DataFrame,
     data: list,
@@ -126,28 +194,16 @@ def _pruned_blas_topk(
     query_id_type: str = "bigint",
 ) -> DataFrame:
     """Score a partition-pruned candidate scan against its probe set
-    with per-cell BLAS batches — the serving-side analogue of
-    ``knn_batch``'s blocked matmul (round 12).
+    with per-cell BLAS batches (``_cell_topk_fn``) — the broadcast-small
+    serve (round 12).
 
-    ``data`` is the driver-side probe list [(query_id, vec, cell_id)].
-    The first 5M x 384-d serve measurement showed the expression form
-    (broadcast join + zip_with/aggregate L2) spending 24-48 s on
-    ~1.2M candidate-pair x 384-element interpreted array ops while the
-    pruned scan itself was seconds; the identical work is one
-    ``Q @ X.T`` per (Arrow batch, cell) here. Per (cell, query) only
-    the top-k rows are emitted — ordered by (ROUNDED dist, vec_id),
-    the global window's exact key, so the map-side cut provably
-    contains the global top-k — and the ranking window then sees
-    ``cells x queries x k`` rows instead of every candidate pair.
-
-    Rounding matches ``search_batch``'s ``F.round`` RULE (HALF_UP on a
-    non-negative squared distance; the expanded form's tiny negative
-    float error is clamped to 0 first — a true squared distance is
-    >= 0, and an un-clamped -0.0 would hash-differ from 0.0). Results
-    are row-identical to the expression form except when a distance
-    lands within one BLAS-expansion ulp of a rounding boundary — the
-    expanded ||q||^2+||x||^2-2q.x and the elementwise sum can differ
-    in the last float place there (round-12 advisor note).
+    ``data`` is the driver-side probe list [(query_id, vec, cell_id)];
+    it rides to the executors as one broadcast {cell: (qids, Q)} and
+    every Arrow batch of the scan is scored cell by cell. The first
+    5M x 384-d serve measurement showed the expression form (broadcast
+    join + zip_with/aggregate L2) spending 24-48 s on ~1.2M
+    candidate-pair x 384-element interpreted array ops while the
+    pruned scan itself was seconds.
 
     Id columns pass through with their source types: ``vec_id`` takes
     ``assignments[id_col]``'s type, ``query_id`` the caller-declared
@@ -168,50 +224,20 @@ def _pruned_blas_topk(
     bc = spark.sparkContext.broadcast(packed)
     all_cells = sorted(packed)
     id_type = assignments.schema[id_col].dataType.simpleString()
+    cell_topk = _cell_topk_fn(k, round_digits)
 
     def block(batches):
         probes = bc.value
         for pdf in batches:
-            out_q, out_v, out_d = [], [], []
-            for cell, sub in pdf.groupby("cell_id"):
-                pq = probes.get(int(cell))
-                if pq is None:
-                    continue
-                qids, qmat = pq
-                x = np.vstack(
-                    sub[vec_col].apply(np.asarray, args=(np.float64,))
+            frames = [
+                cell_topk(
+                    *probes[int(cell)], sub[id_col].to_numpy(), sub[vec_col]
                 )
-                ids = sub[id_col].to_numpy()
-                # ||q-x||^2 = ||q||^2 + ||x||^2 - 2 q.x — one BLAS call
-                d = (
-                    (qmat * qmat).sum(axis=1)[:, None]
-                    + (x * x).sum(axis=1)[None, :]
-                    - 2.0 * (qmat @ x.T)
-                )
-                d = np.maximum(d, 0.0)
-                if round_digits is not None:
-                    # HALF_UP on non-negative values == F.round's rule
-                    # (np.round is half-even and can differ on exact
-                    # boundary values).
-                    s = 10.0 ** round_digits
-                    d = np.floor(d * s + 0.5) / s
-                kk = min(k, d.shape[1])
-                for qi in range(d.shape[0]):
-                    # top-k under the window's exact (dist, vec_id) key
-                    order = np.lexsort((ids, d[qi]))[:kk]
-                    out_q.extend([qids[qi]] * kk)
-                    out_v.extend(ids[order])
-                    out_d.extend(d[qi][order])
-            # object dtype: Arrow coerces to the declared schema types,
-            # so int/string/etc ids all pass through unchanged (an
-            # int64-forced Series crashed string ids).
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype=object),
-                    "vec_id": pd.Series(out_v, dtype=object),
-                    "dist": pd.Series(out_d, dtype="float64"),
-                }
-            )
+                for cell, sub in pdf.groupby("cell_id")
+                if int(cell) in probes
+            ]
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
     cand = assignments.filter(F.col("cell_id").isin(all_cells)).select(
         "cell_id", F.col(id_col), F.col(vec_col)
@@ -219,13 +245,7 @@ def _pruned_blas_topk(
     scored = cand.mapInPandas(
         block, f"query_id {query_id_type}, vec_id {id_type}, dist DOUBLE"
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-        .orderBy("query_id", "dist", "vec_id")
-    )
+    return _rank_topk(scored, k)
 
 
 def _occupancy_stats(assignments: DataFrame) -> dict:
@@ -351,53 +371,28 @@ def _cogroup_blas_topk(
     round_digits: int | None,
     query_id_type: str,
 ) -> DataFrame:
-    """BLAS candidate scoring for DISTRIBUTED query batches (round 13
-    — the remaining expression-form hot path after r12's
-    ``_pruned_blas_topk`` fixed the broadcast-small serve): cogroup the
-    probed (query, cell) pairs with the assignments ON cell_id and run
-    one ``Q_c @ X_c.T`` per cell, emitting only each (query, cell)'s
-    top-k under the global window's exact (rounded dist, vec_id) key —
-    the same map-side-cut containment argument as ``_pruned_blas_topk``
-    (and the same HALF_UP rounding + >= 0 clamp), so the downstream
-    window sees cells x queries x k rows instead of every candidate
-    pair. Cost shape: one shuffle of the probed pairs + one of the
-    candidates, both keyed by cell_id — queries never collect to the
-    driver, so this is the path for query batches too large to
+    """Candidate scoring for DISTRIBUTED query batches — the one
+    scoring path of both index classes' ``search_batch`` (round 13):
+    cogroup the probed (query, cell) pairs with the assignments ON
+    cell_id and score each cell group with ``_cell_topk_fn`` (one
+    ``Q_c @ X_c.T``). Cost shape: one shuffle of the probed pairs + one
+    of the candidates, both keyed by cell_id — queries never collect to
+    the driver, so batch size is bounded by the cluster, not by a
     broadcast. Group size per cell is (queries probing the cell) x
     (cell occupancy); the occupancy maintenance discipline
     (split/rebalance/rebuild_due) bounds the candidate side exactly as
     it bounds every other per-cell operation."""
     id_type = assignments.schema[id_col].dataType.simpleString()
+    cell_topk = _cell_topk_fn(k, round_digits)
 
     def block(key, probes, cands):
         if probes.empty or cands.empty:
             return pd.DataFrame({"query_id": [], "vec_id": [], "dist": []})
-        qmat = np.vstack(probes[query_vec_col].apply(np.asarray, args=(np.float64,)))
-        qids = probes[query_id_col].to_numpy()
-        x = np.vstack(cands[vec_col].apply(np.asarray, args=(np.float64,)))
-        ids = cands[id_col].to_numpy()
-        d = (
-            (qmat * qmat).sum(axis=1)[:, None]
-            + (x * x).sum(axis=1)[None, :]
-            - 2.0 * (qmat @ x.T)
-        )
-        d = np.maximum(d, 0.0)
-        if round_digits is not None:
-            s = 10.0 ** round_digits
-            d = np.floor(d * s + 0.5) / s
-        kk = min(k, d.shape[1])
-        out_q, out_v, out_d = [], [], []
-        for qi in range(d.shape[0]):
-            order = np.lexsort((ids, d[qi]))[:kk]
-            out_q.extend([qids[qi]] * kk)
-            out_v.extend(ids[order])
-            out_d.extend(d[qi][order])
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype=object),
-                "vec_id": pd.Series(out_v, dtype=object),
-                "dist": pd.Series(out_d, dtype="float64"),
-            }
+        return cell_topk(
+            probes[query_id_col].to_numpy(),
+            np.vstack(probes[query_vec_col].apply(np.asarray, args=(np.float64,))),
+            cands[id_col].to_numpy(),
+            cands[vec_col],
         )
 
     # Probe selectivity must reach the candidate side BEFORE the
@@ -418,13 +413,7 @@ def _cogroup_blas_topk(
             block, f"query_id {query_id_type}, vec_id {id_type}, dist DOUBLE"
         )
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-        .orderBy("query_id", "dist", "vec_id")
-    )
+    return _rank_topk(scored, k)
 
 
 def _cogroup_adc_topk(
@@ -650,109 +639,6 @@ def _nprobe_for_rows_frac(cell_stats_df: DataFrame, target_rows_frac: float) -> 
     return max(1, k)
 
 
-# Router thresholds for batch candidate scoring (round 14, closing the
-# r13 verdict's one open scale-killer: the expr arm in the distributed-
-# batch regime was unguarded — measured >=5x DNF at 10k queries x 5M x
-# 384-d, killed at 45+ min vs 532 s blas).
-#
-# AUTO_BLAS_MADDS: estimated candidate multiply-adds
-# (n_queries x nprobe x avg_cell_rows x dim) above which the cogroup
-# matmul beats the interpreted zip_with/aggregate expression form.
-# Measured (scripts/r14_blas_crossover.py, SCALE.md r14): blas reaches
-# parity by ~5e7 madds on BOTH geometries (200k x 64-d: 1.8 vs 1.4 s at
-# 4.7e7; 100k x 384-d: 2.6 vs 2.1 s at 9.8e7) and the gap opens fast
-# above — 2.8x at 7.4e8, 5.4x at 1.6e9, 4.7x at 1.2e10; the r13
-# top-decade run measured >=5x (expr killed unfinished) at ~2.7e11.
-# 1e8 sits at the top of the parity band: the sub-second small-batch
-# bench lanes (~1e5-1e6 madds, where the cogroup's ~1.5 s floor would
-# dominate) keep the expression form, and everything measured above
-# the threshold routes to the measured winner.
-AUTO_BLAS_MADDS = 1e8
-# The expr arm BROADCASTS the probed (query, cell) pairs carrying the
-# full query vector: n_queries x nprobe rows x ~(8*dim + 24) bytes.
-# 256 MiB is the documented ceiling — well under executor broadcast
-# comfort, and the r13 10k x nprobe=32 x 384-d case (~1 GB) lands 4x
-# over it.
-MAX_PROBED_BROADCAST_BYTES = 256 * 1024 * 1024
-
-
-def _route_batch_impl(
-    impl: str,
-    queries: DataFrame,
-    *,
-    nprobe: int,
-    n_rows: int,
-    num_cells: int,
-    dim: int,
-    n_queries: int | None = None,
-) -> str:
-    """Resolve ``impl='auto'`` for batch ANN candidate scoring, and
-    guard the explicit expression form — the same measured-threshold
-    routing discipline as ``embedding_cosine_pairs(impl='auto')`` and
-    ``bounded_query_collect``.
-
-    The decision needs |queries|, which is only countable by running a
-    job — so compute the CUTOFF first (the largest query count whose
-    estimated volume stays under every threshold) and count through
-    ``limit(cutoff + 1)``: the job is bounded by the cutoff, never by
-    the batch (a 10M-query batch answers "over the cutoff" after
-    cutoff+1 rows).
-
-    ``n_queries`` (round 15, the advisor's per-call-job finding): a
-    caller that already knows its batch size passes it and the router
-    spends ZERO jobs — the bounded counting job above otherwise
-    re-executes the queries DataFrame's lineage on EVERY call, a fixed
-    per-call tax on interactive small-batch serving (and an expensive
-    one when the queries are a derived, unpersisted computation). The
-    routing decision is identical either way; the count is only an
-    input to the threshold compare.
-
-    * ``impl='blas'``: honored as-is (always scale-safe).
-    * ``impl='expr'``: honored below the probed-pairs broadcast
-      ceiling; above it this RAISES naming ``impl='blas'`` — the r13
-      measurement showed the unguarded default burning >=5x before
-      dying, which is strictly worse than a loud error.
-    * ``impl='auto'``: routes expr below both thresholds (whole-stage
-      codegen wins the small-batch low-dim regime), blas at or above
-      either.
-    """
-    if impl not in ("expr", "blas", "auto"):
-        raise ValueError(
-            f"impl must be 'expr', 'blas' or 'auto', got {impl!r}"
-        )
-    if impl == "blas":
-        return "blas"
-    per_query_bcast = nprobe * (8 * dim + 24)
-    cut_bcast = int(MAX_PROBED_BROADCAST_BYTES // max(1, per_query_bcast))
-    if impl == "expr":
-        n_q = (
-            n_queries
-            if n_queries is not None
-            else queries.limit(cut_bcast + 1).count()
-        )
-        if n_q > cut_bcast:
-            raise ValueError(
-                f"impl='expr' would broadcast > {cut_bcast} probed "
-                f"query rows (~{MAX_PROBED_BROADCAST_BYTES >> 20} MiB "
-                f"at nprobe={nprobe}, dim={dim}) and score them with "
-                "interpreted array arithmetic — measured >=5x slower "
-                "than the cogroup matmul in this regime (SCALE.md "
-                "r13/r14). Use impl='blas' (or 'auto')."
-            )
-        return "expr"
-    avg_cell_rows = max(1.0, n_rows / max(1, num_cells))
-    cut_madds = int(AUTO_BLAS_MADDS // max(1.0, nprobe * avg_cell_rows * dim))
-    cutoff = min(cut_bcast, cut_madds)
-    if cutoff <= 0:
-        return "blas"
-    n_q = (
-        n_queries
-        if n_queries is not None
-        else queries.limit(cutoff + 1).count()
-    )
-    return "blas" if n_q > cutoff else "expr"
-
-
 def rebuild_due(
     occ: dict,
     *,
@@ -868,26 +754,6 @@ class IVFIndex:
     def _geom_query(self, query) -> np.ndarray:
         q = np.asarray(query, dtype=np.float64)
         return q @ self.proj if self.proj is not None else q
-
-    def _full_dim(self) -> int:
-        """The ORIGINAL vector dimension (the exact re-rank's cost
-        axis) — proj rows for a reduced-geometry index, the centroid
-        width otherwise. Driver-side state only; no job."""
-        if self.proj is not None:
-            return int(self.proj.shape[0])
-        return int(self.centroids.shape[1])
-
-    def _corpus_rows(self) -> int:
-        """Corpus row count for routing estimates, cached per
-        assignments object (metadata-fast on a persisted index; one
-        count on a lineage-backed one — invalidated whenever the
-        assignments DataFrame is replaced)."""
-        cached = getattr(self, "_rows_cache", None)
-        if cached is not None and cached[0] is self.assignments:
-            return cached[1]
-        n = self.assignments.count()
-        self._rows_cache = (self.assignments, n)
-        return n
 
     # -- build (replaces build_index, src/lib.rs:336-341) -----------------
 
@@ -1088,49 +954,24 @@ class IVFIndex:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_embedding",
         round_digits: int | None = 4,
-        impl: str = "auto",
-        known_queries: int | None = None,
     ) -> DataFrame:
         """Batch ANN, fully declarative (no driver-side per-query loop):
 
         1. queries x centroids (broadcast both; the product is
            |queries| * num_cells scored rows) -> top-nprobe cells/query;
-        2. candidates = assignments semi-joined on probed cells;
-        3. per-query exact re-rank via ranking window.
+        2. the probed (query, cell) pairs cogroup with the assignments
+           on cell_id, one BLAS matmul per cell (``_cogroup_blas_topk``);
+        3. per-query top-k via ranking window.
 
         Probe budget: ``nprobe`` cells (default 8) or the rebuild-safe
         cell fraction ``target_frac`` (see ``nprobe_for_frac``).
 
-        ``impl``: candidate scoring strategy, same rows either way —
-        ``"auto"`` (default, round 14) routes on the measured
-        candidate-volume thresholds (``_route_batch_impl``): ``"expr"``
-        scores with the Catalyst zip_with/aggregate L2 (whole-stage
-        codegen, right at low dim and small batches; guarded — an
-        explicit ``"expr"`` above the probed-pairs broadcast ceiling
-        raises rather than riding into the measured >=5x wall);
-        ``"blas"`` cogroups probed pairs with candidates per cell and
-        scores one matmul per cell (``_cogroup_blas_topk`` — the
-        high-dim answer for query batches too large to broadcast; the
-        r12 384-d serve measured the expression form 7-18x slower than
-        BLAS on this exact work, and the r13 top-decade run killed the
-        expr form unfinished at >=5x).
-
-        ``known_queries`` (round 15): the batch size, when the caller
-        already knows it — skips the router's bounded counting job
-        (``_route_batch_impl``), which otherwise re-executes the
-        queries lineage once per call. Routing is identical either
-        way; pass it on interactive serving paths.
+        Candidate scoring has one path at every batch size (the r14
+        sweep measured BLAS ahead of the Catalyst zip_with/aggregate
+        form at all 9 points, 1.2-13.2x; SCALE.md r14). Building the
+        plan runs no Spark job.
         """
         nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
-        impl = _route_batch_impl(
-            impl,
-            queries,
-            nprobe=nprobe,
-            n_rows=self._corpus_rows() if impl == "auto" else 0,
-            num_cells=self.num_cells,
-            dim=self._full_dim(),
-            n_queries=known_queries,
-        )
         spark = queries.sparkSession
         cent = [
             (int(i), [float(x) for x in row]) for i, row in enumerate(self.centroids)
@@ -1157,37 +998,16 @@ class IVFIndex:
             .filter(F.col("_pr") <= nprobe)
             .select(query_id_col, query_vec_col, "cell_id")
         )
-        if impl == "blas":
-            return _cogroup_blas_topk(
-                probed,
-                self.assignments,
-                k,
-                id_col=self.id_col,
-                vec_col=self.vec_col,
-                query_id_col=query_id_col,
-                query_vec_col=query_vec_col,
-                round_digits=round_digits,
-                query_id_type=queries.schema[
-                    query_id_col
-                ].dataType.simpleString(),
-            )
-        cand = self.assignments.join(
-            F.broadcast(probed), on="cell_id", how="inner"
-        )
-        dist = l2_squared(F.col(self.vec_col), F.col(query_vec_col))
-        if round_digits is not None:
-            dist = F.round(dist, round_digits)
-        scored = cand.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(self.id_col).alias("vec_id"),
-            dist.alias("dist"),
-        )
-        w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .drop("_r")
-            .orderBy("query_id", "dist", "vec_id")
+        return _cogroup_blas_topk(
+            probed,
+            self.assignments,
+            k,
+            id_col=self.id_col,
+            vec_col=self.vec_col,
+            query_id_col=query_id_col,
+            query_vec_col=query_vec_col,
+            round_digits=round_digits,
+            query_id_type=queries.schema[query_id_col].dataType.simpleString(),
         )
 
     def search_batch_pruned(
@@ -1217,13 +1037,12 @@ class IVFIndex:
         skipping unvisited graph regions, without relying on dynamic
         partition pruning kicking in for the join. Queries are
         broadcast-small by contract (same as ``knn_batch``), enforced by
-        the same bounded collect. Candidate scoring runs per-cell BLAS
-        batches with a map-side top-k cut (``_pruned_blas_topk`` —
-        round 12: the expression-form L2 over long arrays dominated the
-        measured 384-d serve); results match :meth:`search_batch` at
-        the same nprobe, modulo distances landing within one
-        BLAS-expansion ulp of a rounding boundary (see
-        ``_pruned_blas_topk``).
+        the same bounded collect. Candidate scoring is
+        :meth:`search_batch`'s per-cell kernel (``_cell_topk_fn``) fed by
+        the pruned scan (``_pruned_blas_topk``), so results match
+        :meth:`search_batch` at the same nprobe — modulo a distance
+        within one ulp of a rounding boundary, where a different BLAS
+        blocking of the same cell can round it apart.
         """
         nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
         q_rows = bounded_query_collect(
@@ -1671,9 +1490,6 @@ class HierarchicalIVF:
         same contract as ``IVFIndex.nprobe_for_rows_frac``."""
         return _nprobe_for_rows_frac(self.cell_stats(), target_rows_frac)
 
-    # routing estimate: same contract as the flat class
-    _corpus_rows = IVFIndex._corpus_rows
-
     @property
     def geom_col(self) -> str:
         """Column carrying the cell-geometry vectors — same contract
@@ -1702,14 +1518,6 @@ class HierarchicalIVF:
         for cid, (_, cent) in self.overflow.items():
             out[cid] = cent
         return out
-
-    def _full_dim(self) -> int:
-        """Original vector dimension (see ``IVFIndex._full_dim``) —
-        proj rows for reduced geometry, the l1 centroid width
-        otherwise."""
-        if self.proj is not None:
-            return int(self.proj.shape[0])
-        return int(self.l1_centroids.shape[1])
 
     @classmethod
     def build(
@@ -1918,8 +1726,6 @@ class HierarchicalIVF:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_embedding",
         round_digits: int | None = 4,
-        impl: str = "auto",
-        known_queries: int | None = None,
     ) -> DataFrame:
         """Batch probe, fully declarative (no driver-side per-query
         loop) — the two-level twin of ``IVFIndex.search_batch``:
@@ -1929,37 +1735,21 @@ class HierarchicalIVF:
         2. join the probed super-cells to the flattened (l1, l2) table,
            rank the exposed sub-cells per query -> top-``nprobe``
            composite cells;
-        3. candidates = assignments joined on the probed cells,
-           per-query exact re-rank via ranking window.
+        3. the probed (query, cell) pairs cogroup with the assignments,
+           one BLAS matmul per cell (``_cogroup_blas_topk``), then
+           per-query top-k via ranking window.
 
         Defaults mirror :meth:`search`: all super-cells, half of all
         sub-cells (the flat-equivalent probe budget). ``target_frac``
         expresses the sub-cell budget as a cell fraction instead
-        (rebuild-safe; see ``nprobe_for_frac``). ``impl`` routes
-        candidate scoring exactly as ``IVFIndex.search_batch``:
-        ``"auto"`` (default, round 14) picks expr/blas on the measured
-        volume thresholds (``_route_batch_impl``); an explicit
-        ``"expr"`` above the probed-pairs broadcast ceiling raises
-        naming ``"blas"`` — the r13 top-decade run (10k queries x 5M x
-        384-d) measured the unguarded expr arm >=5x (killed
-        unfinished) vs 532 s blas. ``known_queries`` (round 15): pass
-        the batch size when known to skip the router's bounded
-        counting job — same contract as ``IVFIndex.search_batch``.
+        (rebuild-safe; see ``nprobe_for_frac``). Building the plan
+        runs no Spark job.
         """
         if nprobe_l1 is None:
             nprobe_l1 = len(self.l1_centroids)
         nprobe = _resolve_nprobe(
             nprobe, target_frac, self.num_cells,
             default=max(1, self.num_cells // 2),
-        )
-        impl = _route_batch_impl(
-            impl,
-            queries,
-            nprobe=nprobe,
-            n_rows=self._corpus_rows() if impl == "auto" else 0,
-            num_cells=self.num_cells,
-            dim=self._full_dim(),
-            n_queries=known_queries,
         )
         spark = queries.sparkSession
         l1_rows = [
@@ -2017,35 +1807,16 @@ class HierarchicalIVF:
             .filter(F.col("_r2") <= nprobe)
             .select(query_id_col, query_vec_col, "cell_id")
         )
-        if impl == "blas":
-            return _cogroup_blas_topk(
-                probed,
-                self.assignments,
-                k,
-                id_col=self.id_col,
-                vec_col=self.vec_col,
-                query_id_col=query_id_col,
-                query_vec_col=query_vec_col,
-                round_digits=round_digits,
-                query_id_type=queries.schema[
-                    query_id_col
-                ].dataType.simpleString(),
-            )
-        cand = self.assignments.join(F.broadcast(probed), on="cell_id")
-        dist = l2_squared(F.col(self.vec_col), F.col(query_vec_col))
-        if round_digits is not None:
-            dist = F.round(dist, round_digits)
-        scored = cand.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(self.id_col).alias("vec_id"),
-            dist.alias("dist"),
-        )
-        w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
-            .drop("_r")
-            .orderBy("query_id", "dist", "vec_id")
+        return _cogroup_blas_topk(
+            probed,
+            self.assignments,
+            k,
+            id_col=self.id_col,
+            vec_col=self.vec_col,
+            query_id_col=query_id_col,
+            query_vec_col=query_vec_col,
+            round_digits=round_digits,
+            query_id_type=queries.schema[query_id_col].dataType.simpleString(),
         )
 
     def search_batch_pruned(
@@ -2075,12 +1846,13 @@ class HierarchicalIVF:
         partition pruning (``PartitionFilters`` in the plan): only the
         probed cells' files are read — probed bytes scale with nprobe
         cells, not with N. Queries are broadcast-small by contract
-        (same as ``knn_batch``); results match :meth:`search_batch` at
-        the same (nprobe_l1, nprobe) modulo rounding-boundary ulp ties
-        (see ``_pruned_blas_topk``). Reduced-
-        geometry (``coarse_dim``) indexes rank probes in the projected
-        space via :meth:`_probe_cells`; the exact re-rank below always
-        reads the original vectors."""
+        (same as ``knn_batch``); scoring is :meth:`search_batch`'s
+        per-cell kernel, so results match it at the same
+        (nprobe_l1, nprobe) modulo rounding-boundary ulp ties (see
+        :meth:`IVFIndex.search_batch_pruned`). Reduced-geometry
+        (``coarse_dim``) indexes rank probes in the projected space via
+        :meth:`_probe_cells`; the exact re-rank below always reads the
+        original vectors."""
         if nprobe_l1 is None:
             nprobe_l1 = len(self.l1_centroids)
         nprobe = _resolve_nprobe(
@@ -2564,8 +2336,8 @@ class IVFPQIndex:
         true distance's scent at m bytes/vector.
 
         Default (round 15, closing the r14 verdict's one weak):
-        ``None`` resolves to ``"full"`` — the measured-default
-        discipline of ``_route_batch_impl``. ``build_auto`` routes
+        ``None`` resolves to ``"full"`` — the measured winner is the
+        default. ``build_auto`` routes
         high-dimension corpora to reduced geometry, so the old
         ``"geom"`` default put a SILENT 0.23-overlap serving index on
         exactly the recommended path; geom codes on a reduced index are

@@ -104,9 +104,7 @@ def recall_grid(emb: DataFrame) -> dict[tuple[str, str], float]:
     ivf16.assignments = ivf16.assignments.persist()
     for nprobe in (4, 8, 10, 16):
         out[("IVF flat (16 cells)", f"nprobe={nprobe}")] = recall_batch(
-            # the first-N self-query draw has a known size — skip the
-            # router's per-call counting job (round 15 known_queries)
-            ivf16.search_batch(queries, K, nprobe=nprobe, known_queries=N_QUERIES)
+            ivf16.search_batch(queries, K, nprobe=nprobe)
         )
 
     hier = HierarchicalIVF.build(emb, k1=8, k2=8, seed=SEED)
