@@ -59,12 +59,27 @@ BENCH_QUERIES = [
     "top_customers_by_region",
     # Round 16 ADDITION (r15 verdict item 5, additions-only — the 14
     # lanes above keep their cross-round comparability): serving-tier
-    # batch ANN over the warm shared index; at sf0.1 proportions the
-    # auto router sends this through the cogroup BLAS top-k, so the
-    # serving path a real deployment runs 24/7 finally has a bench
-    # guard. First recorded median is this round's.
+    # batch ANN over the warm shared index, scored by search_batch's
+    # one path (the cogroup BLAS top-k), so the serving path a real
+    # deployment runs 24/7 finally has a bench guard. First recorded
+    # median is this round's.
     "ann_serve_batch",
 ]
+
+# The 14 lanes every round since round 1 has timed. "value" sums every
+# lane in BENCH_QUERIES, so appending a lane moves it; "value_legacy"
+# sums these 14 only and stays comparable across rounds.
+LEGACY_LANES = BENCH_QUERIES[:14]
+
+
+def _totals(timings: dict[str, float]) -> dict[str, float]:
+    """The headline total over every lane and the legacy 14-lane
+    subtotal; failed lanes (recorded as -1) count in neither."""
+
+    def subtotal(lanes) -> float:
+        return round(sum(timings[q] for q in lanes if timings.get(q, -1.0) >= 0), 3)
+
+    return {"value": subtotal(BENCH_QUERIES), "value_legacy": subtotal(LEGACY_LANES)}
 
 
 # Harness-level memoization to RESET before each repeat of the query
@@ -325,12 +340,11 @@ def main() -> None:
                         f"previous round ({p:.3f}s -> {med:.3f}s, n={n})",
                         file=sys.stderr,
                     )
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total_wall",
-                "value": total,
+                **_totals(timings),
                 "unit": "sec",
                 "queries": timings,
                 "queries_min": mins,

@@ -167,6 +167,10 @@ def test_assign_new_incremental(spark, emb):
     row = idx.assignments.filter("vec_id = 450").first()
     d = ((idx.centroids - np.asarray(q, dtype=np.float64)) ** 2).sum(axis=1)
     assert row["cell_id"] == int(np.argmin(d))
+    # ingest and probe share one ranking kernel: every new row lands in
+    # the cell its own single-query probe ranks first
+    for r in idx.assignments.filter("vec_id >= 400").collect():
+        assert r["cell_id"] == idx._probe_cells(r["embedding"], 1)[0], r
 
 
 def test_hierarchical_ivf_structure_and_recall(spark, emb, queries):
@@ -1136,6 +1140,10 @@ def test_hier_assign_new_incremental(spark, emb):
     }
     for r in re_assigned.collect():
         assert r["cell_id"] == orig[r["vec_id"]], r
+    # ...and equals the rank-1 cell of the row's own two-level probe
+    for r in grown.assignments.filter("vec_id >= 400").collect():
+        probe = grown._probe_cells(r["embedding"], nprobe_l1=1, nprobe=1)
+        assert r["cell_id"] == probe[0], r
 
 
 def test_hier_assign_new_reduced_geometry(spark, emb):
@@ -1484,7 +1492,11 @@ def test_search_batch_matches_search(spark, emb, queries):
     """The one batch scoring path (``_cogroup_blas_topk``) against the
     single-query reference on both index classes: the flat index, a
     reduced-geometry (``coarse_dim=8``) index, a 3x3 hierarchical
-    index, string ids, and an empty batch."""
+    index, a reduced-geometry hierarchical index probing fewer
+    super-cells than it has, a hierarchical index with overflow cells
+    (after ``split_hot_cells``), string ids, and an empty batch."""
+    import numpy as np
+
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
 
     idx = IVFIndex.build(emb, num_cells=16, seed=42)
@@ -1495,6 +1507,32 @@ def test_search_batch_matches_search(spark, emb, queries):
 
     hier = HierarchicalIVF.build(emb, k1=3, k2=3, seed=42)
     _assert_batch_matches_search(hier, queries, K)
+
+    hred = HierarchicalIVF.build(emb, k1=3, k2=3, seed=42, coarse_dim=8)
+    _assert_batch_matches_search(hred, queries, K, nprobe_l1=2, nprobe=4)
+
+    # a tight out-of-distribution cluster makes its cell hot; the split
+    # puts half of it in an overflow cell, and two cluster points join
+    # the query batch so the overflow cell is actually probed
+    rng = np.random.RandomState(7)
+    point = rng.rand(64) * 0.05 + 2.0
+    drift = spark.createDataFrame(
+        [
+            (9_100_000 + i, [float(x) for x in point + rng.rand(64) * 0.01])
+            for i in range(200)
+        ],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>",
+    )
+    split = hier.assign_new(drift).split_hot_cells(factor=2.0)
+    probed = split._probe_cells(point, nprobe_l1=2, nprobe=5)
+    assert set(probed) & set(split.overflow), (probed, split.overflow)
+    dq = drift.filter(F.col("vec_id") < 9_100_002).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_embedding"),
+    )
+    _assert_batch_matches_search(
+        split, queries.unionByName(dq), K, nprobe_l1=2, nprobe=5
+    )
 
     docs = emb.select(
         F.concat(F.lit("d"), F.col("vec_id")).alias("vec_id"), "embedding"
@@ -1509,6 +1547,62 @@ def test_search_batch_matches_search(spark, emb, queries):
     empty = queries.limit(0)
     assert idx.search_batch(empty, K, nprobe=4).collect() == []
     assert hier.search_batch(empty, K).collect() == []
+
+
+def _rank_reference(geom, x, nprobe_l1, nprobe):
+    """Per-row loop form of the cell-ranking rule: super-cells sorted by
+    (dist, index), then the exposed cells sorted by (dist, cell id)."""
+    import numpy as np
+
+    l1, blocks, proj = geom
+    x = np.asarray(x, dtype=np.float64)
+    if proj is not None:
+        x = x @ proj
+    out = []
+    for q in x:
+        d1 = ((l1 - q) ** 2).sum(axis=1)
+        supers = sorted(range(len(l1)), key=lambda b: (d1[b], b))[:nprobe_l1]
+        scored = sorted(
+            (float(((cents[j] - q) ** 2).sum()), int(ids[j]))
+            for b in supers
+            for ids, cents in [blocks[b]]
+            for j in range(len(ids))
+        )
+        out.append([c for _, c in scored[:nprobe]])
+    return out
+
+
+@pytest.mark.parametrize("with_proj", [False, True])
+def test_cell_rank_kernel_matches_loop_reference(monkeypatch, with_proj):
+    """``_cell_rank_fn`` against its per-row loop form on uneven blocks
+    with overflow-style ids, duplicated centroids (exact distance ties,
+    broken by cell id), rows sitting on a centroid, fewer exposed cells
+    than ``nprobe`` (-1 padding), ``nprobe_l1`` below the super-cell
+    count, and a row-chunk budget small enough to split every batch."""
+    import numpy as np
+
+    from vector_database_in_rust_spark.operators import ann
+
+    rng = np.random.RandomState(5)
+    dim = 4
+    l1 = rng.rand(3, dim)
+    shared = rng.rand(dim)
+    blocks = [
+        (np.array([0, 1, 97]), np.vstack([rng.rand(2, dim), shared])),
+        (np.array([4, 5, 6, 7, 98]), np.vstack([shared, rng.rand(4, dim)])),
+        (np.array([8, 9]), rng.rand(2, dim)),
+    ]
+    proj = rng.rand(6, dim) if with_proj else None
+    x = rng.rand(40, 6 if with_proj else dim)
+    if not with_proj:
+        x[:3] = shared
+    geom = (l1, blocks, proj)
+    for budget in (ann.RANK_CHUNK_ELEMS, 7):
+        monkeypatch.setattr(ann, "RANK_CHUNK_ELEMS", budget)
+        for nprobe_l1, nprobe in [(1, 1), (2, 3), (3, 20), (1, 9)]:
+            got = ann._cell_rank_fn(nprobe_l1, nprobe)(geom, x)
+            want = _rank_reference(geom, x, nprobe_l1, nprobe)
+            assert [[int(c) for c in r if c >= 0] for r in got] == want
 
 
 def test_search_batch_builds_without_counting(spark, emb, queries):
@@ -1640,3 +1734,77 @@ def test_hier_search_filtered_prefilter_semantics(spark, emb):
         nprobe=eng.index.num_cells,
     ).collect()
     assert [r["vec_id"] for r in via_engine] == want
+
+
+_NO_PACKAGE_ON_EXECUTORS = r"""
+import sys
+
+sys.path.insert(0, sys.argv[1])  # the driver only: workers never see it
+import numpy as np
+from pyspark.sql import SparkSession
+
+from vector_database_in_rust_spark.operators.ann import (
+    HierarchicalIVF,
+    IVFIndex,
+    IVFPQIndex,
+)
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "2")
+    .getOrCreate()
+)
+schema = "vec_id BIGINT, embedding ARRAY<FLOAT>"
+rng = np.random.RandomState(0)
+rows = [(i, [float(v) for v in rng.rand(8)]) for i in range(200)]
+hot = [(1000 + i, [float(v) for v in 5.0 + 0.01 * rng.rand(8)])
+       for i in range(100)]
+base = spark.createDataFrame(rows, schema)
+drift = spark.createDataFrame(hot, schema)
+q = spark.createDataFrame(
+    [(0, rows[3][1])], "query_id BIGINT, query_embedding ARRAY<FLOAT>"
+)
+for idx in (
+    IVFIndex.build(base, num_cells=4, seed=1),
+    HierarchicalIVF.build(base, k1=2, k2=2, seed=1),
+):
+    grown = idx.assign_new(drift).split_hot_cells(factor=1.5)
+    assert grown.num_cells > idx.num_cells, type(idx).__name__
+    top = grown.search_batch(q, 1, nprobe=grown.num_cells).collect()
+    assert top[0]["vec_id"] == 3 and top[0]["dist"] == 0.0, top
+pq = IVFPQIndex.build(
+    IVFIndex.build(base, num_cells=4, seed=1), m=2, ksub=4,
+    fit_distributed=True,
+)
+top = pq.search_batch(q, 1, nprobe=4, refine=200, store=base).collect()
+assert top[0]["vec_id"] == 3, top
+spark.stop()
+print("EXECUTOR-CLOSURES-OK")
+"""
+
+
+def test_executor_closures_need_no_package_import(tmp_path):
+    """Executor-side closures (cell ranking, assignment, hot-cell and
+    PQ codebook fits) must pickle by value: a driver that imports the
+    package from a path its workers do not share (here: run from a
+    temp directory, package on the driver's ``sys.path`` only) still
+    builds, ingests, splits and serves on both index classes and runs
+    the distributed PQ codebook fit. A closure that reaches a
+    module-level helper fails with ``ModuleNotFoundError`` on the
+    workers."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", _NO_PACKAGE_ON_EXECUTORS, repo],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert "EXECUTOR-CLOSURES-OK" in res.stdout, res.stderr[-4000:]

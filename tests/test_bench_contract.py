@@ -144,3 +144,19 @@ def test_previous_calib_rejects_nonpositive(tmp_path, monkeypatch):
     (tmp_path / "BENCH_r15.json").write_text(json.dumps(bad))
     monkeypatch.setenv("SPARK_GRAFT_BENCH_DIR", str(tmp_path))
     assert bench._previous_calib() is None
+
+
+def test_totals_emit_legacy_subtotal():
+    """The JSON line carries the 14-lane legacy subtotal beside
+    "value": lanes appended after round 1 (ann_serve_batch) move the
+    headline total, so total-level cross-round comparisons read
+    "value_legacy". Failed lanes (-1) count in neither sum."""
+    assert len(bench.LEGACY_LANES) == 14
+    assert "ann_serve_batch" in bench.BENCH_QUERIES
+    assert "ann_serve_batch" not in bench.LEGACY_LANES
+    timings = {q: 1.0 for q in bench.BENCH_QUERIES}
+    timings["knn_exact"] = -1.0
+    assert bench._totals(timings) == {
+        "value": float(len(bench.BENCH_QUERIES) - 1),
+        "value_legacy": 13.0,
+    }

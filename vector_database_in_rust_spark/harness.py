@@ -1590,7 +1590,7 @@ def ann_ingest_overflow_verdict_q(spark, sf_dir):
     id range — then ingest two fresh vectors and pin: (a) the repair
     actually produced overflow cells; (b) a vector placed exactly AT an
     overflow centroid is assigned TO that overflow cell (the broadcast
-    ``_hier_assign_fn`` sees overflow — a repaired index must ingest
+    ``_assign_cells`` kernel sees overflow — a repaired index must ingest
     into its repaired geometry, not just serve from it); (c) a vector
     at the drift point lands in the cell the driver-side probe ranks
     first (ingest/probe agreement, the contract the pytest pins); (d)

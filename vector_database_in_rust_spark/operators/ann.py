@@ -42,6 +42,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from vector_database_in_rust_spark.functions.vectors import l2_squared
 from vector_database_in_rust_spark.operators.knn import (
@@ -52,21 +59,29 @@ from vector_database_in_rust_spark.operators.knn import (
 DEFAULT_SEED = 42
 
 
-def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 15) -> np.ndarray:
-    """Seeded numpy Lloyd (same discipline as HierarchicalIVF's level-2
-    fits — no sklearn in the container). Module-level so executor-side
-    closures (PQ codebook fits, hot-cell splits) can reference it."""
-    rng = np.random.RandomState(seed)
-    k = min(k, len(x))
-    cent = x[rng.choice(len(x), size=k, replace=False)].copy()
-    for _ in range(iters):
-        d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        lab = d.argmin(axis=1)
-        for j in range(k):
-            msk = lab == j
-            if msk.any():
-                cent[j] = x[msk].mean(axis=0)
-    return cent
+def _lloyd_fn():
+    """Seeded numpy Lloyd (no sklearn in the container) behind every
+    local k-means fit: HierarchicalIVF's level-2 fits, hot-cell splits
+    and PQ codebooks. A closure factory like ``_cell_topk_fn``: the
+    executor-side fits capture the nested function by value, so
+    executors need not import this package (a module-level helper
+    failed with ``ModuleNotFoundError`` when the driver ran outside
+    the repo directory)."""
+
+    def lloyd(x: np.ndarray, k: int, seed: int, iters: int = 15) -> np.ndarray:
+        rng = np.random.RandomState(seed)
+        k = min(k, len(x))
+        cent = x[rng.choice(len(x), size=k, replace=False)].copy()
+        for _ in range(iters):
+            d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+            lab = d.argmin(axis=1)
+            for j in range(k):
+                msk = lab == j
+                if msk.any():
+                    cent[j] = x[msk].mean(axis=0)
+        return cent
+
+    return lloyd
 
 
 def _num_cells_default(n: int) -> int:
@@ -103,8 +118,10 @@ def _pca_projection(
 def _project_udf(proj: np.ndarray):
     """Vectorized Arrow-batch projection ``x @ proj`` as a pandas UDF —
     composes onto any frame without re-stating its schema. float32
-    output: the reduced column is geometry only (KMeans fit, probe
-    argmin), never the exact re-rank surface."""
+    output: the reduced column is geometry only (KMeans fit, hot-cell
+    splits, reduced-space ADC tables), never the exact re-rank
+    surface. Probe and assignment ranking project in float64 inside
+    ``_cell_rank_fn``."""
     from pyspark.sql.functions import pandas_udf
 
     p32 = np.ascontiguousarray(proj, dtype=np.float32)
@@ -115,6 +132,138 @@ def _project_udf(proj: np.ndarray):
         return pd.Series(list(x @ p32))
 
     return project
+
+
+# Float64 elements one row chunk of the cell-ranking kernel may hold in
+# its (rows x cells x dim) distance temporary (32 MB): a flat 2,201-cell
+# x 384-d block would need ~67 GB for one 10k-row Arrow batch.
+RANK_CHUNK_ELEMS = 4 << 20
+
+
+def _cell_rank_fn(nprobe_l1: int, nprobe: int):
+    """The one cell-ranking rule behind every probe and every
+    assignment on every index class — the role the reference's
+    ``search_layer`` (src/lib.rs:171-227) plays for both insert and
+    search. A closure factory like ``_cell_topk_fn``, so executors need
+    not import this package.
+
+    ``rank(geom, x)`` maps a float64 row matrix to each row's
+    top-``nprobe`` cell ids under (dist, cell_id), drawn from the row's
+    top-``nprobe_l1`` super-cells under (dist, super-cell index). Rows
+    whose probed blocks hold fewer cells are padded with -1. ``geom``
+    is ``(l1, blocks, proj)``: super-cell centroids, one ``(cell ids,
+    centroids)`` block per super-cell with overflow cells folded into
+    their parent's block, and the optional coarse projection. A flat
+    index is the one-super-cell case (``_flat_geometry``). Distances are
+    the elementwise float64 ``((x - c) ** 2).sum(-1)`` after a float64
+    ``x @ proj``, over row chunks bounded by ``RANK_CHUNK_ELEMS``."""
+    nprobe_l1, nprobe = max(1, nprobe_l1), max(1, nprobe)
+    budget = RANK_CHUNK_ELEMS
+
+    def rank(geom, x: np.ndarray) -> np.ndarray:
+        l1, blocks, proj = geom
+        x = np.asarray(x, dtype=np.float64)
+        if proj is not None:
+            x = x @ proj
+        p = min(nprobe_l1, len(l1))
+        width = max(len(ids) for ids, _ in blocks)
+        step = max(1, budget // (max(len(l1), width) * x.shape[1] + p * width))
+        out = np.full((len(x), min(nprobe, p * width)), -1, dtype=np.int64)
+        for s in range(0, len(x), step):
+            xs = x[s : s + step]
+            d1 = ((xs[:, None, :] - l1[None, :, :]) ** 2).sum(-1)
+            top = np.argsort(d1, axis=1, kind="stable")[:, :p]
+            dist = np.full((len(xs), p, width), np.inf)
+            cell = np.full((len(xs), p, width), -1, dtype=np.int64)
+            for b in np.unique(top):
+                r, slot = np.nonzero(top == b)
+                ids, cents = blocks[b]
+                dist[r, slot, : len(ids)] = (
+                    (xs[r][:, None, :] - cents[None, :, :]) ** 2
+                ).sum(-1)
+                cell[r, slot, : len(ids)] = ids
+            dist = dist.reshape(len(xs), -1)
+            cell = cell.reshape(len(xs), -1)
+            order = np.lexsort((cell, dist), axis=-1)[:, : out.shape[1]]
+            out[s : s + step] = np.take_along_axis(cell, order, axis=1)
+        return out
+
+    return rank
+
+
+def _flat_geometry(centroids: np.ndarray, proj: np.ndarray | None):
+    """Kernel geometry of a flat centroid matrix: one super-cell whose
+    block holds every centroid (its own centroid is never compared —
+    ranking one super-cell picks it)."""
+    c = np.asarray(centroids, dtype=np.float64)
+    return np.zeros((1, c.shape[1])), [(np.arange(len(c)), c)], proj
+
+
+def _rank_rows(geom, rows, nprobe_l1: int, nprobe: int) -> list[list[int]]:
+    """Driver-side kernel call: each row's probed cell ids."""
+    if not len(rows):
+        return []
+    x = np.vstack([np.asarray(r, dtype=np.float64) for r in rows])
+    cells = _cell_rank_fn(nprobe_l1, nprobe)(geom, x)
+    return [[int(c) for c in row if c >= 0] for row in cells]
+
+
+def _probed_pairs(
+    queries: DataFrame, geom, *, nprobe_l1: int, nprobe: int, vec_col: str
+) -> DataFrame:
+    """Expand each query row into its probed (query, cell) pairs with
+    one ``mapInPandas`` pass of the kernel: every input column is
+    carried through and ``cell_id INT`` is added, one row per probed
+    cell in rank order. No cross join, no ranking window, no
+    exchange; the geometry rides in one broadcast."""
+    bc = queries.sparkSession.sparkContext.broadcast(geom)
+    rank = _cell_rank_fn(nprobe_l1, nprobe)
+
+    def pairs(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.vstack(pdf[vec_col].apply(np.asarray, args=(np.float64,)))
+            cells = rank(bc.value, x)
+            r, c = np.nonzero(cells >= 0)
+            out = pdf.iloc[r].reset_index(drop=True)
+            out["cell_id"] = cells[r, c].astype(np.int32)
+            yield out
+
+    schema = StructType(
+        queries.schema.fields + [StructField("cell_id", IntegerType())]
+    )
+    return queries.mapInPandas(pairs, schema)
+
+
+def _assign_cells(rows: DataFrame, geom, *, id_col: str, vec_col: str) -> DataFrame:
+    """Place each (id, vector) row in its cell: the kernel at
+    ``nprobe_l1 = nprobe = 1`` as one ``mapInPandas`` pass (no join,
+    no window, no exchange). Build and ``assign_new`` of both classes
+    run it, so a placed row lands in the cell its own probe ranks
+    first. Emits id, vector, ``cell_id`` and, under a coarse
+    projection, the float32 GEOM_COL."""
+    bc = rows.sparkSession.sparkContext.broadcast(geom)
+    rank = _cell_rank_fn(1, 1)
+    geom_col = GEOM_COL
+
+    def assign(batches):
+        g = bc.value
+        proj = g[2]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.vstack(pdf[vec_col].apply(np.asarray, args=(np.float64,)))
+            out = pdf.assign(cell_id=rank(g, x)[:, 0].astype(np.int32))
+            if proj is not None:
+                out[geom_col] = list((x @ proj).astype(np.float32))
+            yield out
+
+    fields = [rows.schema[id_col], rows.schema[vec_col]]
+    fields.append(StructField("cell_id", IntegerType()))
+    if geom[2] is not None:
+        fields.append(StructField(GEOM_COL, ArrayType(FloatType())))
+    return rows.select(id_col, vec_col).mapInPandas(assign, StructType(fields))
 
 
 def _cell_topk_fn(k: int, round_digits: int | None):
@@ -296,7 +445,7 @@ def _fit_hot_subcentroids(
     per cell (the HierarchicalIVF level-2 discipline) — shared by the
     flat AND hierarchical ``split_hot_cells`` so both classes split
     under the identical rule. Returns {(cell_id, sub): centroid}."""
-    import pandas as pd
+    lloyd = _lloyd_fn()
 
     def fit2(pdf: pd.DataFrame) -> pd.DataFrame:
         c = int(pdf["cell_id"].iloc[0])
@@ -304,7 +453,7 @@ def _fit_hot_subcentroids(
         if len(x) > max_cell_fit_rows:
             rng = np.random.RandomState(seed * 131 + c)
             x = x[rng.choice(len(x), size=max_cell_fit_rows, replace=False)]
-        cent = _lloyd(x, 2, seed * 31 + c)
+        cent = lloyd(x, 2, seed * 31 + c)
         if len(cent) < 2:  # degenerate single-point cell
             cent = np.vstack([cent[0], cent[0]])
         return pd.DataFrame(
@@ -522,55 +671,6 @@ def _l2_rowwise_udf(vec_col_a: str, vec_col_b: str):
     return dist(F.col(vec_col_a), F.col(vec_col_b))
 
 
-def _hier_assign_fn(bc, id_col: str, vec_col: str):
-    """The two-level assignment pass as a mapInPandas closure factory —
-    shared by ``HierarchicalIVF.build`` (full-corpus assignment) and
-    ``HierarchicalIVF.assign_new`` (incremental ingest), so the ingest
-    rule is BY CONSTRUCTION the build's rule: argmin against the l1
-    blocks, then against the winning super-cell's l2 block
-    (2·sqrt(K) distance rows per vector). ``bc`` broadcasts
-    (l1_centroids, l2_centroids, k2_stride, proj, overflow_by_parent);
-    overflow cells (post-build splits) compete with the winning
-    super-cell's own sub-cells, composite winning distance ties
-    (same keep-the-old rule as ``_reassign_hot_rows``)."""
-
-    def assign(it):
-        l1c, l2c, k2_, pj, ovf = bc.value
-        for pdf in it:
-            xfull = np.vstack(pdf[vec_col].apply(np.asarray, dtype=np.float64))
-            x = xfull @ pj if pj is not None else xfull
-            d1 = ((x[:, None, :] - l1c[None, :, :]) ** 2).sum(axis=2)
-            a1 = d1.argmin(axis=1)
-            cell = np.zeros(len(x), dtype=np.int64)
-            for l1 in np.unique(a1):
-                m = a1 == l1
-                cc = l2c[int(l1)]
-                d2 = ((x[m][:, None, :] - cc[None, :, :]) ** 2).sum(axis=2)
-                a2 = d2.argmin(axis=1)
-                best = int(l1) * k2_ + a2
-                ov = ovf.get(int(l1)) if ovf else None
-                if ov is not None:
-                    ids, cents = ov
-                    dov = ((x[m][:, None, :] - cents[None, :, :]) ** 2).sum(
-                        axis=2
-                    )
-                    ov_arg = dov.argmin(axis=1)
-                    ov_min = dov[np.arange(len(ov_arg)), ov_arg]
-                    d2_min = d2[np.arange(len(a2)), a2]
-                    best = np.where(ov_min < d2_min, ids[ov_arg], best)
-                cell[m] = best
-            out = {
-                id_col: pdf[id_col],
-                vec_col: pdf[vec_col],
-                "cell_id": cell.astype("int32"),
-            }
-            if pj is not None:
-                out[GEOM_COL] = list(x.astype(np.float32))
-            yield pd.DataFrame(out)
-
-    return assign
-
-
 def _resolve_nprobe(
     nprobe: int | None,
     target_frac: float | None,
@@ -751,9 +851,9 @@ class IVFIndex:
         fraction under-states rows cost on a drift-skewed index)."""
         return _nprobe_for_rows_frac(self.cell_stats(), target_rows_frac)
 
-    def _geom_query(self, query) -> np.ndarray:
-        q = np.asarray(query, dtype=np.float64)
-        return q @ self.proj if self.proj is not None else q
+    def _cell_geometry(self):
+        """Cell-ranking kernel geometry (``_cell_rank_fn``)."""
+        return _flat_geometry(self.centroids, self.proj)
 
     # -- build (replaces build_index, src/lib.rs:336-341) -----------------
 
@@ -877,9 +977,7 @@ class IVFIndex:
     # -- search (replaces HnswIndex::search, src/lib.rs:152-169) ----------
 
     def _probe_cells(self, query: np.ndarray, nprobe: int) -> list[int]:
-        d = ((self.centroids - self._geom_query(query)) ** 2).sum(axis=1)
-        order = np.argsort(d, kind="stable")[: max(1, nprobe)]
-        return [int(c) for c in order]
+        return _rank_rows(self._cell_geometry(), [query], 1, nprobe)[0]
 
     def search(
         self,
@@ -957,10 +1055,11 @@ class IVFIndex:
     ) -> DataFrame:
         """Batch ANN, fully declarative (no driver-side per-query loop):
 
-        1. queries x centroids (broadcast both; the product is
-           |queries| * num_cells scored rows) -> top-nprobe cells/query;
-        2. the probed (query, cell) pairs cogroup with the assignments
-           on cell_id, one BLAS matmul per cell (``_cogroup_blas_topk``);
+        1. one ``mapInPandas`` pass ranks each query's cells with the
+           broadcast centroids (``_probed_pairs``) -> its top-nprobe
+           (query, cell) pairs;
+        2. the probed pairs cogroup with the assignments on cell_id,
+           one BLAS matmul per cell (``_cogroup_blas_topk``);
         3. per-query top-k via ranking window.
 
         Probe budget: ``nprobe`` cells (default 8) or the rebuild-safe
@@ -972,31 +1071,12 @@ class IVFIndex:
         plan runs no Spark job.
         """
         nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
-        spark = queries.sparkSession
-        cent = [
-            (int(i), [float(x) for x in row]) for i, row in enumerate(self.centroids)
-        ]
-        cent_df = spark.createDataFrame(cent, "cell_id INT, centroid ARRAY<DOUBLE>")
-        # Reduced-geometry index: cell ranking compares the PROJECTED
-        # query against the reduced centroids; the exact re-rank below
-        # stays on the original query/vector columns.
-        q_geom_col = query_vec_col
-        if self.proj is not None:
-            q_geom_col = "_q_rvec"
-            queries = queries.withColumn(
-                q_geom_col, _project_udf(self.proj)(F.col(query_vec_col))
-            )
-        qc = queries.join(F.broadcast(cent_df), how="cross").select(
-            query_id_col,
-            query_vec_col,
-            "cell_id",
-            l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_cd"),
-        )
-        wp = Window.partitionBy(query_id_col).orderBy("_cd", "cell_id")
-        probed = (
-            qc.withColumn("_pr", F.row_number().over(wp))
-            .filter(F.col("_pr") <= nprobe)
-            .select(query_id_col, query_vec_col, "cell_id")
+        probed = _probed_pairs(
+            queries.select(query_id_col, query_vec_col),
+            self._cell_geometry(),
+            nprobe_l1=1,
+            nprobe=nprobe,
+            vec_col=query_vec_col,
         )
         return _cogroup_blas_topk(
             probed,
@@ -1057,11 +1137,13 @@ class IVFIndex:
                 "assign-then-join path with no driver collect"
             ),
         )
-        data = []
-        for r in q_rows:
-            vec = [float(x) for x in r[query_vec_col]]
-            for c in self._probe_cells(vec, nprobe):
-                data.append((r[query_id_col], vec, c))
+        vecs = [[float(x) for x in r[query_vec_col]] for r in q_rows]
+        cells = _rank_rows(self._cell_geometry(), vecs, 1, nprobe)
+        data = [
+            (r[query_id_col], v, c)
+            for r, v, cs in zip(q_rows, vecs, cells)
+            for c in cs
+        ]
         return _pruned_blas_topk(
             self.assignments,
             data,
@@ -1074,8 +1156,9 @@ class IVFIndex:
 
     def assign_new(self, new_vectors: DataFrame) -> "IVFIndex":
         """Incrementally index NEW vectors against the EXISTING centroids
-        (no refit): one broadcast-centroid argmin pass over the new rows,
-        unioned into the assignments. This is the streaming-ingest
+        (no refit): one ``mapInPandas`` pass of the cell-ranking kernel
+        over the new rows (``_assign_cells``: no join, window or
+        exchange), unioned into the assignments. This is the streaming-ingest
         companion (see streaming/ingest.py) — the reference cannot do
         this at all (its graph is build-once per process). Periodic full
         rebuilds remain advisable once drift accumulates, as in any IVF
@@ -1085,33 +1168,13 @@ class IVFIndex:
         the receiver is untouched — same purity contract as
         ``split_hot_cells``/``rebalance``, so a caller keeping the
         pre-ingest index for per-shard serving is safe."""
-        spark = new_vectors.sparkSession
-        cent = [
-            (int(i), [float(x) for x in row]) for i, row in enumerate(self.centroids)
-        ]
-        cent_df = spark.createDataFrame(cent, "cell_id INT, centroid ARRAY<DOUBLE>")
-        incoming = new_vectors.select(self.id_col, self.vec_col)
-        if self.proj is not None:
-            # re-project with THIS index's transform (an incoming shard's
-            # own projection, if any, is irrelevant to this geometry)
-            incoming = incoming.withColumn(
-                GEOM_COL, _project_udf(self.proj)(F.col(self.vec_col))
-            )
-        keep = [self.id_col, self.vec_col] + (
-            [GEOM_COL] if self.proj is not None else []
-        )
-        scored = incoming.join(F.broadcast(cent_df), how="cross").select(
-            *keep,
-            "cell_id",
-            l2_squared(F.col(self.geom_col), F.col("centroid")).alias("_d"),
-        )
-        from pyspark.sql import Window as _W
-
-        w = _W.partitionBy(self.id_col).orderBy("_d", "cell_id")
-        assigned = (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") == 1)
-            .select(*keep, "cell_id")
+        # re-projected with THIS index's transform (an incoming shard's
+        # own projection, if any, is irrelevant to this geometry)
+        assigned = _assign_cells(
+            new_vectors,
+            self._cell_geometry(),
+            id_col=self.id_col,
+            vec_col=self.vec_col,
         )
         return IVFIndex(
             self.centroids,
@@ -1416,7 +1479,8 @@ class HierarchicalIVF:
     Search mirrors the build asymmetry: rank super-cells (tiny), rank
     sub-cells inside the probed super-cells, then a partition-prunable
     ``cell_id IN (...)`` candidate scan + exact re-rank, exactly like
-    the flat ``IVFIndex`` probe.
+    the flat ``IVFIndex`` probe. Assignment and every probe path run
+    the one cell-ranking kernel, ``_cell_rank_fn``.
     """
 
     def __init__(
@@ -1567,24 +1631,16 @@ class HierarchicalIVF:
         # Fits run over the GEOMETRY column — reduced space when
         # coarse_dim is set, the raw vectors otherwise.
         sample_l1 = l1_model.transform(fit_df).select("l1", geom)
+        lloyd = _lloyd_fn()
 
         def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
             l1 = int(pdf["l1"].iloc[0])
             x = np.vstack(pdf[geom].apply(np.asarray, dtype=np.float64))
-            k = min(k2, len(x))
-            rng = np.random.RandomState(seed * 100003 + l1)
-            cent = x[rng.choice(len(x), size=k, replace=False)]
-            for _ in range(lloyd_iters):
-                d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-                lab = d.argmin(axis=1)
-                for j in range(k):
-                    m = lab == j
-                    if m.any():
-                        cent[j] = x[m].mean(axis=0)
+            cent = lloyd(x, k2, seed * 100003 + l1, iters=lloyd_iters)
             return pd.DataFrame(
                 {
-                    "l1": [l1] * k,
-                    "l2": list(range(k)),
+                    "l1": [l1] * len(cent),
+                    "l2": list(range(len(cent))),
                     "centroid": [c.tolist() for c in cent],
                 }
             )
@@ -1605,72 +1661,45 @@ class HierarchicalIVF:
             if l1 not in l2_cent_np:
                 l2_cent_np[l1] = l1_cent[l1 : l1 + 1]
 
-        # Full-corpus assignment: one Arrow pass, two-stage argmin
-        # against broadcast centroid blocks (2*sqrt(K) rows per vector).
-        # With coarse_dim the pass projects each batch itself (one
-        # matmul) — geometry argmins run reduced, the emitted row keeps
-        # the ORIGINAL vector plus GEOM_COL for maintenance parity with
-        # the flat index's layout (load keys on the column's presence).
-        spark = corpus.sparkSession
-        bc = spark.sparkContext.broadcast((l1_cent, l2_cent_np, k2, proj, {}))
-        assign = _hier_assign_fn(bc, id_col, vec_col)
-
-        # Honor the caller's id column name AND type (the flat IVFIndex
-        # path does; hardcoding `vec_id BIGINT` here broke custom — e.g.
-        # string — ids under the engine facade's hierarchical build).
-        id_type = corpus.schema[id_col].dataType.simpleString()
-        geom_field = ", _rvec ARRAY<FLOAT>" if proj is not None else ""
-        assignments = corpus.select(id_col, vec_col).mapInPandas(
-            assign,
-            schema=(
-                f"{id_col} {id_type}, {vec_col} ARRAY<FLOAT>, "
-                f"cell_id INT{geom_field}"
-            ),
-        )
-        return cls(
+        idx = cls(
             l1_cent,
             l2_cent_np,
-            assignments,
+            None,
             id_col=id_col,
             vec_col=vec_col,
             k2_stride=k2,
             proj=proj,
         )
+        # Full-corpus assignment: one Arrow pass of the cell-ranking
+        # kernel at nprobe_l1 = nprobe = 1 — the l1 argmin, then the
+        # winning super-cell's block (2*sqrt(K) rows per vector). With
+        # coarse_dim the pass projects each batch itself; the emitted
+        # row keeps the ORIGINAL vector plus GEOM_COL, the flat index's
+        # layout (load keys on the column's presence). Id and vector
+        # columns keep the caller's names and types.
+        idx.assignments = _assign_cells(
+            corpus, idx._cell_geometry(), id_col=id_col, vec_col=vec_col
+        )
+        return idx
 
-    def _overflow_by_parent(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-        """Overflow cells grouped per super-cell: l1 -> (cell ids,
-        centroid matrix) — the shape every probe/assign path consumes."""
-        by_parent: dict[int, tuple[list, list]] = {}
-        for cid, (parent, cent) in sorted(self.overflow.items()):
-            by_parent.setdefault(parent, ([], []))
-            by_parent[parent][0].append(cid)
-            by_parent[parent][1].append(cent)
-        return {
-            p: (np.asarray(ids, dtype=np.int64), np.vstack(cents))
-            for p, (ids, cents) in by_parent.items()
-        }
+    def _cell_geometry(self):
+        """Cell-ranking kernel geometry (``_cell_rank_fn``): one block
+        per super-cell — its composite sub-cells, then its overflow
+        cells in id order."""
+        blocks = []
+        for l1 in range(len(self.l1_centroids)):
+            cents = self.l2_centroids[l1]
+            ov = sorted(c for c, (p, _) in self.overflow.items() if p == l1)
+            ids = np.concatenate(
+                [l1 * self.k2 + np.arange(len(cents)), np.asarray(ov, dtype=int)]
+            )
+            blocks.append(
+                (ids, np.vstack([cents] + [self.overflow[c][1] for c in ov]))
+            )
+        return self.l1_centroids, blocks, self.proj
 
     def _probe_cells(self, query, *, nprobe_l1: int, nprobe: int) -> list[int]:
-        q = np.asarray(query, dtype=np.float64)
-        if self.proj is not None:
-            q = q @ self.proj
-        d1 = ((self.l1_centroids - q) ** 2).sum(axis=1)
-        l1s = np.argsort(d1, kind="stable")[: max(1, nprobe_l1)]
-        ovf = self._overflow_by_parent()
-        scored: list[tuple[float, int]] = []
-        for l1 in l1s:
-            cc = self.l2_centroids[int(l1)]
-            d2 = ((cc - q) ** 2).sum(axis=1)
-            for l2, dv in enumerate(d2):
-                scored.append((float(dv), int(l1) * self.k2 + l2))
-            ov = ovf.get(int(l1))
-            if ov is not None:
-                ids, cents = ov
-                dov = ((cents - q) ** 2).sum(axis=1)
-                for cid, dv in zip(ids, dov):
-                    scored.append((float(dv), int(cid)))
-        scored.sort()
-        return [c for _, c in scored[: max(1, nprobe)]]
+        return _rank_rows(self._cell_geometry(), [query], nprobe_l1, nprobe)[0]
 
     def search(
         self,
@@ -1730,14 +1759,13 @@ class HierarchicalIVF:
         """Batch probe, fully declarative (no driver-side per-query
         loop) — the two-level twin of ``IVFIndex.search_batch``:
 
-        1. queries x L1 centroids (broadcast; |queries| * k1 rows) ->
-           top-``nprobe_l1`` super-cells per query;
-        2. join the probed super-cells to the flattened (l1, l2) table,
-           rank the exposed sub-cells per query -> top-``nprobe``
-           composite cells;
-        3. the probed (query, cell) pairs cogroup with the assignments,
-           one BLAS matmul per cell (``_cogroup_blas_topk``), then
-           per-query top-k via ranking window.
+        1. one ``mapInPandas`` pass (``_probed_pairs``) ranks each
+           query's top-``nprobe_l1`` super-cells, then the sub-cells
+           (overflow cells included) they expose -> its top-``nprobe``
+           (query, composite cell) pairs;
+        2. the probed pairs cogroup with the assignments, one BLAS
+           matmul per cell (``_cogroup_blas_topk``), then per-query
+           top-k via ranking window.
 
         Defaults mirror :meth:`search`: all super-cells, half of all
         sub-cells (the flat-equivalent probe budget). ``target_frac``
@@ -1751,61 +1779,12 @@ class HierarchicalIVF:
             nprobe, target_frac, self.num_cells,
             default=max(1, self.num_cells // 2),
         )
-        spark = queries.sparkSession
-        l1_rows = [
-            (int(i), [float(x) for x in row])
-            for i, row in enumerate(self.l1_centroids)
-        ]
-        l1_df = spark.createDataFrame(l1_rows, "l1 INT, centroid ARRAY<DOUBLE>")
-        l2_rows = [
-            (int(l1), int(l1) * self.k2 + int(l2), [float(x) for x in row])
-            for l1, block in sorted(self.l2_centroids.items())
-            for l2, row in enumerate(block)
-        ]
-        # Overflow cells rank as extra sub-cells of their parent — the
-        # declarative path sees exactly the centroid set _probe_cells
-        # scores driver-side.
-        l2_rows += [
-            (int(parent), int(cid), [float(x) for x in cent])
-            for cid, (parent, cent) in sorted(self.overflow.items())
-        ]
-        l2_df = spark.createDataFrame(
-            l2_rows, "l1 INT, cell_id INT, centroid ARRAY<DOUBLE>"
-        )
-        # Reduced-geometry index: BOTH centroid rankings compare the
-        # PROJECTED query against the reduced centroids; the exact
-        # re-rank below stays on the original query/vector columns.
-        q_geom_col = query_vec_col
-        if self.proj is not None:
-            q_geom_col = "_q_rvec"
-            queries = queries.withColumn(
-                q_geom_col, _project_udf(self.proj)(F.col(query_vec_col))
-            )
-        qcols = [query_id_col, query_vec_col] + (
-            [q_geom_col] if q_geom_col != query_vec_col else []
-        )
-        q1 = queries.join(F.broadcast(l1_df), how="cross").select(
-            *qcols,
-            "l1",
-            l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_d1"),
-        )
-        w1 = Window.partitionBy(query_id_col).orderBy("_d1", "l1")
-        probed_l1 = (
-            q1.withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= nprobe_l1)
-            .select(*qcols, "l1")
-        )
-        q2 = probed_l1.join(F.broadcast(l2_df), on="l1").select(
-            query_id_col,
-            query_vec_col,
-            "cell_id",
-            l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_d2"),
-        )
-        w2 = Window.partitionBy(query_id_col).orderBy("_d2", "cell_id")
-        probed = (
-            q2.withColumn("_r2", F.row_number().over(w2))
-            .filter(F.col("_r2") <= nprobe)
-            .select(query_id_col, query_vec_col, "cell_id")
+        probed = _probed_pairs(
+            queries.select(query_id_col, query_vec_col),
+            self._cell_geometry(),
+            nprobe_l1=nprobe_l1,
+            nprobe=nprobe,
+            vec_col=query_vec_col,
         )
         return _cogroup_blas_topk(
             probed,
@@ -1873,11 +1852,13 @@ class HierarchicalIVF:
                 "assign-then-join path with no driver collect"
             ),
         )
-        data = []
-        for r in q_rows:
-            vec = [float(x) for x in r[query_vec_col]]
-            for c in self._probe_cells(vec, nprobe_l1=nprobe_l1, nprobe=nprobe):
-                data.append((r[query_id_col], vec, c))
+        vecs = [[float(x) for x in r[query_vec_col]] for r in q_rows]
+        cells = _rank_rows(self._cell_geometry(), vecs, nprobe_l1, nprobe)
+        data = [
+            (r[query_id_col], v, c)
+            for r, v, cs in zip(q_rows, vecs, cells)
+            for c in cs
+        ]
         return _pruned_blas_topk(
             self.assignments,
             data,
@@ -1894,35 +1875,19 @@ class HierarchicalIVF:
         ``IVFIndex.assign_new`` (round 12), on the index class sized for
         serving-scale cell counts. One Arrow pass over the new rows runs
         the SAME two-stage argmin as build's assignment
-        (``_hier_assign_fn`` — shared closure, so ingest placement
-        equals build placement by construction), then unions into the
-        assignments. Returns a NEW HierarchicalIVF; the receiver is
+        (``_assign_cells`` over the cell-ranking kernel, so ingest
+        placement equals build placement by construction), then unions
+        into the assignments. Returns a NEW HierarchicalIVF; the receiver is
         untouched (the flat class's purity contract). Drift policy:
         ``rebuild_due`` over ``assignments``-derived occupancy, same as
         flat — the r12 drift study's trigger applies per composite
         cell. The reference cannot ingest at all (build-once graph,
         src/lib.rs:336-341)."""
-        spark = new_vectors.sparkSession
-        bc = spark.sparkContext.broadcast(
-            (
-                self.l1_centroids,
-                self.l2_centroids,
-                self.k2,
-                self.proj,
-                self._overflow_by_parent(),
-            )
-        )
-        assign = _hier_assign_fn(bc, self.id_col, self.vec_col)
-        id_type = new_vectors.schema[self.id_col].dataType.simpleString()
-        geom_field = (
-            f", {GEOM_COL} ARRAY<FLOAT>" if self.proj is not None else ""
-        )
-        assigned = new_vectors.select(self.id_col, self.vec_col).mapInPandas(
-            assign,
-            schema=(
-                f"{self.id_col} {id_type}, {self.vec_col} ARRAY<FLOAT>, "
-                f"cell_id INT{geom_field}"
-            ),
+        assigned = _assign_cells(
+            new_vectors,
+            self._cell_geometry(),
+            id_col=self.id_col,
+            vec_col=self.vec_col,
         )
         return HierarchicalIVF(
             self.l1_centroids,
@@ -2034,7 +1999,7 @@ class HierarchicalIVF:
         composite encoding, the stride decode, and every saved cold
         partition stay untouched. Overflow cells participate in probe
         ranking, declarative batch ranking, and ingest assignment as
-        extra sub-cells of their parent (see ``_overflow_by_parent``).
+        extra sub-cells of their parent (see ``_cell_geometry``).
         Returns a NEW index; the receiver is untouched."""
         occ = {
             r["cell_id"]: r["n_vectors"] for r in self.cell_stats().collect()
@@ -2308,7 +2273,10 @@ class IVFPQIndex:
             else np.asarray(code_centroids, dtype=np.float64)
         )
 
-    _lloyd = staticmethod(_lloyd)
+    def _cell_geometry(self):
+        """Cell-ranking kernel geometry: probes rank the flat (or, over
+        a hierarchical index, dense composite) centroid matrix."""
+        return _flat_geometry(self.centroids, self.proj)
 
     @classmethod
     def build(
@@ -2428,6 +2396,7 @@ class IVFPQIndex:
         if fit_distributed is None:
             est_flops = len(resid) * ksub * dsub * m * lloyd_iters
             fit_distributed = est_flops >= 2e9
+        lloyd = _lloyd_fn()
         if fit_distributed and m > 1:
             bc_resid = spark.sparkContext.broadcast(
                 np.ascontiguousarray(resid)
@@ -2435,7 +2404,7 @@ class IVFPQIndex:
 
             def fit_block(j: int):
                 r = bc_resid.value
-                return j, _lloyd(
+                return j, lloyd(
                     r[:, j * dsub : (j + 1) * dsub],
                     ksub,
                     seed * 99991 + j,
@@ -2451,7 +2420,7 @@ class IVFPQIndex:
         else:
             codebooks = np.stack(
                 [
-                    cls._lloyd(
+                    lloyd(
                         resid[:, j * dsub : (j + 1) * dsub],
                         ksub,
                         seed * 99991 + j,
@@ -2522,8 +2491,7 @@ class IVFPQIndex:
         when saved partitioned by cell_id) + per-batch table gathers."""
         q_full = np.asarray(query, dtype=np.float64)
         q = q_full @ self.proj if self.proj is not None else q_full
-        d = ((self.centroids - q) ** 2).sum(axis=1)
-        cells = [int(c) for c in np.argsort(d, kind="stable")[: max(1, nprobe)]]
+        cells = _rank_rows(self._cell_geometry(), [q_full], 1, nprobe)[0]
         m, ksub, dsub = self.codebooks.shape
         # One (m x ksub) table per probed cell, from the query residual
         # in the CODE space: reduced geometry by default, full-space
@@ -2635,8 +2603,9 @@ class IVFPQIndex:
         Fully declarative — queries never collect to the driver (the
         distributed regime ``search`` cannot serve):
 
-        1. queries x centroids (broadcast) -> top-``nprobe`` cells per
-           query (reduced-geometry queries are projected first);
+        1. one ``mapInPandas`` pass of the cell-ranking kernel
+           (``_probed_pairs``) -> top-``nprobe`` cells per query
+           (reduced-geometry queries are projected first);
         2. ``_cogroup_adc_topk``: per-cell gather-sum ADC with a
            map-side top-``refine*k`` cut under (adc, vec_id);
         3. global per-query top-``refine*k`` window over the ADC
@@ -2654,39 +2623,23 @@ class IVFPQIndex:
         this distributed path too)."""
         if refine > 0 and store is None:
             raise ValueError("refine > 0 requires the vector store (store=)")
-        spark = queries.sparkSession
-        cent_df = spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in row])
-                for i, row in enumerate(self.centroids)
-            ],
-            "cell_id INT, centroid ARRAY<DOUBLE>",
-        )
-        q_geom_col = query_vec_col
-        if self.proj is not None:
-            q_geom_col = "_q_rvec"
-            queries = queries.withColumn(
-                q_geom_col, _project_udf(self.proj)(F.col(query_vec_col))
-            )
         # probe ranking always runs in the cheap reduced geometry; the
         # ADC tables run in the CODE space (full-space residuals for
         # code_space="full" indexes — the measured top-decade quality
         # requirement, see build())
-        tab_col = (
-            query_vec_col if self.code_centroids is not None else q_geom_col
-        )
-        qc = queries.join(F.broadcast(cent_df), how="cross").select(
-            query_id_col,
-            *dict.fromkeys((q_geom_col, tab_col)),
-            "cell_id",
-            l2_squared(F.col(q_geom_col), F.col("centroid")).alias("_cd"),
-        )
-        wp = Window.partitionBy(query_id_col).orderBy("_cd", "cell_id")
-        probed = (
-            qc.withColumn("_pr", F.row_number().over(wp))
-            .filter(F.col("_pr") <= max(1, nprobe))
-            .select(query_id_col, tab_col, "cell_id")
-        )
+        tab_col = query_vec_col
+        if self.proj is not None and self.code_centroids is None:
+            tab_col = "_q_rvec"
+            queries = queries.withColumn(
+                tab_col, _project_udf(self.proj)(F.col(query_vec_col))
+            )
+        probed = _probed_pairs(
+            queries.select(*dict.fromkeys((query_id_col, query_vec_col, tab_col))),
+            self._cell_geometry(),
+            nprobe_l1=1,
+            nprobe=nprobe,
+            vec_col=query_vec_col,
+        ).select(query_id_col, tab_col, "cell_id")
         keep = max(refine, 1) * k
         scored = _cogroup_adc_topk(
             probed,
