@@ -63,7 +63,7 @@ def main() -> None:
           f"{time.time() - t0:.1f}s, occupancy={occ}", flush=True)
 
     ipath = f"{REPO}/spark-warehouse/scaling/ivf_v1_{n}_d{DIM}_c{COARSE}"
-    if not os.path.exists(os.path.join(ipath, "centroids", "_SUCCESS")):
+    if not os.path.exists(os.path.join(ipath, "cells", "_SUCCESS")):
         t0 = time.time()
         idx.save(spark, ipath)
         print(f"save: {time.time() - t0:.1f}s", flush=True)

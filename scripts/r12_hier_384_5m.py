@@ -82,13 +82,13 @@ def main() -> None:
           f"max_share={max_share:.5f}")
 
     hpath = f"{REPO}/spark-warehouse/scaling/hier_v1_{n}_d{DIM}_c{COARSE}_g{k1}x{k2}"
-    if not os.path.exists(os.path.join(hpath, "meta", "_SUCCESS")):
+    if not os.path.exists(os.path.join(hpath, "cells", "_SUCCESS")):
         t0 = time.time()
         hier.save(spark, hpath)
         print(f"index save (cell-partitioned parquet): {time.time() - t0:.1f}s")
     hier.assignments.unpersist()
     loaded = HierarchicalIVF.load(spark, hpath)
-    total_sub = sum(len(v) for v in loaded.l2_centroids.values())
+    total_sub = loaded.num_cells
 
     # warm footer caches once, then time the persisted pruned serve
     loaded.search_batch_pruned(queries, K, nprobe=8).write.format(

@@ -55,14 +55,14 @@ def main() -> None:
     exact = knn_batch(emb, queries, K, impl="pandas").collect()
     print(f"exact ground truth: {time.time() - t0:.1f}s", flush=True)
 
-    if not os.path.exists(os.path.join(new, "meta", "_SUCCESS")):
+    if not os.path.exists(os.path.join(new, "cells", "_SUCCESS")):
         idx = HierarchicalIVF.load(spark, old)
         t0 = time.time()
         idx.save(spark, new)
         print(f"re-save (one file per cell): {time.time() - t0:.1f}s",
               flush=True)
     loaded = HierarchicalIVF.load(spark, new)
-    total_sub = sum(len(v) for v in loaded.l2_centroids.values())
+    total_sub = loaded.num_cells
     files = sum(
         len(fs) for _, _, fs in os.walk(os.path.join(new, "assignments"))
     )

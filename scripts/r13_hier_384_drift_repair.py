@@ -79,7 +79,7 @@ def rows_fraction(idx, queries_rows, nprobe) -> float:
     for r in queries_rows:
         cells = idx._probe_cells(
             [float(x) for x in r["query_embedding"]],
-            nprobe_l1=len(idx.l1_centroids),
+            nprobe_l1=len(idx.l1),
             nprobe=nprobe,
         )
         fr.append(sum(occ.get(c, 0) for c in cells) / total)
@@ -151,7 +151,7 @@ def main() -> None:
     repaired.assignments.count()
     print(f"rebalance(2.0): {time.time() - t0:.1f}s "
           f"({idx.num_cells} -> {repaired.num_cells} cells, "
-          f"{len(repaired.overflow)} overflow)", flush=True)
+          f"{len(repaired.centroids) - len(idx.centroids)} split-created)", flush=True)
     rocc = repaired.occupancy_stats()
     print(f"repaired occupancy: max_share {rocc['max_share']:.4f}, "
           f"p99 {rocc['p99']}", flush=True)

@@ -47,7 +47,7 @@ def hier_probed_fraction(idx, queries_rows, nprobe) -> float:
     for r in queries_rows:
         cells = idx._probe_cells(
             [float(x) for x in r["query_embedding"]],
-            nprobe_l1=len(idx.l1_centroids),
+            nprobe_l1=len(idx.l1),
             nprobe=nprobe,
         )
         fr.append(sum(occ.get(c, 0) for c in cells) / total)
@@ -132,7 +132,7 @@ def main() -> None:
     print(
         f"rebalance(2.0): {time.time() - t0:.1f}s "
         f"({idx.num_cells} -> {repaired.num_cells} cells, "
-        f"{len(repaired.overflow)} overflow)",
+        f"{len(repaired.centroids) - len(idx.centroids)} split-created)",
         flush=True,
     )
     occ = repaired.occupancy_stats()

@@ -140,7 +140,7 @@ def main() -> None:
         r = _recall(exact, ann)
         print(f"| flat c{COARSE} | {nprobe}/{n_cells} | "
               f"{nprobe / n_cells:.4f} | {r:.3f} | {dt:.2f} |")
-    total_sub = sum(len(v) for v in hier.l2_centroids.values())
+    total_sub = hier.num_cells
     for nprobe in NPROBES:
         t0 = time.time()
         ann = hier.search_batch(

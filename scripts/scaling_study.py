@@ -187,9 +187,9 @@ def main() -> None:
             ipath = (
                 f"{REPO}/spark-warehouse/scaling/ivf_v{VEC_V}_{n}{dim_sfx}{geom_sfx}"
             )
-            # save() writes assignments then centroids — the centroids
-            # _SUCCESS marker implies the whole index committed.
-            if not _complete(f"{ipath}/centroids"):
+            # save() writes the cell table last — its _SUCCESS marker
+            # implies the whole index committed.
+            if not _complete(f"{ipath}/cells"):
                 idx["i"].save(spark, ipath)
             loaded = IVFIndex.load(spark, ipath)
             _sink(loaded.search(q, 10, nprobe=8))  # warm footer caches

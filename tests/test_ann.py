@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vector_database_in_rust_spark.operators.ann import IVFIndex, LSHIndex
+from vector_database_in_rust_spark.operators.ann import IVFIndex
 from vector_database_in_rust_spark.operators.knn import knn_batch, knn_exact
 from tests.conftest import SF_SMOKE
 
@@ -76,14 +76,6 @@ def test_ivf_save_load_roundtrip(spark, emb, tmp_path):
     idx2 = IVFIndex.load(spark, str(tmp_path / "ivf"))
     after = [r["vec_id"] for r in idx2.search(q, 5, nprobe=3).collect()]
     assert before == after
-
-
-def test_lsh_self_query(spark, emb):
-    q = emb.filter("vec_id = 11").first()["embedding"]
-    lsh = LSHIndex(emb, num_hash_tables=4)
-    top = lsh.search(q, 5).collect()
-    assert top[0]["vec_id"] == 11
-    assert top[0]["dist"] == 0.0
 
 
 def test_deterministic_rebuild(spark, emb):
@@ -255,18 +247,19 @@ def test_hierarchical_save_load_roundtrip(spark, emb, tmp_path):
     before = [r["vec_id"] for r in idx.search(q, 5, nprobe_l1=2, nprobe=6).collect()]
     idx.save(spark, str(tmp_path / "hier"))
     idx2 = HierarchicalIVF.load(spark, str(tmp_path / "hier"))
-    assert idx2.k2 == idx.k2
+    assert (idx2.parent == idx.parent).all()
     after = [r["vec_id"] for r in idx2.search(q, 5, nprobe_l1=2, nprobe=6).collect()]
     assert before == after and before
 
 
 def test_hierarchical_underfilled_stride(spark, emb, tmp_path):
-    """r6 ADVICE: the composite cell id is l1 * STRIDE + l2 with the
-    stride fixed at build time (the requested k2). When EVERY
-    super-cell under-fills (here: a 12-vector corpus cannot fill any
-    k2=8 sub-block), inferring the stride as max(block length) decodes
-    probes on the wrong stride — full probe must still be exact, and
-    the stride must survive save/load."""
+    """r6 ADVICE: super-cell l1's sub-cells take ids l1 * k2 + j with
+    the requested k2. When EVERY super-cell under-fills (here: a
+    12-vector corpus cannot fill any k2=8 sub-block), the block tails
+    stay unused ids — NaN rows with parent -1 that never rank. Full
+    probe must still be exact, and the cell table must survive
+    save/load."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
@@ -274,22 +267,27 @@ def test_hierarchical_underfilled_stride(spark, emb, tmp_path):
 
     tiny = emb.filter(F.col("vec_id") < 12)
     idx = HierarchicalIVF.build(tiny, k1=3, k2=8, seed=42)
-    assert idx.k2 == 8
-    assert max(len(v) for v in idx.l2_centroids.values()) < 8
+    used = np.flatnonzero(idx.parent >= 0)
+    assert len(idx.centroids) == 24 and 3 <= len(used) < 24
+    assert (idx.parent[used] == used // 8).all()
+    assert np.isnan(idx.centroids[idx.parent < 0]).all()
+    assert np.isfinite(idx.centroids[used]).all()
+    cells = {r["cell_id"] for r in idx.assignments.select("cell_id").collect()}
+    assert cells <= set(used.tolist())
     q = tiny.filter("vec_id = 1").first()["embedding"]
     exact = [r["vec_id"] for r in knn_exact(tiny, q, 5).collect()]
-    total = sum(len(v) for v in idx.l2_centroids.values())
     got = [
         r["vec_id"]
-        for r in idx.search(q, 5, nprobe_l1=3, nprobe=total).collect()
+        for r in idx.search(q, 5, nprobe=idx.num_cells).collect()
     ]
     assert got == exact
     idx.save(spark, str(tmp_path / "hier_uf"))
     idx2 = HierarchicalIVF.load(spark, str(tmp_path / "hier_uf"))
-    assert idx2.k2 == 8
+    assert (idx2.parent == idx.parent).all()
+    np.testing.assert_array_equal(idx2.centroids, idx.centroids)
     got2 = [
         r["vec_id"]
-        for r in idx2.search(q, 5, nprobe_l1=3, nprobe=total).collect()
+        for r in idx2.search(q, 5, nprobe=idx.num_cells).collect()
     ]
     assert got2 == exact
 
@@ -526,11 +524,10 @@ def test_pq_default_code_space_is_full_on_reduced_geometry(spark, emb):
 
 def test_pq_over_hierarchical_index(spark, emb):
     """Round 14: quantized serving on the SERVING-SCALE class —
-    IVFPQIndex.build accepts a HierarchicalIVF (dense composite-cell
-    centroid matrix with far-away phantom slots for under-filled
-    blocks), including one carrying post-split OVERFLOW cells. Pins:
-    full probe + refine recovers knn_batch exact; batch == single;
-    phantom slots never produce candidates; codes cover every row."""
+    IVFPQIndex.build accepts a HierarchicalIVF (its by-id cell table,
+    NaN rows at unused ids), including one carrying post-split cells.
+    Pins: full probe + refine recovers knn_batch exact; batch ==
+    single; unused ids carry no codes; codes cover every row."""
     from vector_database_in_rust_spark.operators.ann import (
         HierarchicalIVF,
         IVFPQIndex,
@@ -542,7 +539,7 @@ def test_pq_over_hierarchical_index(spark, emb):
         .assign_new(new.select("vec_id", "embedding"))
         .split_hot_cells(factor=2.0, seed=42)
     )
-    assert hier.overflow
+    assert len(hier.centroids) > 9  # the split created cells
     corpus = emb.select("vec_id", "embedding").unionByName(
         new.select("vec_id", "embedding")
     )
@@ -568,16 +565,13 @@ def test_pq_over_hierarchical_index(spark, emb):
     assert single == [
         (r["vec_id"], r["dist"]) for r in batch if r["query_id"] == 3
     ]
-    # phantom composite slots carry no codes
+    # unused ids carry no codes
     import numpy as np
 
     real = {int(r["cell_id"]) for r in pq.codes.select("cell_id").distinct().collect()}
-    phantom = {
-        i
-        for i in range(n_slots)
-        if (pq.centroids[i] >= HierarchicalIVF._PHANTOM_CENTROID).all()
-    }
-    assert not (real & phantom)
+    unused = set(np.flatnonzero(hier.parent < 0).tolist())
+    assert unused == {i for i in range(n_slots) if np.isnan(pq.centroids[i]).all()}
+    assert not (real & unused)
 
 
 def test_pq_distributed_fit_matches_sequential(spark, emb, ivf16):
@@ -994,7 +988,7 @@ def test_hier_search_batch_pruned_reduced_geometry(spark, emb, queries, tmp_path
     idx.save(spark, str(tmp_path / "hier_red"))
     loaded = HierarchicalIVF.load(spark, str(tmp_path / "hier_red"))
     assert loaded.proj is not None
-    total = sum(len(v) for v in loaded.l2_centroids.values())
+    total = loaded.num_cells
     got = [
         tuple(r)
         for r in loaded.search_batch_pruned(
@@ -1118,7 +1112,7 @@ def test_hier_assign_new_incremental(spark, emb):
     assert before == 400 and idx.assignments.count() == 400  # purity
     assert grown.assignments.count() == 500
     q = emb.filter("vec_id = 450").first()["embedding"]
-    total = sum(len(v) for v in grown.l2_centroids.values())
+    total = grown.num_cells
     top = grown.search_batch(
         spark.createDataFrame(
             [(0, [float(x) for x in q])],
@@ -1282,7 +1276,7 @@ def test_build_auto_routes_on_cell_count(spark, emb):
     hier = build_auto(emb, num_cells=9, seed=7, flat_cell_limit=4)
     assert isinstance(hier, HierarchicalIVF)
     # balanced split: ceil(sqrt(9)) = 3 per level, >= requested cells
-    assert len(hier.l1_centroids) == 3
+    assert len(hier.l1) == 3
     assert hier.num_cells >= 9 - 3  # sample under-fill can shrink blocks
     # the routed hier index serves: full probe == exact
     q = emb.filter("vec_id = 5").first()["embedding"]
@@ -1306,11 +1300,11 @@ def _drift_cluster_df(spark, n=300, id_start=1000):
 
 def test_hier_split_hot_cells_overflow(spark, emb):
     """Round 13 (hier drift repair): ingest a tight OOD cluster, split
-    hot cells, and pin the overflow-cell contract: (a) lossless,
-    (b) occupancy strictly improves, (c) new cells live OUTSIDE the
-    composite id range (cold saved partitions never move), (d) full
-    probe stays exact, (e) deterministic, (f) the split is pure (the
-    receiver index is untouched)."""
+    hot cells, and pin the split contract: (a) lossless, (b) occupancy
+    strictly improves, (c) new cells take fresh ids past the cell
+    table, in their hot cell's parent block (cold saved partitions
+    never move), (d) full probe stays exact, (e) deterministic, (f) the
+    split is pure (the receiver index is untouched)."""
     import numpy as np
 
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
@@ -1322,11 +1316,12 @@ def test_hier_split_hot_cells_overflow(spark, emb):
         return idx, idx.split_hot_cells(factor=2.0, seed=42)
 
     idx, split = build_split()
-    assert not idx.overflow  # purity: receiver untouched
-    assert split.overflow, "the OOD pile-up must have split"
-    base = idx.k2 * len(idx.l1_centroids)
-    assert all(c >= base for c in split.overflow)
-    assert split.num_cells == idx.num_cells + len(split.overflow)
+    base = len(idx.centroids)
+    assert base == 9  # purity: receiver untouched
+    new_ids = [c for c in range(len(split.centroids)) if c >= base]
+    assert new_ids, "the OOD pile-up must have split"
+    assert split.num_cells == idx.num_cells + len(new_ids)
+    assert (split.parent[new_ids] >= 0).all()
 
     before = {r["cell_id"]: r["n_vectors"] for r in idx.cell_stats().collect()}
     after = {r["cell_id"]: r["n_vectors"] for r in split.cell_stats().collect()}
@@ -1348,15 +1343,16 @@ def test_hier_split_hot_cells_overflow(spark, emb):
     assert split.assignments.select("vec_id", "cell_id").exceptAll(
         split2.assignments.select("vec_id", "cell_id")
     ).count() == 0
-    assert sorted(split.overflow) == sorted(split2.overflow)
+    assert np.array_equal(split.centroids, split2.centroids)
+    assert (split.parent == split2.parent).all()
 
 
 def test_hier_split_probe_paths_agree_and_roundtrip(spark, emb, tmp_path):
-    """With overflow cells present, the three serving paths must agree
-    — driver probe ranking (search), declarative batch ranking
+    """With split-created cells present, the three serving paths must
+    agree — driver probe ranking (search), declarative batch ranking
     (search_batch), and the persisted pruned path after a save/load
-    round trip (overflow must survive persistence) — and post-split
-    ingest must be able to LAND in an overflow cell."""
+    round trip (the cells must survive persistence) — and post-split
+    ingest must be able to LAND in a split-created cell."""
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
 
     point, new = _drift_cluster_df(spark)
@@ -1372,7 +1368,8 @@ def test_hier_split_probe_paths_agree_and_roundtrip(spark, emb, tmp_path):
     want = [tuple(r) for r in split.search_batch(queries, K, nprobe=4).collect()]
     split.save(spark, str(tmp_path / "hsplit"))
     loaded = HierarchicalIVF.load(spark, str(tmp_path / "hsplit"))
-    assert loaded.overflow and sorted(loaded.overflow) == sorted(split.overflow)
+    assert len(split.centroids) > 9
+    assert (loaded.parent == split.parent).all()
     got = [
         tuple(r)
         for r in loaded.search_batch_pruned(queries, K, nprobe=4).collect()
@@ -1380,8 +1377,8 @@ def test_hier_split_probe_paths_agree_and_roundtrip(spark, emb, tmp_path):
     assert got == want
 
     # ingest into the split structure: a vector ON the drift point must
-    # be assigned to one of the drift cells (composite-updated or
-    # overflow), and probe-1 must place that cell first.
+    # be assigned to one of the drift cells (updated in place or
+    # split-created), and probe-1 must place that cell first.
     probe_cell = split._probe_cells(point, nprobe_l1=3, nprobe=1)[0]
     one = spark.createDataFrame(
         [(9_999_999, [float(x) for x in point])],
@@ -1396,14 +1393,14 @@ def test_hier_split_probe_paths_agree_and_roundtrip(spark, emb, tmp_path):
 
 
 def test_hier_resave_clears_stale_overflow(spark, emb, tmp_path):
-    """r13 ADVICE (medium): save() used to write overflow/ only when
-    non-empty and never removed an existing one, while load() always
-    probes it — so re-saving an overflow-free index (e.g. a fresh
-    rebuild) over a path that previously held a split index silently
-    resurrected the stale overflow cells: phantom centroids in probe
+    """r13 ADVICE (medium): re-saving a fresh, smaller index (e.g. a
+    rebuild) over a path that previously held a split index must not
+    resurrect the split's extra cells — stale centroids in probe
     ranking and assign_new, and an inflated num_cells mis-resolving
-    target_frac budgets. In-place re-save is a supported flow (every
-    other component is mode('overwrite')), so overflow must be too."""
+    target_frac budgets. In-place re-save is a supported flow: the
+    loaded cell table must be the fresh index's."""
+    import numpy as np
+
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
 
     point, new = _drift_cluster_df(spark)
@@ -1413,24 +1410,23 @@ def test_hier_resave_clears_stale_overflow(spark, emb, tmp_path):
         .assign_new(new)
         .split_hot_cells(factor=2.0, seed=42)
     )
-    assert split.overflow
+    assert len(split.centroids) > 9
     split.save(spark, path)
 
     fresh = HierarchicalIVF.build(
         emb.select("vec_id", "embedding").unionByName(
             new.select("vec_id", "embedding")
         ),
-        k1=4,
-        k2=4,
+        k1=2,
+        k2=3,
         seed=7,
     )
-    assert not fresh.overflow
+    assert len(fresh.centroids) < len(split.centroids)
     fresh.save(spark, path)  # in-place rebuild over the split save
     loaded = HierarchicalIVF.load(spark, path)
-    assert loaded.overflow == {}, (
-        "stale overflow cells resurrected on re-save"
-    )
     assert loaded.num_cells == fresh.num_cells
+    assert (loaded.parent == fresh.parent).all()
+    np.testing.assert_array_equal(loaded.centroids, fresh.centroids)
 
 
 def test_nprobe_for_rows_frac_worst_case_bound(spark, emb):
@@ -1490,11 +1486,11 @@ def _assert_batch_matches_search(idx, queries, k, **probe):
 
 def test_search_batch_matches_search(spark, emb, queries):
     """The one batch scoring path (``_cogroup_blas_topk``) against the
-    single-query reference on both index classes: the flat index, a
+    single-query reference on both constructors: the flat index, a
     reduced-geometry (``coarse_dim=8``) index, a 3x3 hierarchical
     index, a reduced-geometry hierarchical index probing fewer
-    super-cells than it has, a hierarchical index with overflow cells
-    (after ``split_hot_cells``), string ids, and an empty batch."""
+    super-cells than it has, a hierarchical index with split-created
+    cells (after ``split_hot_cells``), string ids, and an empty batch."""
     import numpy as np
 
     from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
@@ -1512,8 +1508,8 @@ def test_search_batch_matches_search(spark, emb, queries):
     _assert_batch_matches_search(hred, queries, K, nprobe_l1=2, nprobe=4)
 
     # a tight out-of-distribution cluster makes its cell hot; the split
-    # puts half of it in an overflow cell, and two cluster points join
-    # the query batch so the overflow cell is actually probed
+    # puts half of it in a new cell, and two cluster points join the
+    # query batch so the new cell is actually probed
     rng = np.random.RandomState(7)
     point = rng.rand(64) * 0.05 + 2.0
     drift = spark.createDataFrame(
@@ -1525,7 +1521,7 @@ def test_search_batch_matches_search(spark, emb, queries):
     )
     split = hier.assign_new(drift).split_hot_cells(factor=2.0)
     probed = split._probe_cells(point, nprobe_l1=2, nprobe=5)
-    assert set(probed) & set(split.overflow), (probed, split.overflow)
+    assert max(probed) >= len(hier.centroids), probed
     dq = drift.filter(F.col("vec_id") < 9_100_002).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
@@ -1789,7 +1785,7 @@ def test_executor_closures_need_no_package_import(tmp_path):
     PQ codebook fits) must pickle by value: a driver that imports the
     package from a path its workers do not share (here: run from a
     temp directory, package on the driver's ``sys.path`` only) still
-    builds, ingests, splits and serves on both index classes and runs
+    builds, ingests, splits and serves under both constructors and runs
     the distributed PQ codebook fit. A closure that reaches a
     module-level helper fails with ``ModuleNotFoundError`` on the
     workers."""
@@ -1808,3 +1804,80 @@ def test_executor_closures_need_no_package_import(tmp_path):
         timeout=900,
     )
     assert "EXECUTOR-CLOSURES-OK" in res.stdout, res.stderr[-4000:]
+
+
+def test_save_load_roundtrip_every_geometry(spark, emb, queries, tmp_path):
+    """One persisted layout for both constructors: for a flat index, a
+    flat index after ``split_hot_cells``, a hierarchical ``coarse_dim``
+    index and a hierarchical index after a split, ``load(save(idx))``
+    restores ``l1``, the cell table (NaN rows included) and ``proj``,
+    and the persisted pruned serve returns the in-memory batch rows.
+    A flat save also loads through ``HierarchicalIVF.load``."""
+    import numpy as np
+
+    from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
+
+    _, drift = _drift_cluster_df(spark, n=200)
+    drift = drift.select("vec_id", "embedding")
+    qs = queries.unionByName(
+        drift.limit(2).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_embedding"),
+        )
+    )
+    flat = IVFIndex.build(emb, num_cells=8, seed=42)
+    flat_split = flat.assign_new(drift).split_hot_cells(factor=2.0)
+    hier_split = (
+        HierarchicalIVF.build(emb, k1=3, k2=3, seed=42)
+        .assign_new(drift)
+        .split_hot_cells(factor=2.0)
+    )
+    assert len(flat_split.centroids) > 8 and len(hier_split.centroids) > 9
+    cases = [
+        (flat, (IVFIndex, HierarchicalIVF)),
+        (flat_split, (IVFIndex,)),
+        (HierarchicalIVF.build(emb, k1=3, k2=3, seed=42, coarse_dim=8),
+         (HierarchicalIVF,)),
+        (hier_split, (HierarchicalIVF,)),
+    ]
+    for i, (idx, loaders) in enumerate(cases):
+        path = str(tmp_path / f"idx{i}")
+        idx.save(spark, path)
+        want = [tuple(r) for r in idx.search_batch(qs, K, nprobe=4).collect()]
+        for cls in loaders:
+            loaded = cls.load(spark, path)
+            np.testing.assert_array_equal(loaded.l1, idx.l1)
+            np.testing.assert_array_equal(loaded.centroids, idx.centroids)
+            np.testing.assert_array_equal(loaded.parent, idx.parent)
+            assert (loaded.proj is None) == (idx.proj is None), i
+            if idx.proj is not None:
+                np.testing.assert_array_equal(loaded.proj, idx.proj)
+            got = loaded.search_batch_pruned(qs, K, nprobe=4).collect()
+            assert [tuple(r) for r in got] == want, (i, cls.__name__)
+
+
+def test_perfbench_instrument_wraps_index_methods():
+    """The traced benchmark run wraps ``IVFIndex`` methods by reading
+    the class's own ``__dict__``, so each must stay defined in
+    ``IVFIndex``'s body: a method moved to a base class fails here
+    instead of only in the traced run. Starts no Spark session."""
+    import os
+    import sys
+
+    from pyspark.sql import DataFrame
+
+    from vector_database_in_rust_spark.operators import ann
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "perfbench"))
+    try:
+        import workloads
+        from spans import Tracer
+    finally:
+        sys.path.pop(0)
+    before = dict(vars(ann.IVFIndex))
+    tracer = Tracer(False)
+    workloads.instrument(tracer, DataFrame)
+    assert vars(ann.IVFIndex)["search"] is not before["search"]
+    tracer.unwrap()
+    assert dict(vars(ann.IVFIndex)) == before

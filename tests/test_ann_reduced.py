@@ -221,7 +221,7 @@ def test_occupancy_stats_math(spark):
     asg = spark.createDataFrame(
         rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, cell_id INT"
     )
-    idx = IVFIndex(np.zeros((3, 1)), asg)
+    idx = IVFIndex(np.zeros((1, 1)), np.zeros((3, 1)), np.zeros(3), asg)
     occ = idx.occupancy_stats()
     assert occ["cells"] == 3 and occ["rows"] == 8 and occ["max"] == 6
     assert occ["max_share"] == pytest.approx(0.75)
@@ -234,7 +234,7 @@ def test_occupancy_stats_empty_index(spark):
     asg = spark.createDataFrame(
         [], "vec_id BIGINT, embedding ARRAY<FLOAT>, cell_id INT"
     )
-    idx = IVFIndex(np.zeros((3, 1)), asg)
+    idx = IVFIndex(np.zeros((1, 1)), np.zeros((3, 1)), np.zeros(3), asg)
     occ = idx.occupancy_stats()
     assert occ == {
         "cells": 0, "rows": 0, "max": 0, "p50": 0, "p99": 0,
@@ -341,11 +341,8 @@ def hier_ridx(hd_emb):
 def test_hier_reduced_structure(hier_ridx):
     assert hier_ridx.proj is not None
     assert hier_ridx.proj.shape == (DIM, COARSE)
-    assert hier_ridx.l1_centroids.shape[1] == COARSE
-    assert all(
-        block.shape[1] == COARSE
-        for block in hier_ridx.l2_centroids.values()
-    )
+    assert hier_ridx.l1.shape[1] == COARSE
+    assert hier_ridx.centroids.shape[1] == COARSE
     assert GEOM_COL in hier_ridx.assignments.columns
     row = hier_ridx.assignments.select(
         F.size(GEOM_COL).alias("rd"), F.size("embedding").alias("fd")
@@ -357,7 +354,7 @@ def test_hier_reduced_full_probe_equals_exact(hd_emb, queries, hier_ridx):
     """Approximation comes ONLY from cell pruning — probing every
     sub-cell reproduces the exact scan (re-rank reads the original
     vectors, never the reduced geometry)."""
-    total = sum(len(v) for v in hier_ridx.l2_centroids.values())
+    total = hier_ridx.num_cells
     exact = knn_batch(hd_emb, queries, K)
     ann = hier_ridx.search_batch(queries, K, nprobe_l1=4, nprobe=total)
     assert _recall(exact, ann) == 1.0
@@ -383,7 +380,7 @@ def test_hier_reduced_save_load_roundtrip(spark, hd_emb, hier_ridx, tmp_path):
     hier_ridx.save(spark, str(tmp_path / "hier_r"))
     idx2 = HierarchicalIVF.load(spark, str(tmp_path / "hier_r"))
     assert idx2.proj is not None and np.allclose(idx2.proj, hier_ridx.proj)
-    assert idx2.k2 == hier_ridx.k2
+    assert (idx2.parent == hier_ridx.parent).all()
     after = [r["vec_id"] for r in idx2.search(q, 5).collect()]
     assert before == after and before
 
@@ -396,4 +393,4 @@ def test_hier_full_space_unchanged(spark, hd_emb):
     idx = HierarchicalIVF.build(hd_emb, k1=4, k2=4, seed=42)
     assert idx.proj is None
     assert GEOM_COL not in idx.assignments.columns
-    assert idx.l1_centroids.shape[1] == DIM
+    assert idx.l1.shape[1] == DIM

@@ -183,10 +183,10 @@ def test_stream_ingest_into_index_hier_class(spark, tmp_path):
 
 def test_stream_ingest_into_rebalanced_hier_index(spark, tmp_path):
     """Round 14 composition: streaming ingest into a REPAIRED
-    (post-rebalance, overflow-carrying) hierarchical index must
+    (post-rebalance, split-cell-carrying) hierarchical index must
     reconcile with one-shot batch assign_new against the same repaired
-    structure, and rows on the drift point must be able to LAND in an
-    overflow cell through the stream — the streaming twin of the
+    structure, and rows on the drift point must be able to LAND in a
+    split-created cell through the stream — the streaming twin of the
     ★ann_ingest_overflow_verdict driver lane."""
     import numpy as np
 
@@ -206,14 +206,15 @@ def test_stream_ingest_into_rebalanced_hier_index(spark, tmp_path):
         ],
         "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
     )
-    rep = (
-        HierarchicalIVF.build(base, k1=3, k2=3, seed=42)
-        .assign_new(drift.select("vec_id", "embedding"))
-        .rebalance(factor=2.0, seed=42)
+    idx = HierarchicalIVF.build(base, k1=3, k2=3, seed=42)
+    rep = idx.assign_new(drift.select("vec_id", "embedding")).rebalance(
+        factor=2.0, seed=42
     )
-    assert rep.overflow  # the repaired structure under test
-
-    ov_cell, (_, ov_cent) = sorted(rep.overflow.items())[0]
+    # the repaired structure under test: split-created cells take the
+    # ids past the pre-repair cell table
+    ov_cell = len(idx.centroids)
+    assert len(rep.centroids) > ov_cell
+    ov_cent = rep.centroids[ov_cell]
     fresh = spark.createDataFrame(
         [
             (20_000, [float(np.float32(x)) for x in ov_cent], 0),
@@ -247,7 +248,7 @@ def test_stream_ingest_into_rebalanced_hier_index(spark, tmp_path):
             F.col("vec_id") >= 20_000
         ).collect()
     }
-    assert landed[20_000] == ov_cell  # streamed row landed in overflow
+    assert landed[20_000] == ov_cell  # streamed row landed in the new cell
 
 
 def test_stream_ingest_counts_drops_without_quarantine(spark, tmp_path):

@@ -75,7 +75,7 @@ class VectorEngine:
             self.df = read_raw_f32(spark, source, dimensions)
         else:
             self.df = spark.read.parquet(source)
-        self.index: IVFIndex | HierarchicalIVF | None = None
+        self.index: IVFIndex | None = None
         self._packed: DataFrame | None = None
 
     # -- store ops --------------------------------------------------------
@@ -228,9 +228,10 @@ class VectorEngine:
         one k1-row otherwise, e.g. num_cells=10 builds 3x4=12; ``nprobe``
         therefore denotes approximately the same corpus fraction under
         either index) — the build shape for cell counts beyond one
-        KMeans fit; crossover notes in SCALE.md. ``search``/
-        ``search_batch`` work identically on both; ``search_filtered``
-        requires the flat index."""
+        KMeans fit; crossover notes in SCALE.md. Both builds return an
+        ``IVFIndex`` (the hierarchical one as its ``HierarchicalIVF``
+        subclass), so ``search``, ``search_batch`` and
+        ``search_filtered`` work identically on either."""
         corpus = self.df
         if start_id is not None or end_id is not None:
             lo = start_id or 0
@@ -315,9 +316,9 @@ class VectorEngine:
         ``metadata`` restricts candidates BEFORE ranking, so the top-k
         always comes from the qualifying subset. Falls back to exact
         brute force over the filtered corpus when no index exists —
-        identical results, different cost. Works on either index class
-        (round 13 — the flat-only restriction is closed; ``nprobe``
-        left None takes each class's own default)."""
+        identical results, different cost. Works on either build;
+        ``nprobe`` left None takes the index's own default (8 cells
+        flat, half of all cells two-level)."""
         if self.index is None:
             keep = metadata.filter(predicate).select(
                 F.col(meta_id_col or self.id_col).alias(self.id_col)

@@ -1549,14 +1549,13 @@ def ann_ingest_hier_verdict_q(spark, sf_dir):
         for r in re_cells.select("vec_id", "cell_id").collect()
     ) and len(orig) > 0
     probe_vec = new.orderBy("vec_id").first()
-    total_sub = sum(len(v) for v in grown.l2_centroids.values())
     top = grown.search_batch(
         spark.createDataFrame(
             [(0, [float(x) for x in probe_vec["embedding"]])],
             "query_id BIGINT, query_embedding ARRAY<DOUBLE>",
         ),
         1,
-        nprobe=total_sub,
+        nprobe=grown.num_cells,
     ).first()
     self_exact = (
         top["vec_id"] == probe_vec["vec_id"] and top["dist"] == 0.0
@@ -1581,16 +1580,17 @@ SELECT CAST((SELECT count(*) FROM embeddings) + 402 AS BIGINT) AS n_total,
 def ann_ingest_overflow_verdict_q(spark, sf_dir):
     """Ingest against a REPAIRED hierarchical index, driver-hash-
     verified (round 14, r13 verdict item 6 — ★`ann_ingest_hier_verdict`
-    (r12) predates overflow cells, so the one r13-feature composition
-    without a hash-checked driver lane was assign_new against a
-    post-``rebalance`` structure). Protocol: build the two-level index
-    on the corpus, pile a deterministic out-of-distribution cluster
-    (400 rows, seeded) into its nearest cell, ``rebalance`` — the r13
-    drift repair, which creates OVERFLOW cells outside the composite
-    id range — then ingest two fresh vectors and pin: (a) the repair
-    actually produced overflow cells; (b) a vector placed exactly AT an
-    overflow centroid is assigned TO that overflow cell (the broadcast
-    ``_assign_cells`` kernel sees overflow — a repaired index must ingest
+    (r12) predates split-created cells, so the one r13-feature
+    composition without a hash-checked driver lane was assign_new
+    against a post-``rebalance`` structure). Protocol: build the
+    two-level index on the corpus, pile a deterministic
+    out-of-distribution cluster (400 rows, seeded) into its nearest
+    cell, ``rebalance`` — the r13 drift repair, which creates cells at
+    the ids past the pre-repair cell table (``overflow`` cells in the
+    column names) — then ingest two fresh vectors and pin: (a) the
+    repair actually created cells; (b) a vector placed exactly AT the
+    first split-created centroid is assigned TO that cell (the broadcast
+    ``_assign_cells`` kernel sees it — a repaired index must ingest
     into its repaired geometry, not just serve from it); (c) a vector
     at the drift point lands in the cell the driver-side probe ranks
     first (ingest/probe agreement, the contract the pytest pins); (d)
@@ -1612,10 +1612,11 @@ def ann_ingest_overflow_verdict_q(spark, sf_dir):
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
     )
     rep = idx.assign_new(drift).rebalance(factor=2.0, seed=42)
-    overflow_nonempty = bool(rep.overflow)
-    # (b): ingest exactly at an overflow centroid -> must land there
-    ov_cell, (_, ov_cent) = sorted(rep.overflow.items())[0]
-    at_overflow = [float(np.float32(x)) for x in ov_cent]
+    # split-created cells: the ids past the pre-repair cell table
+    overflow_nonempty = len(rep.centroids) > len(idx.centroids)
+    # (b): ingest exactly at a split-created centroid -> must land there
+    ov_cell = len(idx.centroids)
+    at_overflow = [float(np.float32(x)) for x in rep.centroids[ov_cell]]
     probe_pt = [float(x) for x in point]
     grown = rep.assign_new(
         spark.createDataFrame(
@@ -5081,7 +5082,7 @@ def ann_hier_recall_verdict_q(spark, sf_dir):
     """Driver-verifiable verdict for the HIERARCHICAL IVF lane at its
     tuned round-6 defaults (all super-cells ranked, half of all
     sub-cells probed — the recall-equivalent budget vs flat IVF; see
-    HierarchicalIVF.search and SCALE.md). Probing every cell must
+    IVFIndex.search and SCALE.md). Probing every cell must
     reproduce the exact top-k row set, and the default probe must clear
     recall 0.6 (measured 0.931 on the 8x8 index at sf0.01; this 4x4
     index probes the same 50% corpus fraction). Uses the declarative
@@ -5092,11 +5093,10 @@ def ann_hier_recall_verdict_q(spark, sf_dir):
     idx = _hier_index(spark, sf_dir)
     q = _query_vec_df(spark, sf_dir, 8)
     exact = knn_batch(_emb(spark, sf_dir), q, KNN_K)
-    n_cells = sum(len(v) for v in idx.l2_centroids.values())
     return topk_recall_verdict(
         exact,
         idx.search_batch(q, KNN_K),
-        idx.search_batch(q, KNN_K, nprobe=n_cells),
+        idx.search_batch(q, KNN_K, nprobe=idx.num_cells),
         k=KNN_K,
         min_recall=0.6,
     )

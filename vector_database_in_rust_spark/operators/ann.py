@@ -152,9 +152,9 @@ def _cell_rank_fn(nprobe_l1: int, nprobe: int):
     top-``nprobe_l1`` super-cells under (dist, super-cell index). Rows
     whose probed blocks hold fewer cells are padded with -1. ``geom``
     is ``(l1, blocks, proj)``: super-cell centroids, one ``(cell ids,
-    centroids)`` block per super-cell with overflow cells folded into
-    their parent's block, and the optional coarse projection. A flat
-    index is the one-super-cell case (``_flat_geometry``). Distances are
+    centroids)`` block per super-cell holding its used cell ids, and
+    the optional coarse projection. A flat index is the one-super-cell
+    case (``IVFIndex.build``, ``_flat_geometry``). Distances are
     the elementwise float64 ``((x - c) ** 2).sum(-1)`` after a float64
     ``x @ proj``, over row chunks bounded by ``RANK_CHUNK_ELEMS``."""
     nprobe_l1, nprobe = max(1, nprobe_l1), max(1, nprobe)
@@ -192,11 +192,12 @@ def _cell_rank_fn(nprobe_l1: int, nprobe: int):
 
 
 def _flat_geometry(centroids: np.ndarray, proj: np.ndarray | None):
-    """Kernel geometry of a flat centroid matrix: one super-cell whose
-    block holds every centroid (its own centroid is never compared —
-    ranking one super-cell picks it)."""
+    """Kernel geometry of a by-id centroid matrix: one super-cell whose
+    block holds every used id — NaN rows mark unused ids (its own
+    centroid is never compared — ranking one super-cell picks it)."""
     c = np.asarray(centroids, dtype=np.float64)
-    return np.zeros((1, c.shape[1])), [(np.arange(len(c)), c)], proj
+    ids = np.flatnonzero(np.isfinite(c).all(axis=1))
+    return np.zeros((1, c.shape[1])), [(ids, c[ids])], proj
 
 
 def _rank_rows(geom, rows, nprobe_l1: int, nprobe: int) -> list[list[int]]:
@@ -239,7 +240,7 @@ def _probed_pairs(
 def _assign_cells(rows: DataFrame, geom, *, id_col: str, vec_col: str) -> DataFrame:
     """Place each (id, vector) row in its cell: the kernel at
     ``nprobe_l1 = nprobe = 1`` as one ``mapInPandas`` pass (no join,
-    no window, no exchange). Build and ``assign_new`` of both classes
+    no window, no exchange). The two-level build and ``assign_new``
     run it, so a placed row lands in the cell its own probe ranks
     first. Emits id, vector, ``cell_id`` and, under a coarse
     projection, the float32 GEOM_COL."""
@@ -268,7 +269,7 @@ def _assign_cells(rows: DataFrame, geom, *, id_col: str, vec_col: str) -> DataFr
 
 def _cell_topk_fn(k: int, round_digits: int | None):
     """The one per-cell BLAS scorer behind ``search_batch`` and
-    ``search_batch_pruned`` on both index classes, as an executor-side
+    ``search_batch_pruned``, as an executor-side
     closure factory (nested, so it pickles by value: executors need not
     import this package). ``cell_topk(qids, qmat, ids, vecs)`` scores
     the queries ``qmat`` probing a cell against the cell's candidate
@@ -400,9 +401,8 @@ def _pruned_blas_topk(
 def _occupancy_stats(assignments: DataFrame) -> dict:
     """One-pass cell-occupancy summary over an assignment table —
     shared by ``IVFIndex.occupancy_stats`` (see its docstring for the
-    measured degeneracy it catches and the remedies),
-    ``HierarchicalIVF.occupancy_stats``, and the streaming-maintenance
-    monitor."""
+    measured degeneracy it catches and the remedies) and the
+    streaming-maintenance monitor."""
     row = (
         assignments.groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -442,9 +442,8 @@ def _fit_hot_subcentroids(
     max_cell_fit_rows: int,
 ) -> dict:
     """Per-hot-cell seeded local 2-means, one ``applyInPandas`` group
-    per cell (the HierarchicalIVF level-2 discipline) — shared by the
-    flat AND hierarchical ``split_hot_cells`` so both classes split
-    under the identical rule. Returns {(cell_id, sub): centroid}."""
+    per cell (the HierarchicalIVF level-2 discipline) behind
+    ``split_hot_cells``. Returns {(cell_id, sub): centroid}."""
     lloyd = _lloyd_fn()
 
     def fit2(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -482,8 +481,7 @@ def _reassign_hot_rows(
 ) -> DataFrame:
     """Re-score each hot cell's rows against its two sub-centroids:
     the closer-to-sub0 half keeps the cell id, the rest moves to the
-    cell's fresh id (ties keep the old id). Shared by both classes'
-    ``split_hot_cells``."""
+    cell's fresh id (ties keep the old id), for ``split_hot_cells``."""
     spark = hot_rows.sparkSession
     remap = spark.createDataFrame(
         [
@@ -508,6 +506,18 @@ def _reassign_hot_rows(
     )
 
 
+def _in_probed_cells(rows: DataFrame, probed: DataFrame) -> DataFrame:
+    """Keep only the rows of probed cells, BEFORE the cogroup exchange:
+    without this semi-join, every unprobed cell's rows shuffle into
+    groups whose probe side is empty — a full corpus shuffle for an
+    nprobe-selective serve. The distinct probed cell set is <= num_cells
+    rows (index-bounded), so the filter is a broadcast semi-join:
+    map-side drop, no extra shuffle."""
+    return rows.join(
+        F.broadcast(probed.select("cell_id").distinct()), "cell_id", "left_semi"
+    )
+
+
 def _cogroup_blas_topk(
     probed: DataFrame,
     assignments: DataFrame,
@@ -521,7 +531,7 @@ def _cogroup_blas_topk(
     query_id_type: str,
 ) -> DataFrame:
     """Candidate scoring for DISTRIBUTED query batches — the one
-    scoring path of both index classes' ``search_batch`` (round 13):
+    scoring path of ``IVFIndex.search_batch`` (round 13):
     cogroup the probed (query, cell) pairs with the assignments ON
     cell_id and score each cell group with ``_cell_topk_fn`` (one
     ``Q_c @ X_c.T``). Cost shape: one shuffle of the probed pairs + one
@@ -544,17 +554,7 @@ def _cogroup_blas_topk(
             cands[vec_col],
         )
 
-    # Probe selectivity must reach the candidate side BEFORE the
-    # cogroup exchange: without this semi-join, every unprobed cell's
-    # rows shuffle into groups whose probe side is empty — a full
-    # corpus shuffle for an nprobe-selective serve. The distinct probed
-    # cell set is <= num_cells rows (index-bounded), so the filter is a
-    # broadcast semi-join: map-side drop, no extra shuffle.
-    cand = assignments.select("cell_id", id_col, vec_col).join(
-        F.broadcast(probed.select("cell_id").distinct()),
-        "cell_id",
-        "left_semi",
-    )
+    cand = _in_probed_cells(assignments.select("cell_id", id_col, vec_col), probed)
     scored = (
         probed.groupBy("cell_id")
         .cogroup(cand.groupBy("cell_id"))
@@ -638,13 +638,7 @@ def _cogroup_adc_topk(
             }
         )
 
-    # probe selectivity reaches the code scan before the exchange —
-    # same broadcast semi-join as the BLAS form
-    cand = codes.select("cell_id", "vec_id", "codes").join(
-        F.broadcast(probed.select("cell_id").distinct()),
-        "cell_id",
-        "left_semi",
-    )
+    cand = _in_probed_cells(codes.select("cell_id", "vec_id", "codes"), probed)
     return (
         probed.groupBy("cell_id")
         .cogroup(cand.groupBy("cell_id"))
@@ -799,21 +793,39 @@ def rebuild_due(
 class IVFIndex:
     """IVF coarse-quantization index over an embedding DataFrame.
 
-    The "index" is plain data: a centroid matrix (driver-side numpy, tiny)
-    plus a cell-assignment DataFrame — both persistable as Parquet, which
-    the reference cannot do at all (its graph dies with the process).
+    The "index" is plain data — driver-side numpy geometry (tiny) plus a
+    cell-assignment DataFrame, all persistable as Parquet, which the
+    reference cannot do at all (its graph dies with the process):
+
+    - ``l1``: super-cell centroids. A flat index has one zero row — one
+      super-cell holding every cell, so ranking it always picks it.
+    - ``centroids[c]`` / ``parent[c]``: the by-id cell table over the
+      whole id space. Ids a two-level build leaves unused (under-filled
+      blocks) are NaN rows with parent -1 and never enter a kernel
+      block.
+
+    Every probe ranks with the one kernel (``_cell_rank_fn``) over
+    ``_cell_geometry()``, so the flat index (:meth:`build`) and the
+    two-level one (:meth:`HierarchicalIVF.build`) share every search,
+    maintenance and persistence method — as the reference's one
+    ``search_layer`` serves a graph of any number of layers
+    (src/lib.rs:152-227).
     """
 
     def __init__(
         self,
+        l1: np.ndarray,
         centroids: np.ndarray,
+        parent: np.ndarray,
         assignments: DataFrame,
         *,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         proj: np.ndarray | None = None,
     ):
+        self.l1 = np.asarray(l1, dtype=np.float64)
         self.centroids = np.asarray(centroids, dtype=np.float64)
+        self.parent = np.asarray(parent, dtype=np.int64)
         self.assignments = assignments
         self.id_col = id_col
         self.vec_col = vec_col
@@ -833,7 +845,9 @@ class IVFIndex:
 
     @property
     def num_cells(self) -> int:
-        return int(self.centroids.shape[0])
+        """Used cell ids — the denominator of a fraction-expressed
+        probe budget."""
+        return int((self.parent >= 0).sum())
 
     def nprobe_for_frac(self, target_frac: float) -> int:
         """nprobe probing ~``target_frac`` of this index's cells —
@@ -852,8 +866,26 @@ class IVFIndex:
         return _nprobe_for_rows_frac(self.cell_stats(), target_rows_frac)
 
     def _cell_geometry(self):
-        """Cell-ranking kernel geometry (``_cell_rank_fn``)."""
-        return _flat_geometry(self.centroids, self.proj)
+        """Cell-ranking kernel geometry (``_cell_rank_fn``): one block
+        per super-cell holding its used ids in id order (unused ids,
+        parent -1, sort before every block)."""
+        order = np.argsort(self.parent, kind="stable")
+        cut = np.searchsorted(self.parent[order], np.arange(len(self.l1) + 1))
+        blocks = [
+            (order[a:b], self.centroids[order[a:b]])
+            for a, b in zip(cut[:-1], cut[1:])
+        ]
+        return self.l1, blocks, self.proj
+
+    def _budget(self, nprobe_l1, nprobe, target_frac) -> tuple[int, int]:
+        """Resolved (nprobe_l1, nprobe). Defaults: every super-cell, and
+        8 cells on a flat index or half of all cells on a two-level one
+        (see :meth:`search`)."""
+        default = 8 if len(self.l1) == 1 else max(1, self.num_cells // 2)
+        return (
+            len(self.l1) if nprobe_l1 is None else nprobe_l1,
+            _resolve_nprobe(nprobe, target_frac, self.num_cells, default=default),
+        )
 
     # -- build (replaces build_index, src/lib.rs:336-341) -----------------
 
@@ -869,7 +901,10 @@ class IVFIndex:
         vec_col: str = "embedding",
         coarse_dim: int | None = None,
     ) -> "IVFIndex":
-        """``coarse_dim`` (round 9, found by the 384-d scaling study):
+        """Flat build: one KMeans fit of ``num_cells`` centroids under
+        one super-cell.
+
+        ``coarse_dim`` (round 9, found by the 384-d scaling study):
         fit the cell geometry in a PCA-reduced space instead of the raw
         dimension. At high d, Lloyd's on (near-)isotropic data
         degenerates — a centroid that averages m points shrinks toward
@@ -915,15 +950,25 @@ class IVFIndex:
         )
         centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
         return cls(
-            centroids, assignments, id_col=id_col, vec_col=vec_col, proj=proj
+            np.zeros((1, centroids.shape[1])),
+            centroids,
+            np.zeros(len(centroids), dtype=np.int64),
+            assignments,
+            id_col=id_col,
+            vec_col=vec_col,
+            proj=proj,
         )
 
     # -- persistence (absent in the reference; free here) -----------------
 
     def save(self, spark: SparkSession, path: str) -> None:
-        # centroids written LAST: its _SUCCESS marker implies the whole
-        # index (assignments + optional projection) committed.
-        #
+        """Persist as plain parquet: assignments partitioned by cell_id,
+        the projection (when projected), ``l1/``, then the cell table
+        ``(cell_id, parent, centroid)`` LAST — its _SUCCESS marker
+        implies the whole index committed. Every table is overwritten,
+        so a re-save over any earlier index at the path leaves nothing
+        stale (load keys the projection on GEOM_COL's presence in the
+        rewritten assignments)."""
         # repartition("cell_id") before the partitioned write: without
         # it every shuffle partition holding rows of a cell writes its
         # own file into that cell's directory — shuffle_partitions x
@@ -943,12 +988,17 @@ class IVFIndex:
             spark.createDataFrame(
                 prows, "row_idx INT, coeffs ARRAY<DOUBLE>"
             ).coalesce(1).write.mode("overwrite").parquet(f"{path}/proj")
-        cent = [
-            (int(i), [float(x) for x in row]) for i, row in enumerate(self.centroids)
-        ]
-        spark.createDataFrame(cent, "cell_id INT, centroid ARRAY<DOUBLE>").coalesce(
+        l1 = [(int(i), [float(x) for x in row]) for i, row in enumerate(self.l1)]
+        spark.createDataFrame(l1, "super_id INT, centroid ARRAY<DOUBLE>").coalesce(
             1
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
+        ).write.mode("overwrite").parquet(f"{path}/l1")
+        cells = [
+            (int(c), int(p), [float(x) for x in row])
+            for c, (p, row) in enumerate(zip(self.parent, self.centroids))
+        ]
+        spark.createDataFrame(
+            cells, "cell_id INT, parent INT, centroid ARRAY<DOUBLE>"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/cells")
 
     @classmethod
     def load(
@@ -959,10 +1009,8 @@ class IVFIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> "IVFIndex":
-        cent_rows = (
-            spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
-        )
-        centroids = np.vstack([np.asarray(r["centroid"]) for r in cent_rows])
+        cells = spark.read.parquet(f"{path}/cells").orderBy("cell_id").collect()
+        l1 = spark.read.parquet(f"{path}/l1").orderBy("super_id").collect()
         assignments = spark.read.parquet(f"{path}/assignments")
         proj = None
         if GEOM_COL in assignments.columns:
@@ -971,32 +1019,60 @@ class IVFIndex:
             )
             proj = np.vstack([np.asarray(r["coeffs"]) for r in prows])
         return cls(
-            centroids, assignments, id_col=id_col, vec_col=vec_col, proj=proj
+            np.vstack([np.asarray(r["centroid"]) for r in l1]),
+            np.vstack([np.asarray(r["centroid"]) for r in cells]),
+            np.asarray([r["parent"] for r in cells]),
+            assignments,
+            id_col=id_col,
+            vec_col=vec_col,
+            proj=proj,
         )
 
     # -- search (replaces HnswIndex::search, src/lib.rs:152-169) ----------
 
-    def _probe_cells(self, query: np.ndarray, nprobe: int) -> list[int]:
-        return _rank_rows(self._cell_geometry(), [query], 1, nprobe)[0]
+    def _probe_cells(
+        self, query: np.ndarray, nprobe: int, *, nprobe_l1: int | None = None
+    ) -> list[int]:
+        nprobe_l1 = len(self.l1) if nprobe_l1 is None else nprobe_l1
+        return _rank_rows(self._cell_geometry(), [query], nprobe_l1, nprobe)[0]
 
     def search(
         self,
         query,
         k: int,
         *,
+        nprobe_l1: int | None = None,
         nprobe: int | None = None,
         target_frac: float | None = None,
     ) -> DataFrame:
-        """Single-query ANN: probe nprobe cells, exact re-rank to top-k.
+        """Single-query ANN: probe ``nprobe`` cells drawn from the
+        ``nprobe_l1`` closest super-cells, exact re-rank to top-k.
 
         The cell filter is a pushed-down ``cell_id IN (...)`` predicate —
         on cell-partitioned Parquet that is partition pruning, the IVF
-        analogue of HNSW skipping unvisited graph regions. The probe
-        budget is ``nprobe`` cells (default 8) or, rebuild-safe, the
-        cell fraction ``target_frac`` (see ``nprobe_for_frac``).
+        analogue of HNSW skipping unvisited graph regions. ``target_frac``
+        expresses the cell budget as a cell fraction instead
+        (rebuild-safe; see ``nprobe_for_frac``).
+
+        Defaults rank every super-cell (the L1 table is sqrt(K) rows,
+        ranking it costs nothing) and probe 8 cells on a flat index or
+        half of all cells on a two-level one — the recall-equivalent
+        operating point at the same probed-corpus fraction. Measured on
+        sf0.01 (structure-free uniform corpus, the worst case): hier
+        (8, 32) -> 0.931 recall@10 vs flat (nprobe=8 of 16) -> 0.913;
+        the old hier default (3, 8) probed only 12.5% of the corpus and
+        scored 0.512-0.550 — an unequal-budget comparison, not an
+        operator deficiency.
+
+        Crossover guidance (SCALE.md): L1 pruning (``nprobe_l1 < k1``)
+        only pays when sqrt(K) centroids no longer fit a broadcast /
+        single argsort — i.e. K ≳ 1e6 cells. Below that, keep every
+        super-cell and spend the budget on ``nprobe``; the hierarchy's
+        real win at small K is the parallel BUILD (per-super-cell L2
+        fits) and the 2*sqrt(K) assignment pass.
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
-        cells = self._probe_cells(query, nprobe)
+        nprobe_l1, nprobe = self._budget(nprobe_l1, nprobe, target_frac)
+        cells = self._probe_cells(query, nprobe, nprobe_l1=nprobe_l1)
         cand = self.assignments.filter(F.col("cell_id").isin(cells))
         return knn_exact(cand, list(map(float, query)), k,
                          id_col=self.id_col, vec_col=self.vec_col)
@@ -1008,6 +1084,7 @@ class IVFIndex:
         *,
         metadata: DataFrame,
         predicate,
+        nprobe_l1: int | None = None,
         nprobe: int | None = None,
         target_frac: float | None = None,
         meta_id_col: str | None = None,
@@ -1019,7 +1096,7 @@ class IVFIndex:
         fewer than k whenever matches are sparse among the unfiltered
         neighbors; pre-filtering is the standard fix, cf. Qdrant/Vespa
         filtered-search docs and the filtered-ANN track of big-ANN
-        benchmarks.)
+        benchmarks.) Probe budget and defaults as :meth:`search`.
 
         ``metadata`` maps ids to filterable attributes; ``predicate`` is
         a Column over it. Scale: the predicate filters metadata FIRST
@@ -1031,8 +1108,8 @@ class IVFIndex:
         probing when |matches| << |probed cells|; the caller sees
         identical results either way, so the flip is a pure cost choice.
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
-        cells = self._probe_cells(np.asarray(query, dtype=np.float64), nprobe)
+        nprobe_l1, nprobe = self._budget(nprobe_l1, nprobe, target_frac)
+        cells = self._probe_cells(query, nprobe, nprobe_l1=nprobe_l1)
         cand = self.assignments.filter(F.col("cell_id").isin(cells))
         keep = metadata.filter(predicate).select(
             F.col(meta_id_col or self.id_col).alias(self.id_col)
@@ -1047,6 +1124,7 @@ class IVFIndex:
         queries: DataFrame,
         k: int,
         *,
+        nprobe_l1: int | None = None,
         nprobe: int | None = None,
         target_frac: float | None = None,
         query_id_col: str = "query_id",
@@ -1056,25 +1134,24 @@ class IVFIndex:
         """Batch ANN, fully declarative (no driver-side per-query loop):
 
         1. one ``mapInPandas`` pass ranks each query's cells with the
-           broadcast centroids (``_probed_pairs``) -> its top-nprobe
+           broadcast geometry (``_probed_pairs``) -> its top-nprobe
            (query, cell) pairs;
         2. the probed pairs cogroup with the assignments on cell_id,
            one BLAS matmul per cell (``_cogroup_blas_topk``);
         3. per-query top-k via ranking window.
 
-        Probe budget: ``nprobe`` cells (default 8) or the rebuild-safe
-        cell fraction ``target_frac`` (see ``nprobe_for_frac``).
+        Probe budget and defaults as :meth:`search`.
 
         Candidate scoring has one path at every batch size (the r14
         sweep measured BLAS ahead of the Catalyst zip_with/aggregate
         form at all 9 points, 1.2-13.2x; SCALE.md r14). Building the
         plan runs no Spark job.
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
+        nprobe_l1, nprobe = self._budget(nprobe_l1, nprobe, target_frac)
         probed = _probed_pairs(
             queries.select(query_id_col, query_vec_col),
             self._cell_geometry(),
-            nprobe_l1=1,
+            nprobe_l1=nprobe_l1,
             nprobe=nprobe,
             vec_col=query_vec_col,
         )
@@ -1095,6 +1172,7 @@ class IVFIndex:
         queries: DataFrame,
         k: int,
         *,
+        nprobe_l1: int | None = None,
         nprobe: int | None = None,
         target_frac: float | None = None,
         query_id_col: str = "query_id",
@@ -1102,16 +1180,15 @@ class IVFIndex:
         round_digits: int | None = 4,
     ) -> DataFrame:
         """Batch ANN over a PERSISTED cell-partitioned index — the
-        production serving shape. Probe budget: ``nprobe`` cells
-        (default 8) or the rebuild-safe cell fraction ``target_frac``
-        (see ``nprobe_for_frac`` — the r12 drift study measured recall
-        0.994 -> 0.856 from serving a rebuilt index at a stale absolute
-        nprobe).
+        production serving shape. Probe budget and defaults as
+        :meth:`search` (the r12 drift study measured recall 0.994 ->
+        0.856 from serving a rebuilt index at a stale absolute nprobe;
+        ``target_frac`` is the rebuild-safe form).
 
-        Probe cells are computed driver-side against the centroid matrix
-        (tiny by construction: num_cells x dim), so the candidate scan
-        carries a STATIC ``cell_id IN (...)`` predicate. On the
-        cell-partitioned Parquet written by :meth:`save` that is
+        Probe cells are ranked driver-side against the geometry (tiny by
+        construction: about 2·sqrt(K) rows two-level, K flat), so the
+        candidate scan carries a STATIC ``cell_id IN (...)`` predicate.
+        On the cell-partitioned Parquet written by :meth:`save` that is
         partition pruning (visible as ``PartitionFilters`` in the plan):
         only the probed cells' files are read — the IVF analogue of HNSW
         skipping unvisited graph regions, without relying on dynamic
@@ -1120,16 +1197,16 @@ class IVFIndex:
         the same bounded collect. Candidate scoring is
         :meth:`search_batch`'s per-cell kernel (``_cell_topk_fn``) fed by
         the pruned scan (``_pruned_blas_topk``), so results match
-        :meth:`search_batch` at the same nprobe — modulo a distance
+        :meth:`search_batch` at the same budget — modulo a distance
         within one ulp of a rounding boundary, where a different BLAS
         blocking of the same cell can round it apart.
         """
-        nprobe = _resolve_nprobe(nprobe, target_frac, self.num_cells, default=8)
+        nprobe_l1, nprobe = self._budget(nprobe_l1, nprobe, target_frac)
         q_rows = bounded_query_collect(
             queries,
             query_id_col,
             query_vec_col,
-            caller="IVFIndex.search_batch_pruned",
+            caller=f"{type(self).__name__}.search_batch_pruned",
             reroute=(
                 "index.search_batch(queries, k, nprobe=..., "
                 f"query_id_col={query_id_col!r}, "
@@ -1138,7 +1215,7 @@ class IVFIndex:
             ),
         )
         vecs = [[float(x) for x in r[query_vec_col]] for r in q_rows]
-        cells = _rank_rows(self._cell_geometry(), vecs, 1, nprobe)
+        cells = _rank_rows(self._cell_geometry(), vecs, nprobe_l1, nprobe)
         data = [
             (r[query_id_col], v, c)
             for r, v, cs in zip(q_rows, vecs, cells)
@@ -1155,17 +1232,18 @@ class IVFIndex:
         )
 
     def assign_new(self, new_vectors: DataFrame) -> "IVFIndex":
-        """Incrementally index NEW vectors against the EXISTING centroids
+        """Incrementally index NEW vectors against the EXISTING geometry
         (no refit): one ``mapInPandas`` pass of the cell-ranking kernel
         over the new rows (``_assign_cells``: no join, window or
-        exchange), unioned into the assignments. This is the streaming-ingest
-        companion (see streaming/ingest.py) — the reference cannot do
-        this at all (its graph is build-once per process). Periodic full
-        rebuilds remain advisable once drift accumulates, as in any IVF
-        system.
+        exchange, and the same placement rule as the build), unioned
+        into the assignments. This is the streaming-ingest companion
+        (see streaming/ingest.py) — the reference cannot do this at all
+        (its graph is build-once per process). Periodic full rebuilds
+        remain advisable once drift accumulates, as in any IVF system
+        (``rebuild_due`` over ``occupancy_stats``).
 
-        Returns a NEW IVFIndex (same centroids, extended assignments);
-        the receiver is untouched — same purity contract as
+        Returns a NEW index (same geometry, extended assignments); the
+        receiver is untouched — same purity contract as
         ``split_hot_cells``/``rebalance``, so a caller keeping the
         pre-ingest index for per-shard serving is safe."""
         # re-projected with THIS index's transform (an incoming shard's
@@ -1176,8 +1254,10 @@ class IVFIndex:
             id_col=self.id_col,
             vec_col=self.vec_col,
         )
-        return IVFIndex(
+        return type(self)(
+            self.l1,
             self.centroids,
+            self.parent,
             self.assignments.unionByName(assigned),
             id_col=self.id_col,
             vec_col=self.vec_col,
@@ -1192,7 +1272,9 @@ class IVFIndex:
         re-assigned to this index's nearest cells in one
         broadcast-centroid argmin pass (``assign_new``) over the other
         side only — this index's assignment table is untouched, no
-        KMeans refit, nothing corpus-sized shuffles. Ids are assumed
+        KMeans refit, nothing corpus-sized shuffles. Only ``other``'s
+        (id, vector) rows are read, so a flat shard merges into a
+        two-level receiver and vice versa. Ids are assumed
         disjoint (shards partition the corpus by construction);
         ``merge_verdict``/``cell_stats`` pin exactly-one-cell-per-id
         after the fact. When shard distributions differ enough to
@@ -1258,19 +1340,22 @@ class IVFIndex:
         """Index maintenance under drift: ``assign_new`` funnels new
         vectors into EXISTING cells, so a shifting distribution piles
         rows into a few cells and probe cost degrades toward a scan of
-        the hot cell. This repairs occupancy WITHOUT the full refit:
-        every cell with occupancy > ``factor`` x mean is split in two
-        by a seeded local 2-means over (a bounded sample of) its own
-        vectors; one half keeps the cell id, the other gets a fresh id
-        appended after the existing centroids — ids of cold cells (and
-        the saved parquet partitions holding them) never change.
+        the hot cell (measured on the two-level index at 500k + 8 OOD
+        batches: recall 0.74-0.81 before repair, SCALE.md r12). This
+        repairs occupancy WITHOUT the full refit: every cell with
+        occupancy > ``factor`` x mean is split in two by a seeded local
+        2-means over (a bounded sample of) its own vectors. Sub-0 keeps
+        the cell id (its centroid updates in place); sub-1 takes the
+        next id, ``len(centroids)``, in the hot cell's parent block —
+        ids of cold cells (and the saved parquet partitions holding
+        them) never change.
 
         Cost shape: the per-cell fits run in PARALLEL (one
         ``applyInPandas`` group per hot cell — the HierarchicalIVF
         level-2 discipline); only HOT-cell rows are re-scored, against
         exactly 2 centroids each; cold rows are untouched. Driver-side
         state is the occupancy table (num_cells rows) and 2 x |hot|
-        sub-centroids. Returns a NEW IVFIndex (assignments lazily
+        sub-centroids. Returns a NEW index (assignments lazily
         re-derived; the caller persists/saves as usual)."""
         occ = {
             r["cell_id"]: r["n_vectors"] for r in self.cell_stats().collect()
@@ -1293,15 +1378,14 @@ class IVFIndex:
             max_cell_fit_rows=max_cell_fit_rows,
         )
 
-        k_old = self.centroids.shape[0]
+        k_old = len(self.centroids)
         new_centroids = self.centroids.copy()
         new_id = {}
-        appended = []
         for i, c in enumerate(hot):
             new_centroids[c] = subs[(c, 0)]
             new_id[c] = k_old + i
-            appended.append(subs[(c, 1)])
-        new_centroids = np.vstack([new_centroids] + appended)
+        new_centroids = np.vstack([new_centroids] + [subs[(c, 1)] for c in hot])
+        new_parent = np.concatenate([self.parent, self.parent[hot]])
 
         carry = [self.id_col, vec_col] + (
             [GEOM_COL] if self.proj is not None else []
@@ -1312,8 +1396,10 @@ class IVFIndex:
         cold = self.assignments.filter(~F.col("cell_id").isin(hot)).select(
             *carry, "cell_id"
         )
-        return IVFIndex(
+        return type(self)(
+            self.l1,
             new_centroids,
+            new_parent,
             cold.unionByName(reassigned),
             id_col=self.id_col,
             vec_col=vec_col,
@@ -1418,49 +1504,13 @@ def build_auto(
     )
 
 
-class LSHIndex:
-    """Euclidean LSH alternative (stock pyspark.ml
-    BucketedRandomProjectionLSH) behind the same search interface —
-    SURVEY.md §7 M5 keeps both, picked by measured recall/latency."""
-
-    def __init__(self, corpus: DataFrame, *, bucket_length: float = 4.0,
-                 num_hash_tables: int = 4, seed: int = DEFAULT_SEED,
-                 id_col: str = "vec_id", vec_col: str = "embedding"):
-        from pyspark.ml.feature import BucketedRandomProjectionLSH
-        from pyspark.ml.functions import array_to_vector
-
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self._feat = corpus.select(
-            F.col(id_col),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("_features"),
-        )
-        self._lsh = BucketedRandomProjectionLSH(
-            inputCol="_features",
-            outputCol="_hashes",
-            bucketLength=bucket_length,
-            numHashTables=num_hash_tables,
-            seed=seed,
-        ).fit(self._feat)
-        self._hashed = self._lsh.transform(self._feat)
-
-    def search(self, query, k: int) -> DataFrame:
-        from pyspark.ml.linalg import Vectors
-
-        res = self._lsh.approxNearestNeighbors(
-            self._hashed, Vectors.dense([float(x) for x in query]), k,
-            distCol="_eucl"
-        )
-        return res.select(
-            F.col(self.id_col).alias("vec_id"),
-            F.round(F.col("_eucl") * F.col("_eucl"), 4).alias("dist"),
-        ).orderBy("dist", "vec_id")
-
-
-class HierarchicalIVF:
+class HierarchicalIVF(IVFIndex):
     """Two-level IVF coarse quantizer — the standard escape when the
     cell count outgrows a single KMeans fit (SCALE.md: ~3e5 cells at
     1e11 vectors makes one flat KMeans|| fit the build bottleneck).
+    Only the build differs from :class:`IVFIndex`; the result is the
+    same geometry with ``k1`` super-cells instead of one, so every
+    search, maintenance and persistence method is ``IVFIndex``'s.
 
     Build (all cluster-parallel):
     1. level-1: stock pyspark.ml KMeans over a bounded sample ->
@@ -1471,117 +1521,15 @@ class HierarchicalIVF:
        thousand sample rows per group, no sklearn dependency). The
        expensive part of a huge-k build becomes an embarrassingly
        parallel stage instead of one giant fit;
-    3. assignment: one Arrow pass over the corpus computes
-       ``argmin`` against the broadcast (k1 x dim) matrix, then against
-       that super-cell's (k2 x dim) block — 2·sqrt(K) distance rows per
-       vector instead of K for the flat index.
+    3. assignment: one Arrow pass of the cell-ranking kernel over the
+       corpus — the (k1 x dim) argmin, then that super-cell's block:
+       2·sqrt(K) distance rows per vector instead of K for the flat
+       index.
 
-    Search mirrors the build asymmetry: rank super-cells (tiny), rank
-    sub-cells inside the probed super-cells, then a partition-prunable
-    ``cell_id IN (...)`` candidate scan + exact re-rank, exactly like
-    the flat ``IVFIndex`` probe. Assignment and every probe path run
-    the one cell-ranking kernel, ``_cell_rank_fn``.
+    Super-cell ``l1``'s sub-cells take ids ``l1 * k2 + j``; a block the
+    fit sample under-fills leaves its tail ids unused (NaN rows, parent
+    -1).
     """
-
-    def __init__(
-        self,
-        l1_centroids: np.ndarray,
-        l2_centroids: dict[int, np.ndarray],
-        assignments: DataFrame,
-        *,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        k2_stride: int | None = None,
-        proj: np.ndarray | None = None,
-        overflow: dict | None = None,
-    ):
-        self.l1_centroids = np.asarray(l1_centroids, dtype=np.float64)
-        self.l2_centroids = {int(k): np.asarray(v, dtype=np.float64) for k, v in l2_centroids.items()}
-        # Overflow cells (round 13, drift repair): cells created by
-        # split_hot_cells AFTER build, living OUTSIDE the composite
-        # l1*stride+l2 id range (ids >= k1*stride, so saved partitions
-        # and the stride decode never change). Each maps
-        # cell_id -> (parent_l1, centroid); an overflow cell behaves as
-        # one more sub-cell of its parent super-cell in every probe,
-        # ranking, and assignment path.
-        self.overflow = {
-            int(c): (int(p), np.asarray(v, dtype=np.float64))
-            for c, (p, v) in (overflow or {}).items()
-        }
-        self.assignments = assignments
-        self.id_col = id_col
-        self.vec_col = vec_col
-        # Reduced-space coarse geometry (round 10): the flat index's
-        # round-9 coarse_dim fix, threaded through BOTH levels — the
-        # level-1 KMeans has the identical high-d winner-take-all
-        # collapse mechanism (a mean-shrunk centroid beats every
-        # data-like centroid at ~sqrt(d)·sigma vs ~sqrt(2d)·sigma).
-        # When set, l1/l2 centroids live in the projected space,
-        # assignments carry GEOM_COL, and exact re-rank always reads
-        # the original vec_col.
-        self.proj = None if proj is None else np.asarray(proj, dtype=np.float64)
-        # The composite-cell encoding is cell_id = l1 * stride + l2 with
-        # the stride FIXED AT BUILD TIME (the requested k2), not inferred
-        # from the realized sub-block sizes: if every super-cell
-        # under-fills (tiny fit sample), max(len(block)) < the build
-        # stride and every probe would decode cell ids on the wrong
-        # stride. ``save``/``load`` round-trip it explicitly.
-        self.k2 = (
-            int(k2_stride)
-            if k2_stride is not None
-            else max(len(v) for v in self.l2_centroids.values())
-        )
-
-    @property
-    def num_cells(self) -> int:
-        """Total sub-cells (incl. overflow) — the denominator of a
-        fraction-expressed probe budget, mirroring
-        ``IVFIndex.num_cells``."""
-        return sum(len(v) for v in self.l2_centroids.values()) + len(
-            self.overflow
-        )
-
-    def nprobe_for_frac(self, target_frac: float) -> int:
-        """nprobe probing ~``target_frac`` of this index's composite
-        cells (see ``IVFIndex.nprobe_for_frac`` and ``_resolve_nprobe``
-        for the measured rebuild footgun this exists to close)."""
-        return _resolve_nprobe(
-            None, target_frac, self.num_cells, default=8
-        )
-
-    def nprobe_for_rows_frac(self, target_rows_frac: float) -> int:
-        """Worst-case ROWS-budget nprobe over the composite cells —
-        same contract as ``IVFIndex.nprobe_for_rows_frac``."""
-        return _nprobe_for_rows_frac(self.cell_stats(), target_rows_frac)
-
-    @property
-    def geom_col(self) -> str:
-        """Column carrying the cell-geometry vectors — same contract
-        as ``IVFIndex.geom_col`` (the PQ builder reads it on either
-        class)."""
-        return GEOM_COL if self.proj is not None else self.vec_col
-
-    _PHANTOM_CENTROID = 1e15  # unused composite slots: never probed
-
-    def pq_cell_centroids(self) -> np.ndarray:
-        """Dense (max_cell_id+1, geom_dim) centroid matrix over the
-        COMPOSITE cell ids — the surface ``IVFPQIndex.build`` needs to
-        treat this class like the flat one (round 14: quantized serving
-        on the serving-scale class). Composite ids are l1*stride+l2;
-        under-filled blocks leave gaps, which get a far-away phantom
-        centroid (1e15 per axis) so flat probe ranking can never select
-        an empty slot; overflow cells land at their own ids."""
-        gdim = self.l1_centroids.shape[1]
-        max_id = self.k2 * len(self.l1_centroids) - 1
-        if self.overflow:
-            max_id = max(max_id, max(self.overflow))
-        out = np.full((max_id + 1, gdim), self._PHANTOM_CENTROID)
-        for l1, block in self.l2_centroids.items():
-            for l2, row in enumerate(block):
-                out[l1 * self.k2 + l2] = row
-        for cid, (_, cent) in self.overflow.items():
-            out[cid] = cent
-        return out
 
     @classmethod
     def build(
@@ -1650,542 +1598,31 @@ class HierarchicalIVF:
             .applyInPandas(fit_group, schema="l1 INT, l2 INT, centroid ARRAY<DOUBLE>")
             .collect()
         )
-        l2_cent: dict[int, list] = {}
-        for r in sorted(cent_rows, key=lambda r: (r["l1"], r["l2"])):
-            l2_cent.setdefault(r["l1"], []).append(r["centroid"])
-        l2_cent_np = {k_: np.asarray(v) for k_, v in l2_cent.items()}
+        centroids = np.full((k1 * k2, l1_cent.shape[1]), np.nan)
+        parent = np.full(k1 * k2, -1, dtype=np.int64)
+        for r in cent_rows:
+            c = r["l1"] * k2 + r["l2"]
+            centroids[c], parent[c] = r["centroid"], r["l1"]
         # A KMeans cluster can end up empty on the sample; give such a
         # super-cell its own centroid as the single sub-centroid so
         # corpus vectors landing there still get a valid cell.
         for l1 in range(k1):
-            if l1 not in l2_cent_np:
-                l2_cent_np[l1] = l1_cent[l1 : l1 + 1]
+            if l1 not in parent:
+                centroids[l1 * k2], parent[l1 * k2] = l1_cent[l1], l1
 
         idx = cls(
-            l1_cent,
-            l2_cent_np,
-            None,
-            id_col=id_col,
-            vec_col=vec_col,
-            k2_stride=k2,
-            proj=proj,
+            l1_cent, centroids, parent, None, id_col=id_col, vec_col=vec_col, proj=proj
         )
         # Full-corpus assignment: one Arrow pass of the cell-ranking
-        # kernel at nprobe_l1 = nprobe = 1 — the l1 argmin, then the
-        # winning super-cell's block (2*sqrt(K) rows per vector). With
-        # coarse_dim the pass projects each batch itself; the emitted
-        # row keeps the ORIGINAL vector plus GEOM_COL, the flat index's
-        # layout (load keys on the column's presence). Id and vector
-        # columns keep the caller's names and types.
+        # kernel at nprobe_l1 = nprobe = 1. With coarse_dim the pass
+        # projects each batch itself; the emitted row keeps the
+        # ORIGINAL vector plus GEOM_COL, the flat index's layout (load
+        # keys on the column's presence). Id and vector columns keep
+        # the caller's names and types.
         idx.assignments = _assign_cells(
             corpus, idx._cell_geometry(), id_col=id_col, vec_col=vec_col
         )
         return idx
-
-    def _cell_geometry(self):
-        """Cell-ranking kernel geometry (``_cell_rank_fn``): one block
-        per super-cell — its composite sub-cells, then its overflow
-        cells in id order."""
-        blocks = []
-        for l1 in range(len(self.l1_centroids)):
-            cents = self.l2_centroids[l1]
-            ov = sorted(c for c, (p, _) in self.overflow.items() if p == l1)
-            ids = np.concatenate(
-                [l1 * self.k2 + np.arange(len(cents)), np.asarray(ov, dtype=int)]
-            )
-            blocks.append(
-                (ids, np.vstack([cents] + [self.overflow[c][1] for c in ov]))
-            )
-        return self.l1_centroids, blocks, self.proj
-
-    def _probe_cells(self, query, *, nprobe_l1: int, nprobe: int) -> list[int]:
-        return _rank_rows(self._cell_geometry(), [query], nprobe_l1, nprobe)[0]
-
-    def search(
-        self,
-        query,
-        k: int,
-        *,
-        nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-    ) -> DataFrame:
-        """Probe ``nprobe`` sub-cells drawn from the ``nprobe_l1``
-        closest super-cells, then exact re-rank. ``target_frac``
-        expresses the sub-cell budget as a cell fraction instead
-        (rebuild-safe; see ``nprobe_for_frac``).
-
-        Defaults are the RECALL-EQUIVALENT operating point vs the flat
-        ``IVFIndex`` at the same probed-corpus fraction: rank ALL
-        super-cells (``nprobe_l1=k1`` — the L1 table is sqrt(K) rows,
-        ranking it costs nothing) and take half of all sub-cells
-        (matching flat's ``nprobe=8`` of 16). Measured on sf0.01
-        (structure-free uniform corpus, the worst case): hier (8, 32)
-        -> 0.931 recall@10 vs flat (nprobe=8) -> 0.913. The OLD default
-        (3, 8) probed only 12.5% of the corpus and scored 0.512-0.550 —
-        an unequal-budget comparison, not an operator deficiency.
-
-        Crossover guidance (SCALE.md): L1 pruning (``nprobe_l1 < k1``)
-        only pays when sqrt(K) centroids no longer fit a broadcast /
-        single argsort — i.e. K ≳ 1e6 cells. Below that, keep
-        ``nprobe_l1=k1`` and spend the probe budget on ``nprobe``; the
-        hierarchy's real win at small K is the parallel BUILD (per-
-        super-cell L2 fits) and the 2*sqrt(K) assignment pass, not
-        search-time L1 pruning.
-        """
-        if nprobe_l1 is None:
-            nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        cells = self._probe_cells(query, nprobe_l1=nprobe_l1, nprobe=nprobe)
-        cand = self.assignments.filter(F.col("cell_id").isin(cells))
-        return knn_exact(cand, list(map(float, query)), k,
-                         id_col=self.id_col, vec_col=self.vec_col)
-
-    def search_batch(
-        self,
-        queries: DataFrame,
-        k: int,
-        *,
-        nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_embedding",
-        round_digits: int | None = 4,
-    ) -> DataFrame:
-        """Batch probe, fully declarative (no driver-side per-query
-        loop) — the two-level twin of ``IVFIndex.search_batch``:
-
-        1. one ``mapInPandas`` pass (``_probed_pairs``) ranks each
-           query's top-``nprobe_l1`` super-cells, then the sub-cells
-           (overflow cells included) they expose -> its top-``nprobe``
-           (query, composite cell) pairs;
-        2. the probed pairs cogroup with the assignments, one BLAS
-           matmul per cell (``_cogroup_blas_topk``), then per-query
-           top-k via ranking window.
-
-        Defaults mirror :meth:`search`: all super-cells, half of all
-        sub-cells (the flat-equivalent probe budget). ``target_frac``
-        expresses the sub-cell budget as a cell fraction instead
-        (rebuild-safe; see ``nprobe_for_frac``). Building the plan
-        runs no Spark job.
-        """
-        if nprobe_l1 is None:
-            nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        probed = _probed_pairs(
-            queries.select(query_id_col, query_vec_col),
-            self._cell_geometry(),
-            nprobe_l1=nprobe_l1,
-            nprobe=nprobe,
-            vec_col=query_vec_col,
-        )
-        return _cogroup_blas_topk(
-            probed,
-            self.assignments,
-            k,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            round_digits=round_digits,
-            query_id_type=queries.schema[query_id_col].dataType.simpleString(),
-        )
-
-    def search_batch_pruned(
-        self,
-        queries: DataFrame,
-        k: int,
-        *,
-        nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_embedding",
-        round_digits: int | None = 4,
-    ) -> DataFrame:
-        """Batch ANN over a PERSISTED cell-partitioned hierarchical
-        index — the production serving shape, the two-level twin of
-        :meth:`IVFIndex.search_batch_pruned` (round 11, verdict item 3).
-        ``target_frac`` expresses the sub-cell budget as a cell
-        fraction instead of an absolute nprobe (rebuild-safe; see
-        ``nprobe_for_frac``).
-
-        Both centroid levels are driver-resident by construction
-        (k1 + k1·k2 ≈ 2·sqrt(K) rows), so the two-stage probe ranking
-        runs driver-side and the candidate scan carries a STATIC
-        ``cell_id IN (...)`` predicate over the COMPOSITE cells. On the
-        cell-partitioned Parquet written by :meth:`save` that is
-        partition pruning (``PartitionFilters`` in the plan): only the
-        probed cells' files are read — probed bytes scale with nprobe
-        cells, not with N. Queries are broadcast-small by contract
-        (same as ``knn_batch``); scoring is :meth:`search_batch`'s
-        per-cell kernel, so results match it at the same
-        (nprobe_l1, nprobe) modulo rounding-boundary ulp ties (see
-        :meth:`IVFIndex.search_batch_pruned`). Reduced-geometry
-        (``coarse_dim``) indexes rank probes in the projected space via
-        :meth:`_probe_cells`; the exact re-rank below always reads the
-        original vectors."""
-        if nprobe_l1 is None:
-            nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        # Bounded collect (round 12): same broadcast-small contract and
-        # same loud guard as knn_batch / IVFIndex.search_batch_pruned.
-        q_rows = bounded_query_collect(
-            queries,
-            query_id_col,
-            query_vec_col,
-            caller="HierarchicalIVF.search_batch_pruned",
-            reroute=(
-                "index.search_batch(queries, k, nprobe_l1=..., nprobe=..., "
-                f"query_id_col={query_id_col!r}, "
-                f"query_vec_col={query_vec_col!r}) — the distributed "
-                "assign-then-join path with no driver collect"
-            ),
-        )
-        vecs = [[float(x) for x in r[query_vec_col]] for r in q_rows]
-        cells = _rank_rows(self._cell_geometry(), vecs, nprobe_l1, nprobe)
-        data = [
-            (r[query_id_col], v, c)
-            for r, v, cs in zip(q_rows, vecs, cells)
-            for c in cs
-        ]
-        return _pruned_blas_topk(
-            self.assignments,
-            data,
-            k,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            round_digits=round_digits,
-            query_id_type=queries.schema[query_id_col].dataType.simpleString(),
-        )
-
-    def assign_new(self, new_vectors: DataFrame) -> "HierarchicalIVF":
-        """Incrementally index NEW vectors against the EXISTING two-level
-        centroid structure (no refit) — ingest parity with
-        ``IVFIndex.assign_new`` (round 12), on the index class sized for
-        serving-scale cell counts. One Arrow pass over the new rows runs
-        the SAME two-stage argmin as build's assignment
-        (``_assign_cells`` over the cell-ranking kernel, so ingest
-        placement equals build placement by construction), then unions
-        into the assignments. Returns a NEW HierarchicalIVF; the receiver is
-        untouched (the flat class's purity contract). Drift policy:
-        ``rebuild_due`` over ``assignments``-derived occupancy, same as
-        flat — the r12 drift study's trigger applies per composite
-        cell. The reference cannot ingest at all (build-once graph,
-        src/lib.rs:336-341)."""
-        assigned = _assign_cells(
-            new_vectors,
-            self._cell_geometry(),
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-        )
-        return HierarchicalIVF(
-            self.l1_centroids,
-            self.l2_centroids,
-            self.assignments.unionByName(assigned),
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            k2_stride=self.k2,
-            proj=self.proj,
-            overflow=self.overflow,
-        )
-
-    def search_filtered(
-        self,
-        query,
-        k: int,
-        *,
-        metadata: DataFrame,
-        predicate,
-        nprobe_l1: int | None = None,
-        nprobe: int | None = None,
-        target_frac: float | None = None,
-        meta_id_col: str | None = None,
-    ) -> DataFrame:
-        """Filtered ANN with PRE-filter semantics on the two-level
-        index (round 13 — closes the facade's flat-only restriction).
-        Contract identical to :meth:`IVFIndex.search_filtered` (whose
-        docstring carries the pre-vs-post-filter argument and the scale
-        shape): predicate filters metadata first, a semi-join restricts
-        the probed candidates, exact re-rank returns the true top-k
-        over the QUALIFYING subset."""
-        if nprobe_l1 is None:
-            nprobe_l1 = len(self.l1_centroids)
-        nprobe = _resolve_nprobe(
-            nprobe, target_frac, self.num_cells,
-            default=max(1, self.num_cells // 2),
-        )
-        cells = self._probe_cells(
-            np.asarray(query, dtype=np.float64),
-            nprobe_l1=nprobe_l1,
-            nprobe=nprobe,
-        )
-        cand = self.assignments.filter(F.col("cell_id").isin(cells))
-        keep = metadata.filter(predicate).select(
-            F.col(meta_id_col or self.id_col).alias(self.id_col)
-        )
-        cand = cand.join(keep, self.id_col, "left_semi")
-        return knn_exact(
-            cand, list(map(float, query)), k,
-            id_col=self.id_col, vec_col=self.vec_col,
-        )
-
-    def merge(self, other) -> "HierarchicalIVF":
-        """Merge another index's vectors into THIS index's two-level
-        cell structure — the sharded-build pattern on the class sized
-        for serving-scale cell counts (round 13; semantics identical to
-        :meth:`IVFIndex.merge`, whose docstring carries the full
-        contract: receiver's centroids win, one ``assign_new`` pass
-        over the other side only, ids assumed disjoint, order-invariant
-        under a fixed receiver, chain ``.rebalance()`` for differing
-        shard distributions, NEITHER input modified). ``other`` may be
-        either index class — only its (id, vector) rows are read; its
-        own cell structure is irrelevant to this geometry."""
-        return self.assign_new(
-            other.assignments.select(
-                F.col(other.id_col).alias(self.id_col),
-                F.col(other.vec_col).alias(self.vec_col),
-            )
-        )
-
-    def cell_stats(self) -> DataFrame:
-        """Per-cell occupancy — same contract as ``IVFIndex.cell_stats``."""
-        return (
-            self.assignments.groupBy("cell_id")
-            .agg(F.count(F.lit(1)).alias("n_vectors"))
-            .orderBy("cell_id")
-        )
-
-    def occupancy_stats(self) -> dict:
-        """Occupancy health over the COMPOSITE cells — same contract
-        and remedies as ``IVFIndex.occupancy_stats`` (the r12 drift
-        study's ``rebuild_due`` trigger consumes this on either
-        class)."""
-        return _occupancy_stats(self.assignments)
-
-    def split_hot_cells(
-        self,
-        *,
-        factor: float = 2.0,
-        seed: int = DEFAULT_SEED,
-        max_cell_fit_rows: int = 100_000,
-    ) -> "HierarchicalIVF":
-        """Hot-cell repair for the two-level index (round 13, closing
-        the measured hier-drift gap): ``assign_new`` funnels
-        out-of-distribution vectors into cells whose BUILD-time
-        centroids sit far from the new modes, so probe ranking
-        misorders them and recall decays (measured at 500k + 8 OOD
-        batches: hier 0.74-0.81 vs flat 0.98-0.99 at equal nprobe,
-        SCALE.md r12 — flat could repair via split_hot_cells; hier
-        could not). Same rule as :meth:`IVFIndex.split_hot_cells` —
-        every cell with occupancy > ``factor`` x mean splits in two by
-        a seeded local 2-means (shared ``_fit_hot_subcentroids`` /
-        ``_reassign_hot_rows`` helpers, so both classes split under
-        the identical discipline).
-
-        Id bookkeeping: a split's sub0 keeps the cell id (its centroid
-        updates in place); sub1 becomes an OVERFLOW cell — a fresh id
-        >= k1 x stride carrying its parent super-cell, so the
-        composite encoding, the stride decode, and every saved cold
-        partition stay untouched. Overflow cells participate in probe
-        ranking, declarative batch ranking, and ingest assignment as
-        extra sub-cells of their parent (see ``_cell_geometry``).
-        Returns a NEW index; the receiver is untouched."""
-        occ = {
-            r["cell_id"]: r["n_vectors"] for r in self.cell_stats().collect()
-        }
-        if not occ:
-            return self
-        mean_occ = sum(occ.values()) / len(occ)
-        hot = sorted(
-            c for c, n in occ.items() if n > factor * mean_occ and n >= 2
-        )
-        if not hot:
-            return self
-
-        geom_col = GEOM_COL if self.proj is not None else self.vec_col
-        hot_rows = self.assignments.filter(F.col("cell_id").isin(hot))
-        subs = _fit_hot_subcentroids(
-            hot_rows,
-            geom_col=geom_col,
-            seed=seed,
-            max_cell_fit_rows=max_cell_fit_rows,
-        )
-
-        base = self.k2 * len(self.l1_centroids)
-        next_id = max([base - 1] + list(self.overflow.keys())) + 1
-        new_l2 = {k: v.copy() for k, v in self.l2_centroids.items()}
-        new_overflow = dict(self.overflow)
-        new_id: dict[int, int] = {}
-        for c in hot:
-            if c < base:
-                parent, sub = c // self.k2, c % self.k2
-                new_l2[parent][sub] = subs[(c, 0)]
-            else:
-                parent = self.overflow[c][0]
-                new_overflow[c] = (parent, subs[(c, 0)])
-            new_overflow[next_id] = (parent, subs[(c, 1)])
-            new_id[c] = next_id
-            next_id += 1
-
-        carry = [self.id_col, self.vec_col] + (
-            [GEOM_COL] if self.proj is not None else []
-        )
-        reassigned = _reassign_hot_rows(
-            hot_rows, subs, new_id, geom_col=geom_col, carry=carry
-        )
-        cold = self.assignments.filter(~F.col("cell_id").isin(hot)).select(
-            *carry, "cell_id"
-        )
-        return HierarchicalIVF(
-            self.l1_centroids,
-            new_l2,
-            cold.unionByName(reassigned),
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            k2_stride=self.k2,
-            proj=self.proj,
-            overflow=new_overflow,
-        )
-
-    def rebalance(
-        self,
-        *,
-        factor: float = 2.0,
-        seed: int = DEFAULT_SEED,
-        max_rounds: int = 4,
-    ) -> "HierarchicalIVF":
-        """Iterate ``split_hot_cells`` to the occupancy bound — same
-        loop and lineage-cut discipline as ``IVFIndex.rebalance``."""
-        idx = self
-        for r in range(max_rounds):
-            nxt = idx.split_hot_cells(factor=factor, seed=seed + r)
-            if nxt is idx:
-                return idx
-            nxt.assignments = nxt.assignments.localCheckpoint(eager=False)
-            idx = nxt
-        return idx
-
-    # -- persistence (same layout discipline as IVFIndex.save) ------------
-
-    def save(self, spark: SparkSession, path: str) -> None:
-        """Persist as plain parquet: assignments partitioned by the
-        composite cell (partition-prunable probes after reload), level-1
-        centroids, and the (l1, l2, centroid) table. The projection (if
-        any) is written before meta — the final meta _SUCCESS marker
-        implies the whole index committed — and load keys geometry on
-        GEOM_COL's presence in the assignments, the same explicit
-        marker the flat index uses. The cell_id repartition before the
-        partitioned write is the flat save's one-file-per-cell
-        discipline (see IVFIndex.save — the 141k-file layout it
-        prevents was measured on THIS class at 5M x 384-d)."""
-        self.assignments.repartition("cell_id").write.mode(
-            "overwrite"
-        ).partitionBy("cell_id").parquet(f"{path}/assignments")
-        if self.proj is not None:
-            prows = [
-                (int(i), [float(x) for x in row])
-                for i, row in enumerate(self.proj)
-            ]
-            spark.createDataFrame(
-                prows, "row_idx INT, coeffs ARRAY<DOUBLE>"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/proj")
-        l1 = [(int(i), [float(x) for x in row]) for i, row in enumerate(self.l1_centroids)]
-        spark.createDataFrame(l1, "l1 INT, centroid ARRAY<DOUBLE>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/l1_centroids")
-        l2 = [
-            (int(l1_), int(l2_), [float(x) for x in row])
-            for l1_, block in sorted(self.l2_centroids.items())
-            for l2_, row in enumerate(block)
-        ]
-        spark.createDataFrame(l2, "l1 INT, l2 INT, centroid ARRAY<DOUBLE>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/l2_centroids")
-        # ALWAYS written (empty is fine): load() probes overflow/ by
-        # reading, so an in-place re-save of an overflow-free index
-        # (e.g. a fresh rebuild) over a path that previously held a
-        # split index must overwrite the stale table — otherwise
-        # phantom centroids re-enter probe ranking and assign_new, and
-        # num_cells inflates so target_frac budgets mis-resolve.
-        ov = [
-            (int(c), int(p), [float(x) for x in cent])
-            for c, (p, cent) in sorted(self.overflow.items())
-        ]
-        spark.createDataFrame(
-            ov, "cell_id INT, parent_l1 INT, centroid ARRAY<DOUBLE>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/overflow")
-        # The cell-id stride is build-time state, not derivable from the
-        # centroid blocks (an under-filled build has max block < stride).
-        # Written LAST (after overflow): its _SUCCESS marker implies the
-        # whole index committed.
-        spark.createDataFrame([(int(self.k2),)], "k2_stride INT").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-
-    @classmethod
-    def load(
-        cls,
-        spark: SparkSession,
-        path: str,
-        *,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "HierarchicalIVF":
-        l1_rows = spark.read.parquet(f"{path}/l1_centroids").orderBy("l1").collect()
-        l1 = np.vstack([np.asarray(r["centroid"]) for r in l1_rows])
-        l2: dict[int, list] = {}
-        for r in sorted(
-            spark.read.parquet(f"{path}/l2_centroids").collect(),
-            key=lambda r: (r["l1"], r["l2"]),
-        ):
-            l2.setdefault(int(r["l1"]), []).append(r["centroid"])
-        l2_np = {k: np.asarray(v) for k, v in l2.items()}
-        assignments = spark.read.parquet(f"{path}/assignments")
-        proj = None
-        if GEOM_COL in assignments.columns:
-            prows = (
-                spark.read.parquet(f"{path}/proj").orderBy("row_idx").collect()
-            )
-            proj = np.vstack([np.asarray(r["coeffs"]) for r in prows])
-        try:
-            stride = int(
-                spark.read.parquet(f"{path}/meta").first()["k2_stride"]
-            )
-        except Exception:
-            # pre-round-7 saves carry no meta; fall back to the old
-            # inference (correct whenever some super-cell filled up)
-            stride = None
-        try:
-            # absent on any index never split (and on every pre-r13
-            # save) — a local-FS existence check would break non-local
-            # paths, so probe by reading like the stride above.
-            overflow = {
-                int(r["cell_id"]): (int(r["parent_l1"]), r["centroid"])
-                for r in spark.read.parquet(f"{path}/overflow").collect()
-            }
-        except Exception:
-            overflow = {}
-        return cls(
-            l1,
-            l2_np,
-            assignments,
-            id_col=id_col,
-            vec_col=vec_col,
-            k2_stride=stride,
-            proj=proj,
-            overflow=overflow,
-        )
 
 
 class IVFPQIndex:
@@ -2274,8 +1711,8 @@ class IVFPQIndex:
         )
 
     def _cell_geometry(self):
-        """Cell-ranking kernel geometry: probes rank the flat (or, over
-        a hierarchical index, dense composite) centroid matrix."""
+        """Cell-ranking kernel geometry: probes rank every used cell id
+        of the source index as one block."""
         return _flat_geometry(self.centroids, self.proj)
 
     @classmethod
@@ -2321,12 +1758,9 @@ class IVFPQIndex:
         asg = ivf.assignments
         id_col, vec_col = ivf.id_col, ivf.vec_col
         geom_col = ivf.geom_col
-        # Either index class (round 14): the flat class exposes its
-        # centroid matrix directly; the hierarchical one synthesizes a
-        # dense composite-cell matrix (phantom slots pushed far away).
-        centroids = getattr(ivf, "centroids", None)
-        if centroids is None:
-            centroids = ivf.pq_cell_centroids()
+        # by-id cell table of either constructor; unused ids are NaN
+        # rows, which never enter a probe block (``_flat_geometry``)
+        centroids = ivf.centroids
         full_codes = code_space == "full" and ivf.proj is not None
         if full_codes:
             # Per-cell FULL-space means: one applyInPandas over the
@@ -2824,7 +2258,7 @@ class MultiProbeLSH:
     storage — the knob that matters when the index itself must fit
     beside 100 TB of data.
 
-    Layout mirrors the stock ``LSHIndex``'s contract but the index IS
+    Unlike stock ``BucketedRandomProjectionLSH``, the index IS
     plain data, same as IVF: ``(vec_id, table, bucket)`` rows built in
     one Arrow ``mapInPandas`` matmul pass (projections broadcast),
     persistable partitioned by table. Search filters a static

@@ -69,8 +69,8 @@ def bounded_query_collect(
     """Collect the query side of a batch-search path with a loud bound.
 
     Every "queries are broadcast-small by contract" serving path
-    (``knn_batch``, ``IVFIndex.search_batch_pruned``,
-    ``HierarchicalIVF.search_batch_pruned``) funnels its driver-side
+    (``knn_batch``, ``IVFIndex.search_batch_pruned`` — flat or
+    two-level) funnels its driver-side
     collect through here: ``limit(cap+1)`` makes the guard itself safe —
     an oversized frame ships exactly cap+1 rows and raises with the
     EXACT call to make instead, never silently pulling a corpus onto
