@@ -760,6 +760,46 @@ def test_rebalance_reaches_occupancy_bound(spark, emb):
     assert got == exact
 
 
+def test_split_hot_cells_judges_against_post_split_mean(spark):
+    """The hot set is chosen against the mean occupancy AFTER the
+    round's own splits. Planted tight blobs with the occupancies a
+    KMeans build left on a 2000-row corpus: against the pre-split mean
+    (bound 2*2000/8 = 500) only the 800-row cell is hot, and the
+    467-row cell is then over the new bound 2*2000/9 = 444. Splitting
+    both (467 > 2*2000/10) is what lets ``rebalance`` reach its bound.
+    Cells are placed through the constructor, so the occupancies do not
+    depend on how KMeans seeds its init per partition (the core count)."""
+    import numpy as np
+
+    sizes = [800, 467, 311, 126, 118, 61, 59, 58]
+    dim = 8
+    rng = np.random.RandomState(11)
+    centers = rng.standard_normal((len(sizes), dim)) * 10.0
+    rows, vid = [], 0
+    for c, n in enumerate(sizes):
+        for v in centers[c] + rng.standard_normal((n, dim)) * 0.1:
+            rows.append((vid, [float(x) for x in v], c))
+            vid += 1
+    assignments = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, cell_id INT"
+    )
+    idx = IVFIndex(
+        np.zeros((1, dim)), centers, np.zeros(len(sizes), np.int64), assignments
+    )
+
+    split = idx.split_hot_cells(factor=2.0)
+    occ = {r["cell_id"]: r["n_vectors"] for r in split.cell_stats().collect()}
+    assert len(occ) == len(sizes) + 2
+    assert sum(occ.values()) == sum(sizes)
+    assert occ[1] < sizes[1]
+    assert occ[2] == sizes[2]  # 311 <= 400: cold, untouched
+
+    bal = idx.rebalance(factor=2.0)
+    st = bal.occupancy_stats()
+    assert st["rows"] == sum(sizes)
+    assert st["max"] <= 2.0 * st["rows"] / st["cells"], st
+
+
 def test_multiprobe_lsh_self_and_recall(spark, emb):
     """Multi-probe LSH: self-query survives; probing the +/-1 neighbor
     buckets must recover at least as much recall as the home buckets

@@ -1342,9 +1342,13 @@ class IVFIndex:
         rows into a few cells and probe cost degrades toward a scan of
         the hot cell (measured on the two-level index at 500k + 8 OOD
         batches: recall 0.74-0.81 before repair, SCALE.md r12). This
-        repairs occupancy WITHOUT the full refit: every cell with
-        occupancy > ``factor`` x mean is split in two by a seeded local
-        2-means over (a bounded sample of) its own vectors. Sub-0 keeps
+        repairs occupancy WITHOUT the full refit: every hot cell is
+        split in two by a seeded local 2-means over (a bounded sample
+        of) its own vectors. A cell is hot when its occupancy exceeds
+        ``factor`` x the mean occupancy AFTER this round's splits,
+        ``rows / (cells + |hot|)``: judged against the pre-split mean, a
+        cell just under the old bound would be over the new one, and
+        the next round would spend itself on it. Sub-0 keeps
         the cell id (its centroid updates in place); sub-1 takes the
         next id, ``len(centroids)``, in the hot cell's parent block —
         ids of cold cells (and the saved parquet partitions holding
@@ -1362,8 +1366,15 @@ class IVFIndex:
         }
         if not occ:
             return self
-        mean_occ = sum(occ.values()) / len(occ)
-        hot = sorted(c for c, n in occ.items() if n > factor * mean_occ and n >= 2)
+        # Fixed point of H = {c : occ[c] > factor * rows / (cells + |H|)}:
+        # the bound only falls as H grows, so H only grows and the loop ends.
+        rows, hot = sum(occ.values()), []
+        while True:
+            bound = factor * rows / (len(occ) + len(hot))
+            nxt = sorted(c for c, n in occ.items() if n > bound and n >= 2)
+            if nxt == hot:
+                break
+            hot = nxt
         if not hot:
             return self
 
@@ -1414,11 +1425,14 @@ class IVFIndex:
         max_rounds: int = 4,
     ) -> "IVFIndex":
         """Iterate ``split_hot_cells`` until no cell exceeds ``factor``
-        x mean occupancy (or the round budget runs out). One round is
-        NOT enough when a hot cell holds a tight drift cluster plus
-        background: 2-means first separates cluster from background
-        (the right split — but the cluster side stays hot), and only
-        subsequent rounds halve the cluster itself. Each round re-seeds
+        x mean occupancy. One round is NOT enough when a hot cell holds
+        a tight drift cluster plus background: 2-means first separates
+        cluster from background (the right split — but the cluster side
+        stays hot), and only subsequent rounds halve the cluster itself.
+        The bound can still be missed in two ways: the ``max_rounds``
+        budget runs out, or a 2-means split cannot halve a cell (a cell
+        of identical points keeps every row in sub-0, and that cell is
+        picked again each round). Each round re-seeds
         deterministically and cuts lineage with ``localCheckpoint`` so
         round N+1's fits don't re-execute round N's reassignment."""
         idx = self
