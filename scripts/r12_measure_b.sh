@@ -1,6 +1,5 @@
 #!/bin/bash
 # Round-12 wave B:
-#   E. Re-serve hier 5M x 384-d under the one-file-per-cell save fix
 #   F. Retry the 500k composed pipeline WITH the 64g driver (wave A ran
 #      it at the 8g default and minhash_clusters' checkpoint died in a
 #      shuffled-hash build)
@@ -16,9 +15,6 @@ sweep() {
   done
   df -h / | tail -1
 }
-sweep
-SPARK_DRIVER_MEM=64g timeout 7200 \
-  python scripts/r12_hier_384_resave.py 5000000 >logs/r12_hier384_resave.log 2>&1
 sweep
 SPARK_DRIVER_MEM=64g timeout 3600 \
   env SCALING_DOC_SIZES=500000 PIPE_MODES=both \

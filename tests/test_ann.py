@@ -165,6 +165,49 @@ def test_assign_new_incremental(spark, emb):
         assert r["cell_id"] == idx._probe_cells(r["embedding"], 1)[0], r
 
 
+@pytest.mark.parametrize("shape", ["flat", "flat_coarse8", "hier3x3"])
+def test_build_places_rows_in_their_probes_first_cell(spark, emb, shape):
+    """Every build places each stored row in the cell its own
+    single-cell probe ranks first (one super-cell, then one cell, as
+    placement ranks): both builds end in the same kernel pass, as
+    ``assign_new`` does."""
+    from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
+
+    if shape == "hier3x3":
+        idx = HierarchicalIVF.build(emb, k1=3, k2=3, seed=42)
+    else:
+        coarse = 8 if shape == "flat_coarse8" else None
+        idx = IVFIndex.build(emb, num_cells=8, seed=42, coarse_dim=coarse)
+    rows = idx.assignments.collect()
+    assert len(rows) == emb.count()
+    for r in rows:
+        probe = idx._probe_cells(r["embedding"], 1, nprobe_l1=1)
+        assert r["cell_id"] == probe[0], r
+
+
+@pytest.mark.parametrize("hier", [False, True])
+def test_build_assignments_are_materialised(spark, hier):
+    """A built index keeps its assignments: once one search has run, the
+    next search reads the stored blocks. Its plan holds no parquet scan
+    of the corpus, no kernel pass and no KMeans predict UDF."""
+    from vector_database_in_rust_spark.operators.ann import HierarchicalIVF
+    from vector_database_in_rust_spark.plans.explain import formatted_plan
+
+    corpus = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    if hier:
+        idx = HierarchicalIVF.build(corpus, k1=3, k2=3, seed=42)
+    else:
+        idx = IVFIndex.build(corpus, num_cells=8, seed=42)
+    q = corpus.filter("vec_id = 7").first()["embedding"]
+    first = idx.search(q, K).collect()
+    again = idx.search(q, K)
+    plan = formatted_plan(again)
+    assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
+    for op in ("Scan parquet", "FileScan", "MapInPandas", "UDF"):
+        assert op not in plan, plan
+    assert again.collect() == first
+
+
 def test_hierarchical_ivf_structure_and_recall(spark, emb, queries):
     """Two-level IVF: every vector in exactly one composite cell;
     probing everything reproduces exact; partial probe holds the same

@@ -1161,7 +1161,6 @@ def _hier_index(spark, sf_dir):
     idx = _HIER_CACHE.get(sf_dir)
     if idx is None:
         idx = HierarchicalIVF.build(_emb(spark, sf_dir), k1=4, k2=4, seed=42)
-        idx.assignments = idx.assignments.persist()
         _HIER_CACHE[sf_dir] = idx
     return idx
 
@@ -3065,7 +3064,6 @@ def _ivf_index(spark, sf_dir):
     idx = _IVF_CACHE.get(sf_dir)
     if idx is None:
         idx = IVFIndex.build(_emb(spark, sf_dir), num_cells=16, seed=42)
-        idx.assignments = idx.assignments.persist()
         _IVF_CACHE[sf_dir] = idx
     return idx
 

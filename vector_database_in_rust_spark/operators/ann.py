@@ -117,11 +117,11 @@ def _pca_projection(
 
 def _project_udf(proj: np.ndarray):
     """Vectorized Arrow-batch projection ``x @ proj`` as a pandas UDF —
-    composes onto any frame without re-stating its schema. float32
-    output: the reduced column is geometry only (KMeans fit, hot-cell
-    splits, reduced-space ADC tables), never the exact re-rank
-    surface. Probe and assignment ranking project in float64 inside
-    ``_cell_rank_fn``."""
+    composes onto any frame without re-stating its schema. It feeds
+    only the KMeans fit sample of both builds and the PQ query tables;
+    float32 output, never the exact re-rank surface. Probes and
+    placement project in float64 inside ``_cell_rank_fn``, and the
+    stored GEOM_COL comes from that projection (``_assign_cells``)."""
     from pyspark.sql.functions import pandas_udf
 
     p32 = np.ascontiguousarray(proj, dtype=np.float32)
@@ -132,6 +132,30 @@ def _project_udf(proj: np.ndarray):
         return pd.Series(list(x @ p32))
 
     return project
+
+
+def _fit_sample(
+    corpus: DataFrame, n: int, *, max_fit_rows: int, seed: int, id_col: str,
+    vec_col: str, coarse_dim: int | None,
+) -> tuple[DataFrame, np.ndarray | None]:
+    """Both builds' KMeans input: at most ~``max_fit_rows`` seeded
+    sample rows of the ``n``-row corpus — KMeans quality needs representative data, not all of
+    it, so the iterative fit stays O(sample) at 100 TB. Under
+    ``coarse_dim`` the sample's PCA projection is fitted and added as
+    GEOM_COL. ``_features`` holds the geometry column as an ML vector.
+    Returns the sample and the projection (None when unprojected)."""
+    from pyspark.ml.functions import array_to_vector
+
+    fit_df = corpus.select(F.col(id_col), F.col(vec_col))
+    if n > max_fit_rows:
+        fit_df = fit_df.sample(fraction=max_fit_rows / n, seed=seed)
+    proj = None
+    if coarse_dim is not None:
+        proj = _pca_projection(fit_df, vec_col=vec_col, coarse_dim=coarse_dim)
+        fit_df = fit_df.withColumn(GEOM_COL, _project_udf(proj)(F.col(vec_col)))
+    geom = GEOM_COL if proj is not None else vec_col
+    vec = array_to_vector(F.col(geom).cast("array<double>"))
+    return fit_df.withColumn("_features", vec), proj
 
 
 # Float64 elements one row chunk of the cell-ranking kernel may hold in
@@ -240,10 +264,11 @@ def _probed_pairs(
 def _assign_cells(rows: DataFrame, geom, *, id_col: str, vec_col: str) -> DataFrame:
     """Place each (id, vector) row in its cell: the kernel at
     ``nprobe_l1 = nprobe = 1`` as one ``mapInPandas`` pass (no join,
-    no window, no exchange). The two-level build and ``assign_new``
-    run it, so a placed row lands in the cell its own probe ranks
-    first. Emits id, vector, ``cell_id`` and, under a coarse
-    projection, the float32 GEOM_COL."""
+    no window, no exchange). Both builds and ``assign_new`` run it, so
+    a placed row lands in the cell its own probe ranks first. Emits the
+    caller's id and vector columns, ``cell_id`` and, under a coarse
+    projection, GEOM_COL: the kernel's float64 projection stored as
+    float32."""
     bc = rows.sparkSession.sparkContext.broadcast(geom)
     rank = _cell_rank_fn(1, 1)
     geom_col = GEOM_COL
@@ -920,44 +945,38 @@ class IVFIndex:
         cell boundaries (recall/cost routing, never correctness of the
         returned distances) come from the reduced space."""
         from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
 
         n = corpus.count()
-        k = num_cells or _num_cells_default(n)
-        base = corpus.select(F.col(id_col), F.col(vec_col))
-        # Fit on a bounded sample: KMeans quality needs representative
-        # data, not all of it; assignment below touches every row exactly
-        # once. This keeps the iterative fit O(sample) at 100 TB.
-        frac = max_fit_rows / n if n > max_fit_rows else None
-        proj = None
-        if coarse_dim is not None:
-            sample = base if frac is None else base.sample(fraction=frac, seed=seed)
-            proj = _pca_projection(
-                sample, vec_col=vec_col, coarse_dim=coarse_dim
-            )
-            base = base.withColumn(GEOM_COL, _project_udf(proj)(F.col(vec_col)))
-        geom = GEOM_COL if proj is not None else vec_col
-        feat = base.withColumn(
-            "_features", array_to_vector(F.col(geom).cast("array<double>"))
+        fit_df, proj = _fit_sample(
+            corpus, n, max_fit_rows=max_fit_rows, seed=seed, id_col=id_col,
+            vec_col=vec_col, coarse_dim=coarse_dim,
         )
-        fit_df = feat if frac is None else feat.sample(fraction=frac, seed=seed)
         model = KMeans(
-            k=k, seed=seed, featuresCol="_features", predictionCol="cell_id"
+            k=num_cells or _num_cells_default(n), seed=seed, featuresCol="_features"
         ).fit(fit_df)
-        keep = [id_col, vec_col] + ([GEOM_COL] if proj is not None else [])
-        assignments = model.transform(feat).select(
-            *keep, F.col("cell_id").cast("int")
-        )
         centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
         return cls(
             np.zeros((1, centroids.shape[1])),
             centroids,
             np.zeros(len(centroids), dtype=np.int64),
-            assignments,
+            None,
             id_col=id_col,
             vec_col=vec_col,
             proj=proj,
-        )
+        )._place(corpus)
+
+    def _place(self, corpus: DataFrame) -> "IVFIndex":
+        """The one build tail: place every corpus row with the
+        cell-ranking kernel (``_assign_cells``), so each stored row sits
+        in the cell its own probe ranks first, and keep the result with
+        a lazy ``localCheckpoint``. The first action (a first query, a
+        ``save``) runs the pass once; every later search, ``cell_stats``
+        and ``assign_new`` union reads the stored blocks instead of
+        re-reading and re-placing the corpus."""
+        self.assignments = _assign_cells(
+            corpus, self._cell_geometry(), id_col=self.id_col, vec_col=self.vec_col
+        ).localCheckpoint(eager=False)
+        return self
 
     # -- persistence (absent in the reference; free here) -----------------
 
@@ -1320,14 +1339,14 @@ class IVFIndex:
         a stock 384-d build put half the corpus in one cell (max_share
         0.51, p50 occupancy 1), silently turning every probe into a
         corpus scan. Deliberately a method, not an automatic build
-        step: build() returns lazy assignments, and forcing an extra
-        eager pass on every build would double the assignment cost for
-        callers that persist immediately. Call it after build (the
-        scaling study does), or on load when inheriting an index of
-        unknown provenance. Rule of thumb: max_share should be O(1/k);
-        max_share * nprobe bounds the fraction of the corpus a probe
-        reads. Remedies: ``coarse_dim`` at build (high-d geometry),
-        ``rebalance()`` (drift/skew)."""
+        step: build() keeps its assignments behind a lazy
+        ``localCheckpoint``, so the first action runs the assignment
+        pass and a caller that saves straight away pays it once. Call
+        it after build (the scaling study does), or on load when
+        inheriting an index of unknown provenance. Rule of thumb:
+        max_share should be O(1/k); max_share * nprobe bounds the
+        fraction of the corpus a probe reads. Remedies: ``coarse_dim``
+        at build (high-d geometry), ``rebalance()`` (drift/skew)."""
         return _occupancy_stats(self.assignments)
 
     def split_hot_cells(
@@ -1568,24 +1587,15 @@ class HierarchicalIVF(IVFIndex):
         original vectors, so full probe == exact at any projection."""
         import pandas as pd
         from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
 
-        n = corpus.count()
-        base = corpus.select(F.col(id_col), F.col(vec_col))
-        frac = max_fit_rows / n if n > max_fit_rows else None
-        proj = None
-        if coarse_dim is not None:
-            sample = base if frac is None else base.sample(fraction=frac, seed=seed)
-            proj = _pca_projection(sample, vec_col=vec_col, coarse_dim=coarse_dim)
-            base = base.withColumn(GEOM_COL, _project_udf(proj)(F.col(vec_col)))
-        geom = GEOM_COL if proj is not None else vec_col
-        feat = base.withColumn(
-            "_f", array_to_vector(F.col(geom).cast("array<double>"))
+        fit_df, proj = _fit_sample(
+            corpus, corpus.count(), max_fit_rows=max_fit_rows, seed=seed,
+            id_col=id_col, vec_col=vec_col, coarse_dim=coarse_dim,
         )
-        fit_df = feat
-        if frac is not None:
-            fit_df = feat.sample(fraction=frac, seed=seed)
-        l1_model = KMeans(k=k1, seed=seed, featuresCol="_f", predictionCol="l1").fit(fit_df)
+        geom = GEOM_COL if proj is not None else vec_col
+        l1_model = KMeans(
+            k=k1, seed=seed, featuresCol="_features", predictionCol="l1"
+        ).fit(fit_df)
         l1_cent = np.vstack([np.asarray(c) for c in l1_model.clusterCenters()])
 
         # Parallel level-2 fits: one seeded numpy Lloyd run per
@@ -1624,19 +1634,12 @@ class HierarchicalIVF(IVFIndex):
             if l1 not in parent:
                 centroids[l1 * k2], parent[l1 * k2] = l1_cent[l1], l1
 
-        idx = cls(
+        # Full-corpus assignment: the flat build's tail, one Arrow pass
+        # of the kernel at nprobe_l1 = nprobe = 1 (2·sqrt(K) distance
+        # rows per vector).
+        return cls(
             l1_cent, centroids, parent, None, id_col=id_col, vec_col=vec_col, proj=proj
-        )
-        # Full-corpus assignment: one Arrow pass of the cell-ranking
-        # kernel at nprobe_l1 = nprobe = 1. With coarse_dim the pass
-        # projects each batch itself; the emitted row keeps the
-        # ORIGINAL vector plus GEOM_COL, the flat index's layout (load
-        # keys on the column's presence). Id and vector columns keep
-        # the caller's names and types.
-        idx.assignments = _assign_cells(
-            corpus, idx._cell_geometry(), id_col=id_col, vec_col=vec_col
-        )
-        return idx
+        )._place(corpus)
 
 
 class IVFPQIndex:

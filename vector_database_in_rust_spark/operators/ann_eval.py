@@ -98,17 +98,12 @@ def recall_grid(emb: DataFrame) -> dict[tuple[str, str], float]:
     out: dict[tuple[str, str], float] = {}
 
     ivf16 = IVFIndex.build(emb, num_cells=16, seed=SEED)
-    # Build once, probe many: without the persist every per-query
-    # search re-runs the full corpus assignment pass (the same contract
-    # harness._ivf_index/_hier_index follow).
-    ivf16.assignments = ivf16.assignments.persist()
     for nprobe in (4, 8, 10, 16):
         out[("IVF flat (16 cells)", f"nprobe={nprobe}")] = recall_batch(
             ivf16.search_batch(queries, K, nprobe=nprobe)
         )
 
     hier = HierarchicalIVF.build(emb, k1=8, k2=8, seed=SEED)
-    hier.assignments = hier.assignments.persist()
     # (3, 8) is kept as the documented LOW-budget point (12.5% of the
     # corpus probed — recall tracks that fraction on uniform data);
     # (None, None) is the tuned default = flat-equivalent budget.
@@ -150,8 +145,6 @@ def recall_grid(emb: DataFrame) -> dict[tuple[str, str], float]:
     out[("Exact scan (control)", "-")] = recall_per_query(
         lambda v: knn_exact(emb, v, K)
     )
-    ivf16.assignments.unpersist()
-    hier.assignments.unpersist()
     emb.unpersist()
     return out
 

@@ -2992,15 +2992,36 @@ def semantic_dedup_verdict(
         )
     )
     # Materialize the ONE-row verdict eagerly, then release the
-    # decisions cache — returning a lazy plan over a persisted input
-    # would leak executor cache across repeated verdict calls in
-    # long-lived sessions (advisor, round 9; same discipline as
-    # minhash_lsh_pairs).
+    # decisions cache and the clustering index's stored assignments —
+    # returning a lazy plan over a persisted input would leak executor
+    # cache across repeated verdict calls in long-lived sessions
+    # (advisor, round 9; same discipline as minhash_lsh_pairs).
     try:
         result = result.localCheckpoint(eager=True)
     finally:
         decisions.unpersist()
+        _release_checkpoints(decisions, keep=emb)
     return result
+
+
+def _release_checkpoints(df: DataFrame, *, keep: DataFrame) -> None:
+    """Unpersist the locally checkpointed inputs ``df`` reads and
+    ``keep`` does not — such as the stored assignments of an IVF index
+    built inside a one-shot call, which would otherwise stay until the
+    JVM collects them. ``df`` cannot be recomputed afterwards."""
+
+    def checkpoints(d: DataFrame) -> dict:
+        leaves = d._jdf.queryExecution().analyzed().collectLeaves()
+        return {
+            leaf.rdd().id(): leaf.rdd()
+            for leaf in map(leaves.apply, range(leaves.size()))
+            if leaf.nodeName() == "LogicalRDD"
+        }
+
+    kept = checkpoints(keep)
+    for rdd_id, rdd in checkpoints(df).items():
+        if rdd_id not in kept:
+            rdd.unpersist(False)
 
 
 def dedup_clusters(
