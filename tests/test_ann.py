@@ -743,6 +743,7 @@ def test_split_hot_cells_rebalances_and_stays_exact(spark, emb):
     assert cold_before.select("vec_id", "cell_id").exceptAll(
         cold_after.select("vec_id", "cell_id")
     ).count() == 0
+    _assert_moved_rows_placed(idx, split)
 
     # full probe == exact on the combined corpus
     corpus = emb.select("vec_id", "embedding").unionByName(
@@ -841,6 +842,62 @@ def test_split_hot_cells_judges_against_post_split_mean(spark):
     st = bal.occupancy_stats()
     assert st["rows"] == sum(sizes)
     assert st["max"] <= 2.0 * st["rows"] / st["cells"], st
+
+
+def _assert_moved_rows_placed(idx, split):
+    """Every row of a hot cell of ``idx`` sits, after the split, in the
+    cell its own single-cell probe ranks first (placement's own rule),
+    and every other row keeps its cell. Hot cells are the ids whose
+    centroid the split replaced."""
+    import numpy as np
+
+    k_old = len(idx.centroids)
+    hot = {
+        c for c in range(k_old)
+        if not np.array_equal(split.centroids[c], idx.centroids[c], equal_nan=True)
+    }
+    before = {r["vec_id"]: r["cell_id"] for r in idx.assignments.collect()}
+    for r in split.assignments.collect():
+        if before[r["vec_id"]] in hot:
+            probe = split._probe_cells(r["embedding"], 1, nprobe_l1=1)
+            assert r["cell_id"] == probe[0], r
+        else:
+            assert r["cell_id"] == before[r["vec_id"]], r
+
+
+def test_split_hot_cells_moves_rows_by_the_placement_rule(spark):
+    """A split re-places its hot rows as ingest would. Planted cell 0
+    holds two tight blobs at (+-10, 0) and a 20-row group at (0, 8),
+    nearer its old centroid (0, 0) than cold cell 1 at (0, 19). The
+    2-means split puts its sub-centroids near the blobs, so the group
+    is now nearer cell 1 than either sub-centroid: it must land in cell
+    1, and every other row of cell 0 in its probe's first cell. Cold
+    rows keep their cells. Cells are placed through the constructor,
+    so occupancies do not depend on the KMeans core count."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    centers = np.array([[0.0, 0.0], [0.0, 19.0], [0.0, -19.0], [30.0, 0.0]])
+    planted = [(0, (-10.0, 0.0), 400), (0, (10.0, 0.0), 400), (0, (0.0, 8.0), 20)]
+    planted += [(c, centers[c], 100) for c in (1, 2, 3)]
+    rows = []
+    for cell, at, n in planted:
+        for v in np.asarray(at) + rng.standard_normal((n, 2)) * 0.1:
+            rows.append((len(rows), [float(x) for x in v], cell))
+    group = range(800, 820)  # the rows at (0, 8)
+    assignments = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, cell_id INT"
+    )
+    idx = IVFIndex(np.zeros((1, 2)), centers, np.zeros(4, np.int64), assignments)
+
+    split = idx.split_hot_cells(factor=2.0)
+    assert len(split.centroids) == 5  # only cell 0 was hot
+    d = ((split.centroids - [0.0, 8.0]) ** 2).sum(axis=1)
+    assert int(np.argmin(d)) == 1, split.centroids  # the set-up holds
+    got = {r["vec_id"]: r["cell_id"] for r in split.assignments.collect()}
+    assert len(got) == len(rows)
+    assert {got[i] for i in group} == {1}
+    _assert_moved_rows_placed(idx, split)
 
 
 def test_multiprobe_lsh_self_and_recall(spark, emb):
@@ -1411,6 +1468,7 @@ def test_hier_split_hot_cells_overflow(spark, emb):
     assert sum(after.values()) == 800
     assert split.assignments.select("vec_id").distinct().count() == 800
     assert max(after.values()) < max(before.values())
+    _assert_moved_rows_placed(idx, split)
 
     corpus = emb.select("vec_id", "embedding").unionByName(
         new.select("vec_id", "embedding")

@@ -1069,6 +1069,23 @@ def test_semantic_verdict_releases_cache(spark):
     assert grown <= 2, f"persistent RDDs grew by {grown}"
 
 
+def test_semantic_threshold_releases_clustering_blocks(spark):
+    """The calibrator builds and rebalances its own clustering index per
+    call; it must drop that index's stored assignment blocks once its
+    survival counts are collected, so repeated calibrations in a
+    long-lived session do not pin corpus-sized blocks."""
+    df, _ = _semantic_corpus(spark)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        cal = dedup.semantic_threshold_for(df, 0.5, num_cells=4, seed=42)
+        assert 0.0 < cal["threshold"] <= 1.0
+    grown = jsc.getPersistentRDDs().size() - before
+    # <= 0, not == 0: the context cleaner may drop an earlier test's
+    # blocks while this one runs
+    assert grown <= 0, f"persistent RDDs grew by {grown}"
+
+
 def test_simhash_clusters_match_pair_closure(spark, docs):
     """Clique mode (round 9) must be the SAME partition as the
     recursive closure of the pair mode — on the driver corpus AND on a

@@ -1414,7 +1414,7 @@ def ann_rebalance_q(spark, sf_dir):
     assign_new and pile into one cell; ``rebalance`` iterates
     split_hot_cells — local seeded 2-means fits run in parallel per
     hot cell, cold cells and their ids untouched, only hot rows
-    re-scored against exactly 2 centroids each — until no cell exceeds
+    re-placed by the kernel (``assign_new``) — until no cell exceeds
     factor x mean occupancy. Returns the post-rebalance occupancy
     table. Approximate (KMeans) -> rows-only; invariants (no row lost,
     occupancy bound reached, full-probe still exact, deterministic)

@@ -50,7 +50,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from vector_database_in_rust_spark.functions.vectors import l2_squared
 from vector_database_in_rust_spark.operators.knn import (
     bounded_query_collect,
     knn_exact,
@@ -423,60 +422,24 @@ def _pruned_blas_topk(
     return _rank_topk(scored, k)
 
 
-def _occupancy_stats(assignments: DataFrame) -> dict:
-    """One-pass cell-occupancy summary over an assignment table —
-    shared by ``IVFIndex.occupancy_stats`` (see its docstring for the
-    measured degeneracy it catches and the remedies) and the
-    streaming-maintenance monitor."""
-    row = (
-        assignments.groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("cells"),
-            F.sum("n").alias("rows"),
-            F.max("n").alias("max"),
-            F.expr("percentile_approx(n, 0.5)").alias("p50"),
-            F.expr("percentile_approx(n, 0.99)").alias("p99"),
-        )
-        .collect()[0]
-    )
-    if int(row["cells"] or 0) == 0:
-        # Empty assignments: every aggregate above is NULL — report
-        # the (obviously unhealthy) empty index instead of letting
-        # the health check itself raise TypeError (r10 advisor).
-        return {
-            "cells": 0, "rows": 0, "max": 0, "p50": 0, "p99": 0,
-            "max_share": 0.0,
-        }
-    total = int(row["rows"] or 0)
-    return {
-        "cells": int(row["cells"]),
-        "rows": total,
-        "max": int(row["max"]),
-        "p50": int(row["p50"]),
-        "p99": int(row["p99"]),
-        "max_share": (int(row["max"]) / total) if total else 0.0,
-    }
+# Rows of one hot cell its local 2-means fits on (a seeded sample
+# above this).
+MAX_CELL_FIT_ROWS = 100_000
 
 
-def _fit_hot_subcentroids(
-    hot_rows: DataFrame,
-    *,
-    geom_col: str,
-    seed: int,
-    max_cell_fit_rows: int,
-) -> dict:
+def _fit_hot_subcentroids(hot_rows: DataFrame, *, geom_col: str, seed: int) -> dict:
     """Per-hot-cell seeded local 2-means, one ``applyInPandas`` group
     per cell (the HierarchicalIVF level-2 discipline) behind
     ``split_hot_cells``. Returns {(cell_id, sub): centroid}."""
     lloyd = _lloyd_fn()
+    cap = MAX_CELL_FIT_ROWS
 
     def fit2(pdf: pd.DataFrame) -> pd.DataFrame:
         c = int(pdf["cell_id"].iloc[0])
         x = np.vstack(pdf[geom_col].apply(np.asarray, dtype=np.float64))
-        if len(x) > max_cell_fit_rows:
+        if len(x) > cap:
             rng = np.random.RandomState(seed * 131 + c)
-            x = x[rng.choice(len(x), size=max_cell_fit_rows, replace=False)]
+            x = x[rng.choice(len(x), size=cap, replace=False)]
         cent = lloyd(x, 2, seed * 31 + c)
         if len(cent) < 2:  # degenerate single-point cell
             cent = np.vstack([cent[0], cent[0]])
@@ -494,41 +457,6 @@ def _fit_hot_subcentroids(
         .applyInPandas(fit2, "cell_id INT, sub INT, centroid ARRAY<DOUBLE>")
         .collect()
     }
-
-
-def _reassign_hot_rows(
-    hot_rows: DataFrame,
-    subs: dict,
-    new_id: dict,
-    *,
-    geom_col: str,
-    carry: list[str],
-) -> DataFrame:
-    """Re-score each hot cell's rows against its two sub-centroids:
-    the closer-to-sub0 half keeps the cell id, the rest moves to the
-    cell's fresh id (ties keep the old id), for ``split_hot_cells``."""
-    spark = hot_rows.sparkSession
-    remap = spark.createDataFrame(
-        [
-            (
-                int(c),
-                [float(x) for x in subs[(c, 0)]],
-                [float(x) for x in subs[(c, 1)]],
-                int(nid),
-            )
-            for c, nid in new_id.items()
-        ],
-        "cell_id INT, c0 ARRAY<DOUBLE>, c1 ARRAY<DOUBLE>, new_id INT",
-    )
-    d0 = l2_squared(F.col(geom_col), F.col("c0"))
-    d1 = l2_squared(F.col(geom_col), F.col("c1"))
-    return hot_rows.join(F.broadcast(remap), on="cell_id").select(
-        *carry,
-        F.when(d0 <= d1, F.col("cell_id"))
-        .otherwise(F.col("new_id"))
-        .cast("int")
-        .alias("cell_id"),
-    )
 
 
 def _in_probed_cells(rows: DataFrame, probed: DataFrame) -> DataFrame:
@@ -1347,14 +1275,38 @@ class IVFIndex:
         max_share should be O(1/k); max_share * nprobe bounds the
         fraction of the corpus a probe reads. Remedies: ``coarse_dim``
         at build (high-d geometry), ``rebalance()`` (drift/skew)."""
-        return _occupancy_stats(self.assignments)
+        row = (
+            self.assignments.groupBy("cell_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(
+                F.count(F.lit(1)).alias("cells"),
+                F.sum("n").alias("rows"),
+                F.max("n").alias("max"),
+                F.expr("percentile_approx(n, 0.5)").alias("p50"),
+                F.expr("percentile_approx(n, 0.99)").alias("p99"),
+            )
+            .collect()[0]
+        )
+        if int(row["cells"] or 0) == 0:
+            # Empty assignments: every aggregate above is NULL — report
+            # the (obviously unhealthy) empty index instead of letting
+            # the health check itself raise TypeError (r10 advisor).
+            return {
+                "cells": 0, "rows": 0, "max": 0, "p50": 0, "p99": 0,
+                "max_share": 0.0,
+            }
+        total = int(row["rows"] or 0)
+        return {
+            "cells": int(row["cells"]),
+            "rows": total,
+            "max": int(row["max"]),
+            "p50": int(row["p50"]),
+            "p99": int(row["p99"]),
+            "max_share": (int(row["max"]) / total) if total else 0.0,
+        }
 
     def split_hot_cells(
-        self,
-        *,
-        factor: float = 2.0,
-        seed: int = DEFAULT_SEED,
-        max_cell_fit_rows: int = 100_000,
+        self, *, factor: float = 2.0, seed: int = DEFAULT_SEED
     ) -> "IVFIndex":
         """Index maintenance under drift: ``assign_new`` funnels new
         vectors into EXISTING cells, so a shifting distribution piles
@@ -1373,13 +1325,20 @@ class IVFIndex:
         ids of cold cells (and the saved parquet partitions holding
         them) never change.
 
+        The hot cells' rows are then re-ingested with ``assign_new``
+        into the index of the cold rows and the new cell table, so a
+        moved row lands where an ingested row would: in the cell its
+        own probe ranks first, which is a cold cell when that cell is
+        nearer than both sub-centroids.
+
         Cost shape: the per-cell fits run in PARALLEL (one
         ``applyInPandas`` group per hot cell — the HierarchicalIVF
-        level-2 discipline); only HOT-cell rows are re-scored, against
-        exactly 2 centroids each; cold rows are untouched. Driver-side
-        state is the occupancy table (num_cells rows) and 2 x |hot|
-        sub-centroids. Returns a NEW index (assignments lazily
-        re-derived; the caller persists/saves as usual)."""
+        level-2 discipline); hot rows are re-placed by the kernel
+        against every cell of their super-cell; cold rows are
+        untouched. Driver-side state is the occupancy table (num_cells
+        rows) and 2 x |hot| sub-centroids. Returns a NEW index
+        (assignments lazily re-derived; the caller persists/saves as
+        usual)."""
         occ = {
             r["cell_id"]: r["n_vectors"] for r in self.cell_stats().collect()
         }
@@ -1397,44 +1356,20 @@ class IVFIndex:
         if not hot:
             return self
 
-        vec_col = self.vec_col
-        geom_col = self.geom_col
-
-        hot_rows = self.assignments.filter(F.col("cell_id").isin(hot))
-        subs = _fit_hot_subcentroids(
-            hot_rows,
-            geom_col=geom_col,
-            seed=seed,
-            max_cell_fit_rows=max_cell_fit_rows,
-        )
-
-        k_old = len(self.centroids)
-        new_centroids = self.centroids.copy()
-        new_id = {}
-        for i, c in enumerate(hot):
-            new_centroids[c] = subs[(c, 0)]
-            new_id[c] = k_old + i
-        new_centroids = np.vstack([new_centroids] + [subs[(c, 1)] for c in hot])
-        new_parent = np.concatenate([self.parent, self.parent[hot]])
-
-        carry = [self.id_col, vec_col] + (
-            [GEOM_COL] if self.proj is not None else []
-        )
-        reassigned = _reassign_hot_rows(
-            hot_rows, subs, new_id, geom_col=geom_col, carry=carry
-        )
-        cold = self.assignments.filter(~F.col("cell_id").isin(hot)).select(
-            *carry, "cell_id"
-        )
+        is_hot = F.col("cell_id").isin(hot)
+        hot_rows = self.assignments.filter(is_hot)
+        subs = _fit_hot_subcentroids(hot_rows, geom_col=self.geom_col, seed=seed)
+        centroids = self.centroids.copy()
+        centroids[hot] = [subs[(c, 0)] for c in hot]
         return type(self)(
             self.l1,
-            new_centroids,
-            new_parent,
-            cold.unionByName(reassigned),
+            np.vstack([centroids] + [subs[(c, 1)] for c in hot]),
+            np.concatenate([self.parent, self.parent[hot]]),
+            self.assignments.filter(~is_hot),
             id_col=self.id_col,
-            vec_col=vec_col,
+            vec_col=self.vec_col,
             proj=self.proj,
-        )
+        ).assign_new(hot_rows.select(self.id_col, self.vec_col))
 
     def rebalance(
         self,

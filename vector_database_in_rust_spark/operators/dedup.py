@@ -2677,6 +2677,11 @@ def semantic_dedup(
     Non-SQL-expressible (KMeans) -> rows-only harness lane; the
     driver-hash-verifiable invariants live in
     :func:`semantic_dedup_verdict`, pytest pins planted-dup behavior.
+
+    The returned frame is lazy over the clustering index's stored
+    assignment blocks (each build and rebalance round keeps its
+    ``localCheckpoint``), so those blocks stay pinned until the JVM
+    collects them after the caller drops the frame.
     """
     import numpy as np
     import pandas as pd
@@ -2844,13 +2849,15 @@ def semantic_threshold_for(
             }
         )
 
-    rows = (
+    counts = (
         idx.assignments.groupBy("cell_id")
         .applyInPandas(count_kept, schema="gi INT, kept BIGINT, n BIGINT")
         .groupBy("gi")
         .agg(F.sum("kept").alias("kept"), F.sum("n").alias("n"))
-        .collect()  # bounded-collect: exactly |grid| aggregate rows
     )
+    rows = counts.collect()  # bounded-collect: exactly |grid| aggregate rows
+    # the clustering index is this call's own: drop its stored blocks
+    _release_checkpoints(counts, keep=emb)
     by_gi = {int(r["gi"]): (int(r["kept"]), int(r["n"])) for r in rows}
     if not by_gi:
         # no clusters emitted any rows — an empty corpus has no

@@ -20,8 +20,9 @@ instead of silently dropping them (round 15, advisor finding; failure
 degrades toward duplicates, never loss). Rebuild-vs-incremental
 indexing is the caller's choice —
 the IVF index assigns NEW vectors to EXISTING cells cheaply
-(IVFIndex assignments are just a transform), with periodic full
-rebuilds when drift accumulates (same regime as any IVF system).
+(``IVFIndex.assign_new``: one kernel pass over the new rows only), with
+periodic full rebuilds when drift accumulates (same regime as any IVF
+system).
 """
 
 from __future__ import annotations
