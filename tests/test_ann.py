@@ -617,23 +617,77 @@ def test_pq_over_hierarchical_index(spark, emb):
     assert not (real & unused)
 
 
+def test_pq_search_matches_search_batch_partial_probe(spark, emb, ivf16):
+    """Point and batch PQ serving share one ADC scorer
+    (``_cell_adc_fn``): at a partial probe (4 of 16 cells), refine 0
+    and 8, every query's ``search`` rows equal its ``search_batch``
+    rows on a flat index, a 3x3 hierarchical one and a ``coarse_dim=8``
+    index with geom and full codes. (Full probe is pinned by
+    test_pq_search_batch_distributed.)"""
+    from vector_database_in_rust_spark.operators.ann import (
+        HierarchicalIVF,
+        IVFIndex,
+        IVFPQIndex,
+    )
+
+    red = IVFIndex.build(emb, num_cells=16, seed=42, coarse_dim=8)
+    pqs = {
+        "flat": IVFPQIndex.build(ivf16, m=16, ksub=16, seed=42),
+        "hier": IVFPQIndex.build(
+            HierarchicalIVF.build(emb, k1=3, k2=3, seed=42), m=16, ksub=16, seed=42
+        ),
+        "geom": IVFPQIndex.build(red, m=8, ksub=16, seed=42, code_space="geom"),
+        "full": IVFPQIndex.build(red, m=16, ksub=16, seed=42, code_space="full"),
+    }
+    q = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_embedding"),
+    )
+    qv = {r["query_id"]: r["query_embedding"] for r in q.collect()}
+    for name, pq in pqs.items():
+        pq.codes = pq.codes.persist()
+        for refine in (0, 8):
+            store = emb if refine else None
+            batch: dict = {}
+            for r in pq.search_batch(
+                q, K, nprobe=4, refine=refine, store=store
+            ).collect():
+                batch.setdefault(r["query_id"], []).append((r["vec_id"], r["dist"]))
+            for qid, vec in qv.items():
+                point = [
+                    (r["vec_id"], r["dist"])
+                    for r in pq.search(
+                        vec, K, nprobe=4, refine=refine, store=store
+                    ).collect()
+                ]
+                assert point == batch[qid] and point, (name, refine, qid)
+        pq.codes.unpersist()
+
+
 def test_pq_distributed_fit_matches_sequential(spark, emb, ivf16):
-    """Round 14: the m subquantizer Lloyd fits distribute one task per
+    """Round 14: the m subquantizer Lloyd fits run one Spark task per
     subquantizer (the 5M x 384-d m=48 build spent most of its 1,745 s
     in the sequential driver loop). Same seeds -> the distributed fit
-    must produce BIT-IDENTICAL codebooks and codes to the sequential
-    path (auto-routing on estimated fit flops picks the driver for
-    tiny fits, so both arms are forced explicitly here)."""
-    from vector_database_in_rust_spark.operators.ann import IVFPQIndex
+    must produce codebooks BIT-IDENTICAL to a driver-side Lloyd loop
+    over the same residual sample (all 500 rows: below
+    ``max_fit_rows``, collected in the build's order)."""
+    import numpy as np
 
-    seq = IVFPQIndex.build(ivf16, m=16, ksub=16, seed=42, fit_distributed=False)
-    par = IVFPQIndex.build(ivf16, m=16, ksub=16, seed=42, fit_distributed=True)
-    assert (seq.codebooks == par.codebooks).all()
-    assert (
-        seq.codes.orderBy("vec_id").exceptAll(par.codes.orderBy("vec_id")).count()
-        == 0
+    from vector_database_in_rust_spark.operators.ann import IVFPQIndex, _lloyd_fn
+
+    pq = IVFPQIndex.build(ivf16, m=16, ksub=16, seed=42)
+    rows = ivf16.assignments.select("embedding", "cell_id").collect()
+    x = np.vstack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+    resid = x - ivf16.centroids[[r["cell_id"] for r in rows]]
+    lloyd, dsub = _lloyd_fn(), resid.shape[1] // 16
+    seq = np.stack(
+        [
+            lloyd(resid[:, j * dsub : (j + 1) * dsub], 16, 42 * 99991 + j)
+            for j in range(16)
+        ]
     )
-    assert seq.codes.count() == par.codes.count()
+    assert (pq.codebooks == seq).all()
+    assert pq.codes.count() == 500
 
 
 def test_pq_refine_repairs_adc_recall(spark, emb, ivf16):
@@ -675,8 +729,8 @@ def test_pq_deterministic_rebuild(spark, emb, ivf16):
 
 
 def test_pq_save_load_roundtrip_and_pruning(spark, emb, ivf16, tmp_path):
-    """Reloaded index answers identically; the ADC scan over the
-    reloaded cell-partitioned codes carries the probe as a
+    """Reloaded index answers identically; the point search's ADC scan
+    over the reloaded cell-partitioned codes carries the probe as a
     PartitionFilter (only probed cells' files are read)."""
     import re
 
@@ -695,8 +749,7 @@ def test_pq_save_load_roundtrip_and_pruning(spark, emb, ivf16, tmp_path):
     ]
     assert before == after and before
 
-    scored = pq2._adc_scored(q, nprobe=4)
-    plan = formatted_plan(scored)
+    plan = formatted_plan(pq2.search(q, 5, nprobe=4, refine=0))
     assert "PartitionFilters" in plan
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
     assert "cell_id" in pf, f"cell filter not pushed to partitions: {pf}"
@@ -802,6 +855,49 @@ def test_rebalance_reaches_occupancy_bound(spark, emb):
         for r in bal.search(q, 10, nprobe=bal.centroids.shape[0]).collect()
     ]
     assert got == exact
+
+
+def test_rebalance_keeps_partitions_and_ignores_row_order(spark, emb):
+    """Each split round unions the cold rows with the re-placed hot
+    rows; the union is coalesced back to the receiver's partition
+    count, so ``rebalance`` never leaves more partitions than it got.
+    The hot-cell fits draw their seeds by row position, so they sort
+    each cell's rows by id: a row-shuffled copy of the same index
+    rebalances to the same cell table and assignments."""
+    import numpy as np
+
+    from vector_database_in_rust_spark.operators.ann import HierarchicalIVF, IVFIndex
+
+    _, new = _drift_cluster_df(spark)
+    new = new.select("vec_id", "embedding")
+
+    def state(idx):
+        asg = sorted(
+            tuple(r) for r in idx.assignments.select("vec_id", "cell_id").collect()
+        )
+        return idx.centroids.tolist(), idx.parent.tolist(), asg
+
+    for base in (
+        IVFIndex.build(emb, num_cells=8, seed=42),
+        HierarchicalIVF.build(emb, k1=3, k2=3, seed=42),
+    ):
+        grown = base.assign_new(new)
+        before = grown.assignments.rdd.getNumPartitions()
+        bal = grown.rebalance(factor=2.0, max_rounds=6)
+        assert bal.num_cells > grown.num_cells
+        assert bal.assignments.rdd.getNumPartitions() <= before
+        shuffled = type(grown)(
+            grown.l1,
+            grown.centroids,
+            grown.parent,
+            grown.assignments.orderBy(F.rand(7)),
+            id_col=grown.id_col,
+            vec_col=grown.vec_col,
+            proj=grown.proj,
+        ).rebalance(factor=2.0, max_rounds=6)
+        want, got = state(bal), state(shuffled)
+        assert np.array_equal(np.asarray(got[0]), np.asarray(want[0]), equal_nan=True)
+        assert got[1:] == want[1:]
 
 
 def test_split_hot_cells_judges_against_post_split_mean(spark):
@@ -1908,14 +2004,16 @@ for idx in (
 ):
     grown = idx.assign_new(drift).split_hot_cells(factor=1.5)
     assert grown.num_cells > idx.num_cells, type(idx).__name__
-    top = grown.search_batch(q, 1, nprobe=grown.num_cells).collect()
-    assert top[0]["vec_id"] == 3 and top[0]["dist"] == 0.0, top
-pq = IVFPQIndex.build(
-    IVFIndex.build(base, num_cells=4, seed=1), m=2, ksub=4,
-    fit_distributed=True,
-)
+    for serve in (grown.search_batch, grown.search_batch_pruned):
+        top = serve(q, 1, nprobe=grown.num_cells).collect()
+        assert top[0]["vec_id"] == 3 and top[0]["dist"] == 0.0, top
+pq = IVFPQIndex.build(IVFIndex.build(base, num_cells=4, seed=1), m=2, ksub=4)
 top = pq.search_batch(q, 1, nprobe=4, refine=200, store=base).collect()
 assert top[0]["vec_id"] == 3, top
+assert pq.search(rows[3][1], 1, nprobe=4, refine=200, store=base).collect()[0][
+    "vec_id"
+] == 3
+assert len(pq.search(rows[3][1], 5, nprobe=4, refine=0).collect()) == 5
 spark.stop()
 print("EXECUTOR-CLOSURES-OK")
 """
@@ -1923,11 +2021,13 @@ print("EXECUTOR-CLOSURES-OK")
 
 def test_executor_closures_need_no_package_import(tmp_path):
     """Executor-side closures (cell ranking, assignment, hot-cell and
-    PQ codebook fits) must pickle by value: a driver that imports the
+    PQ codebook fits, the BLAS and ADC scorers and the pruned scan that
+    feeds them) must pickle by value: a driver that imports the
     package from a path its workers do not share (here: run from a
     temp directory, package on the driver's ``sys.path`` only) still
-    builds, ingests, splits and serves under both constructors and runs
-    the distributed PQ codebook fit. A closure that reaches a
+    builds, ingests, splits and serves under both constructors
+    (``search_batch`` and ``search_batch_pruned``), runs the PQ codebook
+    fit and serves PQ point (refine 0 and > 0) and batch searches. A closure that reaches a
     module-level helper fails with ``ModuleNotFoundError`` on the
     workers."""
     import os

@@ -271,23 +271,6 @@ def test_pq_overwrite_reduced_with_full_space(spark, hd_emb, ridx, tmp_path):
     assert got == want and got
 
 
-def test_pq_legacy_load_without_meta(spark, ridx, tmp_path):
-    """Pre-round-10 saves carry no meta table; load falls back to the
-    narrowed directory-existence probe and still restores the
-    projection."""
-    import shutil
-
-    path = str(tmp_path / "pq_legacy")
-    # explicit geom: pre-round-10 saves predate full-space codes, so a
-    # faithful legacy fixture must not carry a code_centroids table
-    IVFPQIndex.build(ridx, m=8, ksub=16, seed=42, code_space="geom").save(
-        spark, path
-    )
-    shutil.rmtree(f"{path}/meta")
-    loaded = IVFPQIndex.load(spark, path)
-    assert loaded.proj is not None and loaded.proj.shape == (DIM, COARSE)
-
-
 def test_coarse_dim_validation(hd_emb):
     with pytest.raises(ValueError):
         IVFIndex.build(hd_emb, num_cells=4, coarse_dim=DIM)

@@ -117,10 +117,11 @@ def _pca_projection(
 def _project_udf(proj: np.ndarray):
     """Vectorized Arrow-batch projection ``x @ proj`` as a pandas UDF —
     composes onto any frame without re-stating its schema. It feeds
-    only the KMeans fit sample of both builds and the PQ query tables;
-    float32 output, never the exact re-rank surface. Probes and
-    placement project in float64 inside ``_cell_rank_fn``, and the
-    stored GEOM_COL comes from that projection (``_assign_cells``)."""
+    only the KMeans fit sample of both builds; float32 output, never
+    the exact re-rank surface. Probes and placement project in float64
+    inside ``_cell_rank_fn``, the stored GEOM_COL comes from that
+    projection (``_assign_cells``), and PQ queries project in float64
+    before their ADC residuals (``IVFPQIndex._code_space``)."""
     from pyspark.sql.functions import pandas_udf
 
     p32 = np.ascontiguousarray(proj, dtype=np.float32)
@@ -291,6 +292,35 @@ def _assign_cells(rows: DataFrame, geom, *, id_col: str, vec_col: str) -> DataFr
     return rows.select(id_col, vec_col).mapInPandas(assign, StructType(fields))
 
 
+def _keep_topk_fn(k: int, score_col: str):
+    """The per-query cut both cell kernels end in: ``keep_topk(qids,
+    ids, d)`` keeps each query's top-k candidates of the (queries x
+    candidates) score block ``d`` under (score, vec_id) and returns them
+    as long ``(query_id, vec_id, score_col)`` rows.
+
+    Id columns come back as object dtype: Arrow coerces to the declared
+    schema types, so int/string/etc ids all pass through unchanged (an
+    int64-forced Series crashed string ids, round 13)."""
+
+    def keep_topk(qids, ids: np.ndarray, d: np.ndarray) -> pd.DataFrame:
+        kk = min(k, d.shape[1])
+        out_q, out_v, out_d = [], [], []
+        for qi in range(d.shape[0]):
+            order = np.lexsort((ids, d[qi]))[:kk]
+            out_q.extend([qids[qi]] * kk)
+            out_v.extend(ids[order])
+            out_d.extend(d[qi][order])
+        return pd.DataFrame(
+            {
+                "query_id": pd.Series(out_q, dtype=object),
+                "vec_id": pd.Series(out_v, dtype=object),
+                score_col: pd.Series(out_d, dtype="float64"),
+            }
+        )
+
+    return keep_topk
+
+
 def _cell_topk_fn(k: int, round_digits: int | None):
     """The one per-cell BLAS scorer behind ``search_batch`` and
     ``search_batch_pruned``, as an executor-side
@@ -310,11 +340,8 @@ def _cell_topk_fn(k: int, round_digits: int | None):
     (np.round is half-even and can differ on exact boundary values).
     The expanded form can differ from an elementwise sum in the last
     float place, so a distance within one ulp of a rounding boundary
-    may round the other way (round-12 advisor note).
-
-    Id columns come back as object dtype: Arrow coerces to the declared
-    schema types, so int/string/etc ids all pass through unchanged (an
-    int64-forced Series crashed string ids, round 13)."""
+    may round the other way (round-12 advisor note)."""
+    keep_topk = _keep_topk_fn(k, "dist")
 
     def cell_topk(qids, qmat: np.ndarray, ids: np.ndarray, vecs: pd.Series):
         x = np.vstack(vecs.apply(np.asarray, args=(np.float64,)))
@@ -327,22 +354,48 @@ def _cell_topk_fn(k: int, round_digits: int | None):
         if round_digits is not None:
             s = 10.0 ** round_digits
             d = np.floor(d * s + 0.5) / s
-        kk = min(k, d.shape[1])
-        out_q, out_v, out_d = [], [], []
-        for qi in range(d.shape[0]):
-            order = np.lexsort((ids, d[qi]))[:kk]
-            out_q.extend([qids[qi]] * kk)
-            out_v.extend(ids[order])
-            out_d.extend(d[qi][order])
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype=object),
-                "vec_id": pd.Series(out_v, dtype=object),
-                "dist": pd.Series(out_d, dtype="float64"),
-            }
-        )
+        return keep_topk(qids, ids, d)
 
     return cell_topk
+
+
+def _cell_adc_fn(keep: int):
+    """The one ADC scorer over PQ codes — the PQ twin of
+    ``_cell_topk_fn`` behind both ``IVFPQIndex.search`` and
+    ``IVFPQIndex.search_batch``, as a closure factory (executors need
+    not import this package).
+
+    ``cell_adc(qids, resid, books, ids, codes)`` builds one (m x ksub)
+    lookup table per query from its residual ``resid`` against the
+    cell's code centroid (the query stays un-quantized — the
+    "asymmetric" part), gather-sums the cell's m-byte ``codes`` column
+    by column (no multiply in the scoring loop), and keeps each query's
+    top-``keep`` under (adc, vec_id). The global top-``keep`` lies in
+    the union of the per-cell cuts (the containment argument of the
+    BLAS form). ADC distances are approximate by construction — callers
+    re-rank the survivors against true vectors (``refine``), so no
+    rounding is applied here."""
+    keep_topk = _keep_topk_fn(keep, "adc")
+
+    def cell_adc(qids, resid: np.ndarray, books: np.ndarray, ids, codes: pd.Series):
+        m, _, dsub = books.shape
+        tables = np.stack(
+            [
+                (
+                    (books[j][None, :, :] - resid[:, None, j * dsub : (j + 1) * dsub])
+                    ** 2
+                ).sum(axis=2)
+                for j in range(m)
+            ],
+            axis=1,
+        )
+        cm = np.vstack(codes.apply(lambda b: np.frombuffer(bytes(b), dtype=np.uint8)))
+        adc = np.zeros((len(resid), len(ids)))
+        for j in range(m):
+            adc += tables[:, j, :][:, cm[:, j]]
+        return keep_topk(qids, ids, adc)
+
+    return cell_adc
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -357,69 +410,36 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _pruned_blas_topk(
-    assignments: DataFrame,
-    data: list,
-    k: int,
-    *,
-    id_col: str,
-    vec_col: str,
-    round_digits: int | None,
-    query_id_type: str = "bigint",
-) -> DataFrame:
-    """Score a partition-pruned candidate scan against its probe set
-    with per-cell BLAS batches (``_cell_topk_fn``) — the broadcast-small
-    serve (round 12).
+def _pruned_scan(rows: DataFrame, probes: dict, score, schema: str) -> DataFrame:
+    """Score a partition-pruned candidate scan against a driver-side
+    probe set — the broadcast-small serve of ``search_batch_pruned``
+    (``_cell_topk_fn``) and of PQ point ``search`` (``_cell_adc_fn``).
 
-    ``data`` is the driver-side probe list [(query_id, vec, cell_id)];
-    it rides to the executors as one broadcast {cell: (qids, Q)} and
-    every Arrow batch of the scan is scored cell by cell. The first
-    5M x 384-d serve measurement showed the expression form (broadcast
-    join + zip_with/aggregate L2) spending 24-48 s on ~1.2M
-    candidate-pair x 384-element interpreted array ops while the
-    pruned scan itself was seconds.
-
-    Id columns pass through with their source types: ``vec_id`` takes
-    ``assignments[id_col]``'s type, ``query_id`` the caller-declared
-    ``query_id_type`` — hardcoded BIGINT here broke custom string ids
-    under the engine facade (round 13; same class of bug as the hier
-    build's hardcoded schema, fixed round 11).
-    """
-    spark = assignments.sparkSession
-    probe_map: dict[int, tuple[list, list]] = {}
-    for qid, vec, cell in data:
-        probe_map.setdefault(int(cell), ([], []))
-        probe_map[int(cell)][0].append(qid)
-        probe_map[int(cell)][1].append(vec)
-    packed = {
-        c: (list(qids), np.asarray(vecs, dtype=np.float64))
-        for c, (qids, vecs) in probe_map.items()
-    }
-    bc = spark.sparkContext.broadcast(packed)
-    all_cells = sorted(packed)
-    id_type = assignments.schema[id_col].dataType.simpleString()
-    cell_topk = _cell_topk_fn(k, round_digits)
+    ``rows`` is ``(cell_id, id, payload)``. ``probes`` maps each probed
+    cell to its probe-side arguments and rides to the executors as one
+    broadcast; the scan carries a static ``cell_id IN (...)`` predicate,
+    which on a saved cell-partitioned index is partition pruning. Every
+    Arrow batch is scored cell by cell as ``score(*probes[cell], ids,
+    payload)`` into ``schema`` rows. The first 5M x 384-d serve
+    measurement showed the expression form (broadcast join +
+    zip_with/aggregate L2) spending 24-48 s on ~1.2M candidate-pair x
+    384-element interpreted array ops while the pruned scan itself was
+    seconds (round 12)."""
+    bc = rows.sparkSession.sparkContext.broadcast(probes)
+    id_col, payload = rows.columns[1:]
 
     def block(batches):
-        probes = bc.value
+        p = bc.value
         for pdf in batches:
             frames = [
-                cell_topk(
-                    *probes[int(cell)], sub[id_col].to_numpy(), sub[vec_col]
-                )
+                score(*p[int(cell)], sub[id_col].to_numpy(), sub[payload])
                 for cell, sub in pdf.groupby("cell_id")
-                if int(cell) in probes
             ]
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    cand = assignments.filter(F.col("cell_id").isin(all_cells)).select(
-        "cell_id", F.col(id_col), F.col(vec_col)
-    )
-    scored = cand.mapInPandas(
-        block, f"query_id {query_id_type}, vec_id {id_type}, dist DOUBLE"
-    )
-    return _rank_topk(scored, k)
+    cand = rows.filter(F.col("cell_id").isin(sorted(probes)))
+    return cand.mapInPandas(block, schema)
 
 
 # Rows of one hot cell its local 2-means fits on (a seeded sample
@@ -427,15 +447,20 @@ def _pruned_blas_topk(
 MAX_CELL_FIT_ROWS = 100_000
 
 
-def _fit_hot_subcentroids(hot_rows: DataFrame, *, geom_col: str, seed: int) -> dict:
+def _fit_hot_subcentroids(
+    hot_rows: DataFrame, *, id_col: str, geom_col: str, seed: int
+) -> dict:
     """Per-hot-cell seeded local 2-means, one ``applyInPandas`` group
     per cell (the HierarchicalIVF level-2 discipline) behind
-    ``split_hot_cells``. Returns {(cell_id, sub): centroid}."""
+    ``split_hot_cells``. Returns {(cell_id, sub): centroid}. Each group
+    is sorted by id first: the seeded draws pick rows by position, and
+    the order a shuffle delivers a group's rows in is not fixed."""
     lloyd = _lloyd_fn()
     cap = MAX_CELL_FIT_ROWS
 
     def fit2(pdf: pd.DataFrame) -> pd.DataFrame:
         c = int(pdf["cell_id"].iloc[0])
+        pdf = pdf.sort_values(id_col, kind="stable")
         x = np.vstack(pdf[geom_col].apply(np.asarray, dtype=np.float64))
         if len(x) > cap:
             rng = np.random.RandomState(seed * 131 + c)
@@ -521,12 +546,11 @@ def _cogroup_blas_topk(
 def _cogroup_adc_topk(
     probed: DataFrame,
     codes: DataFrame,
-    centroids: np.ndarray,
-    codebooks: np.ndarray,
+    code_space: tuple,
     keep: int,
     *,
     query_id_col: str,
-    query_geom_col: str,
+    query_vec_col: str,
     query_id_type: str,
 ) -> DataFrame:
     """ADC scoring for DISTRIBUTED query batches over PQ CODES (round
@@ -535,60 +559,28 @@ def _cogroup_adc_topk(
     vectors — at 384-d float32 that is ~32x fewer candidate bytes
     through the exchange (1,536 -> 48 at m=48, 16 at m=16), which is
     the reference's out-of-core ambition (readme.md:15) applied to the
-    serving tier. Per cell group: one (m x ksub) lookup table per query
-    from its residual against the cell centroid (tables are
-    query-local, so they are built inside the group, never shuffled),
-    then a gather-sum per code column — no multiply at all in the
-    scoring loop. Emits each (query, cell)'s top-``keep`` under
-    (adc, vec_id); the global per-query top-keep is contained in the
-    union of per-cell top-keeps (same containment argument as the BLAS
-    form). ADC distances are approximate by construction — callers
-    re-rank the survivors against true vectors (``refine``), so no
-    rounding is applied here."""
-    m, ksub, dsub = codebooks.shape
-    bc = codes.sparkSession.sparkContext.broadcast((centroids, codebooks))
+    serving tier. ``code_space`` is ``IVFPQIndex._code_space()``: each
+    cell group maps its queries into the code space, takes their
+    residuals against the cell's code centroid and scores them with
+    ``_cell_adc_fn`` — tables are query-local, so they are built inside
+    the group, never shuffled. Emits each (query, cell)'s top-``keep``
+    under (adc, vec_id)."""
+    bc = codes.sparkSession.sparkContext.broadcast(code_space)
+    cell_adc = _cell_adc_fn(keep)
 
     def block(key, probes, cands):
         if probes.empty or cands.empty:
             return pd.DataFrame({"query_id": [], "vec_id": [], "adc": []})
-        cents, books = bc.value
-        cell = int(key[0])
-        q = np.vstack(probes[query_geom_col].apply(np.asarray, args=(np.float64,)))
-        qids = probes[query_id_col].to_numpy()
-        r = q - cents[cell][None, :]
-        # (nq, m, ksub) residual tables, built batch-vectorized
-        tables = np.stack(
-            [
-                (
-                    (books[j][None, :, :] - r[:, None, j * dsub : (j + 1) * dsub])
-                    ** 2
-                ).sum(axis=2)
-                for j in range(m)
-            ],
-            axis=1,
-        )
-        cm = np.vstack(
-            cands["codes"].apply(
-                lambda b: np.frombuffer(bytes(b), dtype=np.uint8)
-            )
-        )
-        ids = cands["vec_id"].to_numpy()
-        adc = np.zeros((len(q), len(ids)))
-        for j in range(m):
-            adc += tables[:, j, :][:, cm[:, j]]
-        kk = min(keep, adc.shape[1])
-        out_q, out_v, out_d = [], [], []
-        for qi in range(adc.shape[0]):
-            order = np.lexsort((ids, adc[qi]))[:kk]
-            out_q.extend([qids[qi]] * kk)
-            out_v.extend(ids[order])
-            out_d.extend(adc[qi][order])
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype=object),
-                "vec_id": pd.Series(out_v, dtype="int64"),
-                "adc": pd.Series(out_d, dtype="float64"),
-            }
+        proj, cents, books = bc.value
+        q = np.vstack(probes[query_vec_col].apply(np.asarray, args=(np.float64,)))
+        if proj is not None:
+            q = q @ proj
+        return cell_adc(
+            probes[query_id_col].to_numpy(),
+            q - cents[int(key[0])][None, :],
+            books,
+            cands["vec_id"].to_numpy(),
+            cands["codes"],
         )
 
     cand = _in_probed_cells(codes.select("cell_id", "vec_id", "codes"), probed)
@@ -1143,7 +1135,7 @@ class IVFIndex:
         broadcast-small by contract (same as ``knn_batch``), enforced by
         the same bounded collect. Candidate scoring is
         :meth:`search_batch`'s per-cell kernel (``_cell_topk_fn``) fed by
-        the pruned scan (``_pruned_blas_topk``), so results match
+        the pruned scan (``_pruned_scan``), so results match
         :meth:`search_batch` at the same budget — modulo a distance
         within one ulp of a rounding boundary, where a different BLAS
         blocking of the same cell can round it apart.
@@ -1163,20 +1155,25 @@ class IVFIndex:
         )
         vecs = [[float(x) for x in r[query_vec_col]] for r in q_rows]
         cells = _rank_rows(self._cell_geometry(), vecs, nprobe_l1, nprobe)
-        data = [
-            (r[query_id_col], v, c)
-            for r, v, cs in zip(q_rows, vecs, cells)
-            for c in cs
-        ]
-        return _pruned_blas_topk(
-            self.assignments,
-            data,
-            k,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            round_digits=round_digits,
-            query_id_type=queries.schema[query_id_col].dataType.simpleString(),
+        probes: dict = {}
+        for r, v, cs in zip(q_rows, vecs, cells):
+            for c in cs:
+                qids, qvecs = probes.setdefault(c, ([], []))
+                qids.append(r[query_id_col])
+                qvecs.append(v)
+        probes = {
+            c: (qids, np.asarray(qvecs, dtype=np.float64))
+            for c, (qids, qvecs) in probes.items()
+        }
+        id_type = self.assignments.schema[self.id_col].dataType.simpleString()
+        q_type = queries.schema[query_id_col].dataType.simpleString()
+        scored = _pruned_scan(
+            self.assignments.select("cell_id", self.id_col, self.vec_col),
+            probes,
+            _cell_topk_fn(k, round_digits),
+            f"query_id {q_type}, vec_id {id_type}, dist DOUBLE",
         )
+        return _rank_topk(scored, k)
 
     def assign_new(self, new_vectors: DataFrame) -> "IVFIndex":
         """Incrementally index NEW vectors against the EXISTING geometry
@@ -1336,7 +1333,9 @@ class IVFIndex:
         level-2 discipline); hot rows are re-placed by the kernel
         against every cell of their super-cell; cold rows are
         untouched. Driver-side state is the occupancy table (num_cells
-        rows) and 2 x |hot| sub-centroids. Returns a NEW index
+        rows) and 2 x |hot| sub-centroids. The union of cold and moved
+        rows is coalesced to the receiver's partition count, so rounds
+        of ``rebalance`` do not double it. Returns a NEW index
         (assignments lazily re-derived; the caller persists/saves as
         usual)."""
         occ = {
@@ -1358,10 +1357,12 @@ class IVFIndex:
 
         is_hot = F.col("cell_id").isin(hot)
         hot_rows = self.assignments.filter(is_hot)
-        subs = _fit_hot_subcentroids(hot_rows, geom_col=self.geom_col, seed=seed)
+        subs = _fit_hot_subcentroids(
+            hot_rows, id_col=self.id_col, geom_col=self.geom_col, seed=seed
+        )
         centroids = self.centroids.copy()
         centroids[hot] = [subs[(c, 0)] for c in hot]
-        return type(self)(
+        split = type(self)(
             self.l1,
             np.vstack([centroids] + [subs[(c, 1)] for c in hot]),
             np.concatenate([self.parent, self.parent[hot]]),
@@ -1370,6 +1371,10 @@ class IVFIndex:
             vec_col=self.vec_col,
             proj=self.proj,
         ).assign_new(hot_rows.select(self.id_col, self.vec_col))
+        split.assignments = split.assignments.coalesce(
+            self.assignments.rdd.getNumPartitions()
+        )
+        return split
 
     def rebalance(
         self,
@@ -1606,21 +1611,25 @@ class IVFPQIndex:
 
     Layout and scale shape:
 
-    - **fit** (driver-side, bounded): subquantizer codebooks are trained
-      on a SAMPLE of residuals (vector minus its cell centroid) with
-      seeded numpy Lloyd iterations — the codebook is tiny
-      (m x ksub x dim/m doubles) and broadcastable, like the centroid
-      matrix;
+    - **fit** (bounded): subquantizer codebooks are trained on a SAMPLE
+      of residuals (vector minus its cell centroid) with seeded numpy
+      Lloyd iterations, one Spark task per subquantizer — the codebook
+      is tiny (m x ksub x dim/m doubles) and broadcastable, like the
+      centroid matrix;
     - **encode** (distributed): one Arrow ``mapInPandas`` pass over the
       assignments; the corpus-sized output is only
       ``(vec_id, cell_id, codes)`` — the float vectors stay in the
       store and never ride along with the index;
-    - **search** (ADC — asymmetric distance computation): probe cells
-      driver-side exactly like ``IVFIndex.search_batch_pruned``; build
-      one (m x ksub) lookup table per probed cell from the QUERY
-      residual (query stays un-quantized — that is the "asymmetric"
-      part); score candidates with pure table gathers (no float vectors
-      read); optionally re-rank the top ``refine * k`` ADC candidates
+    - **search** (ADC — asymmetric distance computation): one scorer,
+      ``_cell_adc_fn``, for point and batch. Point ``search`` ranks
+      cells driver-side and scans the probed cells' codes through the
+      pruned scan of ``IVFIndex.search_batch_pruned`` (``_pruned_scan``),
+      broadcasting only the query's residual per probed cell;
+      ``search_batch`` feeds the same scorer from a cogroup. Each
+      builds one (m x ksub) lookup table per query from its residual
+      (the query stays un-quantized — that is the "asymmetric" part)
+      and scores candidates with pure table gathers (no float vectors
+      read); optionally the top ``refine * k`` ADC candidates re-rank
       exactly against the store — the standard recall repair, paying
       full-vector reads for only a handful of rows.
     """
@@ -1678,7 +1687,6 @@ class IVFPQIndex:
         max_fit_rows: int = 50_000,
         lloyd_iters: int = 15,
         code_space: str | None = None,
-        fit_distributed: bool | None = None,
     ) -> "IVFPQIndex":
         """``code_space`` (round 14): ``"geom"`` quantizes residuals in
         the index's cell GEOMETRY space — the original vectors on a raw
@@ -1775,46 +1783,23 @@ class IVFPQIndex:
         # The m subquantizer fits are independent — at serving-tier
         # settings they dominate the build wall when run sequentially
         # on the driver (measured r14: the 5M x 384-d m=48/ksub=256
-        # build spent most of its 1,745 s here). Distribute them one
-        # task per subquantizer against the broadcast residual sample;
-        # same seeds -> bit-identical codebooks (pinned by test).
-        # Tiny fits stay on the driver: task overhead would dominate.
-        if fit_distributed is None:
-            est_flops = len(resid) * ksub * dsub * m * lloyd_iters
-            fit_distributed = est_flops >= 2e9
+        # build spent most of its 1,745 s there). They run one task per
+        # subquantizer against the broadcast residual sample.
         lloyd = _lloyd_fn()
-        if fit_distributed and m > 1:
-            bc_resid = spark.sparkContext.broadcast(
-                np.ascontiguousarray(resid)
+        bc_resid = spark.sparkContext.broadcast(np.ascontiguousarray(resid))
+
+        def fit_block(j: int) -> np.ndarray:
+            r = bc_resid.value
+            return lloyd(
+                r[:, j * dsub : (j + 1) * dsub],
+                ksub,
+                seed * 99991 + j,
+                iters=lloyd_iters,
             )
 
-            def fit_block(j: int):
-                r = bc_resid.value
-                return j, lloyd(
-                    r[:, j * dsub : (j + 1) * dsub],
-                    ksub,
-                    seed * 99991 + j,
-                    iters=lloyd_iters,
-                )
-
-            fitted = dict(
-                spark.sparkContext.parallelize(range(m), m)
-                .map(fit_block)
-                .collect()
-            )
-            codebooks = np.stack([fitted[j] for j in range(m)])
-        else:
-            codebooks = np.stack(
-                [
-                    lloyd(
-                        resid[:, j * dsub : (j + 1) * dsub],
-                        ksub,
-                        seed * 99991 + j,
-                        iters=lloyd_iters,
-                    )
-                    for j in range(m)
-                ]
-            )
+        codebooks = np.stack(
+            spark.sparkContext.parallelize(range(m), m).map(fit_block).collect()
+        )
         bc = spark.sparkContext.broadcast((code_cent, codebooks))
 
         def encode(it):
@@ -1871,62 +1856,14 @@ class IVFPQIndex:
             code_centroids=code_cent if full_codes else None,
         )
 
-    def _adc_scored(self, query, nprobe: int) -> DataFrame:
-        """ADC scores for all candidates in the probed cells: a static
-        ``cell_id IN (...)`` scan over the codes (partition-prunable
-        when saved partitioned by cell_id) + per-batch table gathers."""
-        q_full = np.asarray(query, dtype=np.float64)
-        q = q_full @ self.proj if self.proj is not None else q_full
-        cells = _rank_rows(self._cell_geometry(), [q_full], 1, nprobe)[0]
-        m, ksub, dsub = self.codebooks.shape
-        # One (m x ksub) table per probed cell, from the query residual
-        # in the CODE space: reduced geometry by default, full-space
-        # means for code_space="full" (probe ranking stays reduced).
-        tab_cent = (
-            self.code_centroids
-            if self.code_centroids is not None
-            else self.centroids
-        )
-        tab_q = q_full if self.code_centroids is not None else q
-        tables = {}
-        for c in cells:
-            r = tab_q - tab_cent[c]
-            tables[c] = np.stack(
-                [
-                    ((self.codebooks[j] - r[j * dsub : (j + 1) * dsub]) ** 2).sum(
-                        axis=1
-                    )
-                    for j in range(m)
-                ]
-            )
-        spark = self.codes.sparkSession
-        bc = spark.sparkContext.broadcast(tables)
-
-        def score(it):
-            import pandas as pd
-
-            tb = bc.value
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                codes = np.vstack(
-                    pdf["codes"].apply(
-                        lambda b: np.frombuffer(bytes(b), dtype=np.uint8)
-                    )
-                )
-                adc = np.empty(len(pdf), dtype=np.float64)
-                cell_arr = pdf["cell_id"].to_numpy()
-                for c in np.unique(cell_arr):
-                    msk = cell_arr == c
-                    t = tb[int(c)]  # (m, ksub)
-                    adc[msk] = t[np.arange(t.shape[0]), codes[msk]].sum(axis=1)
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"].astype("int64"), "adc": adc}
-                )
-
-        return self.codes.filter(F.col("cell_id").isin(cells)).mapInPandas(
-            score, schema="vec_id BIGINT, adc DOUBLE"
-        )
+    def _code_space(self) -> tuple:
+        """(projection, code centroids, codebooks) of the space the codes
+        quantize: the cell geometry by default, full-space per-cell
+        means for ``code_space="full"`` (probe ranking stays in the
+        reduced geometry either way; see :meth:`build`)."""
+        if self.code_centroids is not None:
+            return None, self.code_centroids, self.codebooks
+        return self.proj, self.centroids, self.codebooks
 
     def search(
         self,
@@ -1938,24 +1875,38 @@ class IVFPQIndex:
         store: DataFrame | None = None,
     ) -> DataFrame:
         """Top-k by ADC, optionally exact-refined: the top ``refine*k``
-        ADC candidates re-rank against their TRUE vectors from ``store``
-        (required when ``refine > 0`` — the index holds only codes, so
-        full vectors must come from the caller's store) — full-vector
-        reads for refine*k rows only. ``refine=0`` returns raw ADC
-        ranks with the approximate distance."""
-        scored = self._adc_scored(query, nprobe)
-        if refine <= 0:
-            return (
-                scored.select("vec_id", F.round("adc", 4).alias("dist"))
-                .orderBy("dist", "vec_id")
-                .limit(k)
-            )
-        if store is None:
+        ADC candidates under (adc, vec_id) re-rank against their TRUE
+        vectors from ``store`` (required when ``refine > 0`` — the index
+        holds only codes, so full vectors must come from the caller's
+        store) — full-vector reads for refine*k rows only. ``refine=0``
+        returns the top-k ADC ranks with the approximate distance.
+
+        The probed cells' codes are one static ``cell_id IN (...)`` scan
+        (partition-pruned on a saved index) scored by ``_cell_adc_fn``;
+        the broadcast carries the query's residual per probed cell and
+        the codebooks, never a centroid table."""
+        if refine > 0 and store is None:
             raise ValueError("refine > 0 requires the vector store (store=)")
-        cand = scored.orderBy("adc", "vec_id").limit(max(refine, 1) * k)
-        keep = cand.select(F.col("vec_id").alias("_cand_id"))
+        q = np.asarray(query, dtype=np.float64)
+        cells = _rank_rows(self._cell_geometry(), [q], 1, nprobe)[0]
+        proj, cents, books = self._code_space()
+        qc = q @ proj if proj is not None else q
+        probes = {c: ([0], (qc - cents[c])[None, :], books) for c in cells}
+        keep = max(refine, 1) * k
+        scored = _pruned_scan(
+            self.codes.select("cell_id", "vec_id", "codes"),
+            probes,
+            _cell_adc_fn(keep),
+            "query_id INT, vec_id BIGINT, adc DOUBLE",
+        )
+        cand = scored.orderBy("adc", "vec_id").limit(keep)
+        if refine <= 0:
+            return cand.select("vec_id", F.round("adc", 4).alias("dist")).orderBy(
+                "dist", "vec_id"
+            )
+        ids = cand.select(F.col("vec_id").alias("_cand_id"))
         joined = store.join(
-            F.broadcast(keep), on=store[self.id_col] == F.col("_cand_id"), how="inner"
+            F.broadcast(ids), on=store[self.id_col] == F.col("_cand_id"), how="inner"
         )
         return knn_exact(
             joined.select(F.col(self.id_col).alias("vec_id"),
@@ -1990,10 +1941,10 @@ class IVFPQIndex:
         distributed regime ``search`` cannot serve):
 
         1. one ``mapInPandas`` pass of the cell-ranking kernel
-           (``_probed_pairs``) -> top-``nprobe`` cells per query
-           (reduced-geometry queries are projected first);
-        2. ``_cogroup_adc_topk``: per-cell gather-sum ADC with a
-           map-side top-``refine*k`` cut under (adc, vec_id);
+           (``_probed_pairs``) -> top-``nprobe`` cells per query;
+        2. ``_cogroup_adc_topk``: per cell group, the queries' code-space
+           residuals scored by :meth:`search`'s ``_cell_adc_fn`` with its
+           top-``refine*k`` cut under (adc, vec_id);
         3. global per-query top-``refine*k`` window over the ADC
            scores;
         4. ``refine > 0``: join the survivors to ``store`` on id and to
@@ -2009,34 +1960,21 @@ class IVFPQIndex:
         this distributed path too)."""
         if refine > 0 and store is None:
             raise ValueError("refine > 0 requires the vector store (store=)")
-        # probe ranking always runs in the cheap reduced geometry; the
-        # ADC tables run in the CODE space (full-space residuals for
-        # code_space="full" indexes — the measured top-decade quality
-        # requirement, see build())
-        tab_col = query_vec_col
-        if self.proj is not None and self.code_centroids is None:
-            tab_col = "_q_rvec"
-            queries = queries.withColumn(
-                tab_col, _project_udf(self.proj)(F.col(query_vec_col))
-            )
         probed = _probed_pairs(
-            queries.select(*dict.fromkeys((query_id_col, query_vec_col, tab_col))),
+            queries.select(query_id_col, query_vec_col),
             self._cell_geometry(),
             nprobe_l1=1,
             nprobe=nprobe,
             vec_col=query_vec_col,
-        ).select(query_id_col, tab_col, "cell_id")
+        )
         keep = max(refine, 1) * k
         scored = _cogroup_adc_topk(
             probed,
             self.codes,
-            self.code_centroids
-            if self.code_centroids is not None
-            else self.centroids,
-            self.codebooks,
+            self._code_space(),
             keep,
             query_id_col=query_id_col,
-            query_geom_col=tab_col,
+            query_vec_col=query_vec_col,
             query_id_type=queries.schema[query_id_col].dataType.simpleString(),
         )
         w = Window.partitionBy("query_id").orderBy("adc", "vec_id")
@@ -2154,38 +2092,15 @@ class IVFPQIndex:
         for r in book_rows:
             codebooks[r["m"], r["code"]] = np.asarray(r["centroid"])
         codes = spark.read.parquet(f"{path}/codes")
-        # The meta table is the explicit full-vs-reduced marker (r10):
-        # a stale proj/ left by a previous reduced index at the same
-        # path is IGNORED when meta says full-space, and a genuine
-        # proj read error (corruption, permissions) PROPAGATES instead
-        # of being silently classified as "full-space". Legacy saves
-        # (pre-meta) fall back to directory existence, narrowed to the
-        # missing-path AnalysisException.
-        from pyspark.errors import AnalysisException
-
-        def _read_proj() -> np.ndarray:
-            prows = (
-                spark.read.parquet(f"{path}/proj").orderBy("row_idx").collect()
-            )
-            return np.vstack([np.asarray(r["coeffs"]) for r in prows])
-
-        full_space = False
-        try:
-            meta = spark.read.parquet(f"{path}/meta").first()
-            has_proj = bool(meta["has_proj"])
-            # pre-r14 saves carry no full_space column
-            full_space = bool(
-                meta["full_space"]
-            ) if "full_space" in meta.asDict() else False
-        except AnalysisException:
-            try:
-                proj = _read_proj()
-            except AnalysisException:
-                proj = None
-        else:
-            proj = _read_proj() if has_proj else None
-        code_cent = None
-        if full_space:
+        # The meta table is the full-vs-reduced marker: a stale proj/
+        # left by a previous reduced index at the same path is ignored
+        # when meta says full-space.
+        meta = spark.read.parquet(f"{path}/meta").first()
+        proj = code_cent = None
+        if meta["has_proj"]:
+            prows = spark.read.parquet(f"{path}/proj").orderBy("row_idx").collect()
+            proj = np.vstack([np.asarray(r["coeffs"]) for r in prows])
+        if meta["full_space"]:
             cc_rows = (
                 spark.read.parquet(f"{path}/code_centroids")
                 .orderBy("cell_id")
