@@ -209,3 +209,26 @@ def test_build_index_hierarchical_custom_id_col(spark):
     q = [float(x) for x in df.filter("doc_id = 7").first()["embedding"]]
     top = eng.search(q, 3, nprobe=16).collect()
     assert top[0]["vec_id"] == 7 and top[0]["dist"] == 0.0
+
+
+def test_wrong_length_query_raises_before_planning(spark, eng):
+    """A query whose length is not the store's dimension is refused with
+    both lengths named, on every point-search entry: exact, ANN with and
+    without an index, and filtered. Unchecked, ``zip_with`` pads the
+    shorter array and every distance comes back NULL (exact), or numpy
+    fails to broadcast (IVF)."""
+    meta = eng.df.select("vec_id", "label")
+    calls = [
+        lambda q: eng.search_exact(q, 3),
+        lambda q: eng.search(q, 3),
+        lambda q: eng.search_filtered(
+            q, 3, metadata=meta, predicate=F.col("label") == 1
+        ),
+    ]
+    for indexed in (False, True):
+        if indexed:
+            eng.build_index(num_cells=4)
+        for call in calls:
+            for n in (5, 65):
+                with pytest.raises(ValueError, match=rf"{n} dimensions.*64"):
+                    call([0.1] * n)

@@ -13,7 +13,7 @@ from vector_database_in_rust_spark.functions.vectors import (
     dot_product,
     l2_norm,
     l2_squared,
-    query_vector_literal,
+    query_vector_sql,
 )
 
 DIM = 8
@@ -33,7 +33,7 @@ def _eval(spark, expr):
 @given(a=vec, b=vec)
 def test_l2_matches_numpy(spark, a, b):
     got = _eval(
-        spark, l2_squared(query_vector_literal(a), query_vector_literal(b))
+        spark, l2_squared(query_vector_sql(a), query_vector_sql(b))
     )
     want = float(np.sum((np.array(a, dtype=np.float64) - np.array(b, dtype=np.float64)) ** 2))
     assert got == pytest.approx(want, rel=1e-9, abs=1e-9)
@@ -44,7 +44,7 @@ def test_l2_matches_numpy(spark, a, b):
 def test_cosine_matches_numpy_with_guard(spark, a, b):
     got = _eval(
         spark,
-        cosine_similarity(query_vector_literal(a), query_vector_literal(b)),
+        cosine_similarity(query_vector_sql(a), query_vector_sql(b)),
     )
     na = float(np.linalg.norm(a))
     nb = float(np.linalg.norm(b))
@@ -61,7 +61,7 @@ def test_cosine_matches_numpy_with_guard(spark, a, b):
 @given(a=vec)
 def test_metric_axioms(spark, a):
     # d(a, a) == 0 and ||a||^2 == dot(a, a)
-    lit = query_vector_literal(a)
+    lit = query_vector_sql(a)
     assert _eval(spark, l2_squared(lit, lit)) == pytest.approx(0.0, abs=1e-9)
     n = _eval(spark, l2_norm(lit))
     d = _eval(spark, dot_product(lit, lit))
@@ -71,10 +71,45 @@ def test_metric_axioms(spark, a):
 @settings(max_examples=15, deadline=None)
 @given(a=vec, b=vec)
 def test_l2_symmetry(spark, a, b):
-    la, lb = query_vector_literal(a), query_vector_literal(b)
+    la, lb = query_vector_sql(a), query_vector_sql(b)
     assert _eval(spark, l2_squared(la, lb)) == pytest.approx(
         _eval(spark, l2_squared(lb, la)), rel=1e-12, abs=0
     )
+
+
+def _bits(xs):
+    # NaN compares by kind only: Spark may canonicalise its payload
+    return [
+        "nan" if np.isnan(x) else np.float64(x).tobytes() for x in xs
+    ]
+
+
+_EDGE = [
+    -0.0, 0.0, 5e-324, -5e-324, 2.2250738585072014e-308 / 3, 1e300, -1e300,
+    1.7976931348623157e308, float("nan"), float("inf"), float("-inf"),
+    0.1, 1 / 3, 1e-7, 1e22, 123456789.0,
+]
+
+
+@pytest.mark.parametrize("vec", [_EDGE, []], ids=["edge", "empty"])
+def test_query_vector_sql_round_trips_exactly(spark, vec):
+    """Every double survives query_vector_sql -> Spark bit for bit:
+    signed zero, subnormals, +-1e300, the largest double, NaN, +-inf; an
+    empty vector is an empty array<double>."""
+    from vector_database_in_rust_spark.functions.vectors import (
+        query_vector_literal,
+    )
+
+    got = _eval(spark, F.expr(query_vector_sql(vec)).cast("array<double>"))
+    assert _bits(got) == _bits(vec)
+    assert _bits(_eval(spark, query_vector_literal(vec))) == _bits(vec)
+
+
+@settings(max_examples=25, deadline=None)
+@given(a=st.lists(st.floats(width=64), max_size=12))
+def test_query_vector_sql_round_trips_any_double(spark, a):
+    got = _eval(spark, F.expr(query_vector_sql(a)).cast("array<double>"))
+    assert _bits(got) == _bits(a)
 
 
 @given(

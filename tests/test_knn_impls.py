@@ -267,3 +267,55 @@ def test_batch_query_guard_raises_on_oversized_frame(spark, emb, monkeypatch):
         impl="pandas",
     )
     assert ok.count() == 8 * 3
+
+
+def _py4j_calls(spark, construct) -> int:
+    """py4j round trips made while ``construct()`` builds (not runs) a
+    plan: the gateway client's ``send_command`` is counted for the
+    length of the call."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        construct()
+    finally:
+        del client.send_command
+    return len(calls)
+
+
+def test_point_query_construction_calls_do_not_grow_with_dim(spark):
+    """A point query's plan is built from SQL text (the query literal,
+    the distance and the probe filter), so building one ``IVFIndex.search``
+    or ``knn_exact`` costs the same number of py4j round trips at 8-d as
+    at 384-d. Writing the literal element by element costs one or more
+    per dimension."""
+    import numpy as np
+
+    from vector_database_in_rust_spark.operators.ann import IVFIndex
+    from vector_database_in_rust_spark.operators.knn import knn_exact
+
+    counts = {}
+    for dim in (8, 384):
+        rng = np.random.RandomState(dim)
+        x = rng.standard_normal((64, dim)).astype(np.float32)
+        df = spark.createDataFrame(
+            [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+            "vec_id BIGINT, embedding ARRAY<FLOAT>",
+        )
+        idx = IVFIndex.build(df, num_cells=4, seed=7)
+        q = [float(v) for v in x[3]]
+        idx.search(q, 10, nprobe=2)  # warm: first-use lookups are not counted
+        knn_exact(df, q, 10)
+        counts[dim] = (
+            _py4j_calls(spark, lambda: idx.search(q, 10, nprobe=2)),
+            _py4j_calls(spark, lambda: knn_exact(df, q, 10)),
+        )
+        # the counted plans still answer: the query's own row ranks first
+        assert idx.search(q, 10, nprobe=4).first()["vec_id"] == 3
+    assert counts[8] == counts[384], counts

@@ -82,13 +82,12 @@ def test_cosine_zero_norm_guard(spark):
     """lib.rs:43-45: zero-norm vector -> similarity 0.0, not NaN."""
     from vector_database_in_rust_spark.functions.vectors import (
         cosine_similarity,
+        query_vector_sql,
     )
 
     df = tiny(spark, [(0, [0, 0]), (1, [1, 1])])
     got = df.select(
-        cosine_similarity(
-            F.col("embedding"), F.array(F.lit(3.0), F.lit(4.0))
-        ).alias("c")
+        cosine_similarity("`embedding`", query_vector_sql([3.0, 4.0])).alias("c")
     ).collect()
     assert got[0]["c"] == 0.0
     assert got[1]["c"] == pytest.approx(0.9899494, abs=1e-6)

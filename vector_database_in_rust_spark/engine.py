@@ -119,9 +119,20 @@ class VectorEngine:
         self._invalidate()
         return self
 
+    def _check_query(self, query: Sequence[float]) -> None:
+        """A query of the wrong length would score NULL distances
+        (``zip_with`` pads the shorter array) or fail inside numpy, so
+        it is refused here, before any plan is built."""
+        if len(query) != self.dimensions:
+            raise ValueError(
+                f"query has {len(query)} dimensions; the store has "
+                f"{self.dimensions}"
+            )
+
     # -- exact search (src/lib.rs:74-97) ----------------------------------
 
     def search_exact(self, query: Sequence[float], k: int) -> DataFrame:
+        self._check_query(query)
         return knn_ops.knn_exact(
             self.df, query, k, id_col=self.id_col, vec_col=self.vec_col
         )
@@ -275,6 +286,7 @@ class VectorEngine:
         expresses the probe budget as a cell fraction — rebuild-safe,
         see ``IVFIndex.nprobe_for_frac`` (an exact fallback ignores
         both knobs: it always scans everything)."""
+        self._check_query(query)
         if self.index is None:
             return self.search_exact(query, k)
         return self.index.search(query, k, nprobe=nprobe, target_frac=target_frac)
@@ -319,6 +331,7 @@ class VectorEngine:
         identical results, different cost. Works on either build;
         ``nprobe`` left None takes the index's own default (8 cells
         flat, half of all cells two-level)."""
+        self._check_query(query)
         if self.index is None:
             keep = metadata.filter(predicate).select(
                 F.col(meta_id_col or self.id_col).alias(self.id_col)

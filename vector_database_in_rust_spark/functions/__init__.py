@@ -4,6 +4,7 @@ from vector_database_in_rust_spark.functions.vectors import (
     l2_norm,
     l2_squared,
     query_vector_literal,
+    query_vector_sql,
 )
 
 __all__ = [
@@ -12,4 +13,5 @@ __all__ = [
     "l2_norm",
     "l2_squared",
     "query_vector_literal",
+    "query_vector_sql",
 ]

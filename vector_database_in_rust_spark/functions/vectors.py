@@ -7,11 +7,17 @@ Reference parity:
 - ``cosine_similarity`` == ``cosine_similarity`` (``src/lib.rs:32-47``),
   including the explicit zero-norm -> 0.0 guard (``src/lib.rs:43-45``).
 
-All of these are native higher-order-function column expressions
-(``zip_with`` + ``aggregate``): they run JVM-side inside whole-stage
-codegen, benefit from column pruning/pushdown around them, and never cross
-the Python boundary. That is the Spark analogue of the reference's
-"heavy math in compiled code behind FFI" (readme.md:18).
+Each metric is written once, as a Spark SQL template over higher-order
+functions (``zip_with`` + ``aggregate``): ``*_sql`` returns the text and the
+same-named builder without the suffix wraps it in one ``F.expr``. Operands
+are SQL text too — a backquoted column name, a ``slice(...)``, or a query
+vector from :func:`query_vector_sql` — so building a distance costs one
+py4j call whatever the vector's length, and the DataFrame operators,
+``sql.sql_knn`` and ``selectExpr`` projections share one arithmetic. The
+expressions run JVM-side inside whole-stage codegen, benefit from column
+pruning/pushdown around them, and never cross the Python boundary: the
+Spark analogue of the reference's "heavy math in compiled code behind
+FFI" (readme.md:18).
 
 Arithmetic is performed in DOUBLE (the float32 inputs are upcast first) so
 results are stable across partitioning choices to far more digits than the
@@ -27,45 +33,89 @@ from pyspark.sql import functions as F
 
 _D = "array<double>"
 
+# repr() of these is not a Spark literal; CAST of the string is.
+_SPECIAL = {
+    "nan": "CAST('NaN' AS DOUBLE)",
+    "inf": "CAST('Infinity' AS DOUBLE)",
+    "-inf": "CAST('-Infinity' AS DOUBLE)",
+}
+
+
+def query_vector_sql(vec: Sequence[float]) -> str:
+    """A query vector as Spark SQL text, ``array(<repr(x)>D, ...)``.
+
+    ``repr`` is the shortest decimal that parses back to the same double
+    and the ``D`` suffix makes Spark parse it as a DOUBLE, so every
+    element round-trips bit-exactly (-0.0 and subnormals included); NaN
+    and ±inf are written as casts. This is the one query-literal writer:
+    the plan carries the vector as a constant, broadcast to every task
+    with zero data movement at query time."""
+    return "array(" + ", ".join(
+        _SPECIAL.get(r, r + "D") for r in (repr(float(x)) for x in vec)
+    ) + ")"
+
 
 def query_vector_literal(vec: Sequence[float]) -> Column:
-    """A query vector as a Catalyst array literal (broadcast to every task
-    as part of the plan — zero data movement at query time)."""
-    return F.array(*[F.lit(float(x)) for x in vec]).cast(_D)
+    """:func:`query_vector_sql` as an ``array<double>`` Column — one py4j
+    call at any dimension."""
+    return F.expr(query_vector_sql(vec)).cast(_D)
 
 
-def _fold_sum(arr: Column) -> Column:
+def _fold_sum(arr: str) -> str:
     # Sequential left fold, like the reference's accumulation loop.
-    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+    return f"aggregate({arr}, 0D, (acc, v) -> acc + v)"
 
 
-def l2_squared(a: Column, b: Column) -> Column:
+def _zip_sum(a: str, b: str, term: str) -> str:
+    return _fold_sum(
+        f"zip_with(cast({a} as {_D}), cast({b} as {_D}), (x, y) -> {term})"
+    )
+
+
+def l2_squared_sql(a: str, b: str) -> str:
     """Squared Euclidean distance: sum((a_i - b_i)^2).
 
     Matches ``l2_squared_distance`` (src/lib.rs:28-30). No sqrt — the
     reference never takes one, and rank order is identical without it.
     """
-    return _fold_sum(
-        F.zip_with(a.cast(_D), b.cast(_D), lambda x, y: (x - y) * (x - y))
-    )
+    return _zip_sum(a, b, "(x - y) * (x - y)")
 
 
-def dot_product(a: Column, b: Column) -> Column:
-    return _fold_sum(F.zip_with(a.cast(_D), b.cast(_D), lambda x, y: x * y))
+def dot_product_sql(a: str, b: str) -> str:
+    return _zip_sum(a, b, "x * y")
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(_fold_sum(F.transform(a.cast(_D), lambda x: x * x)))
+def l2_norm_sql(a: str) -> str:
+    return f"sqrt({_fold_sum(f'transform(cast({a} as {_D}), x -> x * x)')})"
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
+def cosine_similarity_sql(a: str, b: str) -> str:
     """dot(a,b) / (||a|| * ||b||), 0.0 when either norm is zero.
 
     The zero-norm guard mirrors src/lib.rs:43-45 exactly (the reference
     returns 0.0 rather than NaN for degenerate vectors).
     """
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_product(a, b) / denom)
+    denom = f"({l2_norm_sql(a)} * {l2_norm_sql(b)})"
+    return (
+        f"CASE WHEN {denom} = 0D THEN 0D "
+        f"ELSE {dot_product_sql(a, b)} / {denom} END"
+    )
+
+
+def l2_squared(a: str, b: str) -> Column:
+    return F.expr(l2_squared_sql(a, b))
+
+
+def dot_product(a: str, b: str) -> Column:
+    return F.expr(dot_product_sql(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(l2_norm_sql(a))
+
+
+def cosine_similarity(a: str, b: str) -> Column:
+    return F.expr(cosine_similarity_sql(a, b))
 
 
 def sq8_scale(a: Column) -> Column:
@@ -166,4 +216,4 @@ def sign_pack_literal(vec: Sequence[float]) -> Column:
     for i, x in enumerate(vec):
         if float(x) > 0:
             words[i // WORD_BITS] |= 1 << (i % WORD_BITS)
-    return F.array(*[F.lit(w).cast("long") for w in words])
+    return F.expr("array(" + ", ".join(f"{w}L" for w in words) + ")")

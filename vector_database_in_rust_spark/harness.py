@@ -279,7 +279,7 @@ def fetch_by_id(spark, sf_dir):
         "vec_id",
         "label",
         F.size("embedding").cast("long").alias("dim"),
-        F.round(dot_product(F.col("embedding"), F.col("embedding")), 4).alias(
+        F.round(dot_product("`embedding`", "`embedding`"), 4).alias(
             "sq_norm"
         ),
     )
@@ -314,13 +314,13 @@ def l2_distance(spark, sf_dir):
     """Squared-L2 of every stored vector to vector 0 (O5, lib.rs:28-30).
     Pure Catalyst zip_with/aggregate — no UDF, whole-stage codegen."""
     from vector_database_in_rust_spark.functions.vectors import (
-        query_vector_literal,
+        query_vector_sql,
     )
 
-    qe = query_vector_literal(_query_vec(spark, sf_dir))
+    qe = query_vector_sql(_query_vec(spark, sf_dir))
     return _emb(spark, sf_dir).select(
         "vec_id",
-        F.round(l2_squared(F.col("embedding"), qe), 4).alias("dist"),
+        F.round(l2_squared("`embedding`", qe), 4).alias("dist"),
     )
 
 
@@ -337,13 +337,13 @@ def cosine_similarity_q(spark, sf_dir):
     zero-norm guard lib.rs:43-45). NB: dead code in the reference (no call
     sites) — implemented for public-surface parity."""
     from vector_database_in_rust_spark.functions.vectors import (
-        query_vector_literal,
+        query_vector_sql,
     )
 
-    qe = query_vector_literal(_query_vec(spark, sf_dir))
+    qe = query_vector_sql(_query_vec(spark, sf_dir))
     return _emb(spark, sf_dir).select(
         "vec_id",
-        F.round(cosine_similarity(F.col("embedding"), qe), 6).alias("cos_sim"),
+        F.round(cosine_similarity("`embedding`", qe), 6).alias("cos_sim"),
     )
 
 
@@ -2754,7 +2754,7 @@ def csv_vector_roundtrip(spark, sf_dir):
     return back.select(
         "vec_id",
         F.size("embedding").cast("long").alias("dim"),
-        F.round(dot_product(F.col("embedding"), F.col("embedding")), 4).alias(
+        F.round(dot_product("`embedding`", "`embedding`"), 4).alias(
             "sq_norm"
         ),
     )
@@ -3498,7 +3498,7 @@ def mmr_candidates(spark, sf_dir, *, n_queries: int = 8, top_n: int = 20):
     q = _query_vec_df(spark, sf_dir, n_queries)
     pairs = _emb(spark, sf_dir).join(F.broadcast(q), how="cross")
     rel = F.round(
-        cosine_similarity(F.col("embedding"), F.col("query_embedding")), 6
+        cosine_similarity("`embedding`", "`query_embedding`"), 6
     )
     scored = pairs.select(
         "query_id", "vec_id", rel.alias("rel"), "embedding"

@@ -410,6 +410,14 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _cells_in(cells) -> str:
+    """The static probe filter as SQL text, built in one py4j call for
+    any cell count (``isin`` makes one per cell)."""
+    if not cells:
+        return "false"
+    return f"cell_id IN ({', '.join(str(int(c)) for c in cells)})"
+
+
 def _pruned_scan(rows: DataFrame, probes: dict, score, schema: str) -> DataFrame:
     """Score a partition-pruned candidate scan against a driver-side
     probe set — the broadcast-small serve of ``search_batch_pruned``
@@ -438,8 +446,7 @@ def _pruned_scan(rows: DataFrame, probes: dict, score, schema: str) -> DataFrame
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    cand = rows.filter(F.col("cell_id").isin(sorted(probes)))
-    return cand.mapInPandas(block, schema)
+    return rows.where(_cells_in(sorted(probes))).mapInPandas(block, schema)
 
 
 # Rows of one hot cell its local 2-means fits on (a seeded sample
@@ -1012,7 +1019,7 @@ class IVFIndex:
         """
         nprobe_l1, nprobe = self._budget(nprobe_l1, nprobe, target_frac)
         cells = self._probe_cells(query, nprobe, nprobe_l1=nprobe_l1)
-        cand = self.assignments.filter(F.col("cell_id").isin(cells))
+        cand = self.assignments.where(_cells_in(cells))
         return knn_exact(cand, list(map(float, query)), k,
                          id_col=self.id_col, vec_col=self.vec_col)
 
@@ -1049,7 +1056,7 @@ class IVFIndex:
         """
         nprobe_l1, nprobe = self._budget(nprobe_l1, nprobe, target_frac)
         cells = self._probe_cells(query, nprobe, nprobe_l1=nprobe_l1)
-        cand = self.assignments.filter(F.col("cell_id").isin(cells))
+        cand = self.assignments.where(_cells_in(cells))
         keep = metadata.filter(predicate).select(
             F.col(meta_id_col or self.id_col).alias(self.id_col)
         )

@@ -36,16 +36,16 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_database_in_rust_spark.functions.vectors import (
-    cosine_similarity,
-    l2_squared,
-    query_vector_literal,
+    cosine_similarity_sql,
+    l2_squared_sql,
+    query_vector_sql,
 )
 
-METRICS = {"l2_squared": l2_squared, "cosine": cosine_similarity}
+METRICS = {"l2_squared": l2_squared_sql, "cosine": cosine_similarity_sql}
 
 # Loud bound on the query-side driver collect in the pandas batch path
 # (round 10, advisor): queries are "broadcast-small by contract", but a
@@ -91,18 +91,40 @@ def bounded_query_collect(
     return q_rows
 
 
-def _dist(metric: str, a: Column, b: Column) -> Column:
+def _col(name: str) -> str:
+    """A column name as a SQL operand."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dist(
+    metric: str, a: str, b: str, round_digits: int | None = None
+) -> str:
+    """SQL text of the ascending distance between operands ``a`` and
+    ``b``, rounded to ``round_digits`` when given."""
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(METRICS)}")
     d = METRICS[metric](a, b)
     # cosine is a similarity; negate so "ascending = best first" holds
     # uniformly for both metrics.
-    return -d if metric == "cosine" else d
+    if metric == "cosine":
+        d = f"-({d})"
+    return d if round_digits is None else f"round({d}, {int(round_digits)})"
+
+
+def _scored(
+    corpus: DataFrame, query: Sequence[float], id_col: str, vec_col: str,
+    metric: str, round_digits: int | None,
+) -> DataFrame:
+    """``(vec_id, dist)`` of every corpus row to one query, projected by
+    one ``selectExpr``: the query is a SQL literal, so building the plan
+    costs the same few py4j calls at any dimension."""
+    dist = _dist(metric, _col(vec_col), query_vector_sql(query), round_digits)
+    return corpus.selectExpr(f"{_col(id_col)} AS vec_id", f"{dist} AS dist")
 
 
 def knn_exact(
     corpus: DataFrame,
-    query: Sequence[float] | Column,
+    query: Sequence[float],
     k: int,
     *,
     id_col: str = "vec_id",
@@ -114,12 +136,8 @@ def knn_exact(
 
     Returns ``(vec_id, dist)`` ascending by ``(dist, vec_id)``.
     """
-    q = query_vector_literal(query) if not isinstance(query, Column) else query
-    dist = _dist(metric, F.col(vec_col), q)
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
     return (
-        corpus.select(F.col(id_col).alias("vec_id"), dist.alias("dist"))
+        _scored(corpus, query, id_col, vec_col, metric, round_digits)
         .orderBy("dist", "vec_id")
         .limit(k)
     )
@@ -164,9 +182,7 @@ def knn_batch(
             round_digits=round_digits,
         )
     pairs = corpus.join(F.broadcast(queries), how="cross")
-    dist = _dist(metric, F.col(vec_col), F.col(query_vec_col))
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
+    dist = F.expr(_dist(metric, _col(vec_col), _col(query_vec_col), round_digits))
     scored = pairs.select(
         F.col(query_id_col).alias("query_id"),
         F.col(id_col).alias("vec_id"),
@@ -203,7 +219,7 @@ def knn_join(
 
 def range_search(
     corpus: DataFrame,
-    query,
+    query: Sequence[float],
     radius: float,
     *,
     id_col: str = "vec_id",
@@ -217,12 +233,8 @@ def range_search(
     Scale: a pure scan+filter — no shuffle, no driver state; the radius
     predicate runs inside the scan stage and only matches leave the
     executor."""
-    q = query_vector_literal(query) if not isinstance(query, Column) else query
-    dist = l2_squared(F.col(vec_col), q)
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
     return (
-        corpus.select(F.col(id_col).alias("vec_id"), dist.alias("dist"))
+        _scored(corpus, query, id_col, vec_col, "l2_squared", round_digits)
         .filter(F.col("dist") <= radius)
         .orderBy("dist", "vec_id")
     )
@@ -418,24 +430,32 @@ def knn_funnel(
     depends on prefix informativeness (the MRL training contract),
     pinned separately by a recall bar in tests.
     """
-    q = [float(x) for x in query]
-    q_prefix = query_vector_literal(q[:prefix_dim])
-    d16 = F.round(
-        l2_squared(F.slice(F.col(vec_col), 1, prefix_dim), q_prefix),
+    d16 = _dist(
+        "l2_squared",
+        f"slice({_col(vec_col)}, 1, {int(prefix_dim)})",
+        query_vector_sql(query[:prefix_dim]),
         round_digits,
     )
     candidates = (
-        corpus.select(F.col(id_col).alias("_cand_id"), d16.alias("d_prefix"))
+        corpus.selectExpr(f"{_col(id_col)} AS _cand_id", f"{d16} AS d_prefix")
         .orderBy("d_prefix", "_cand_id")
         .limit(k * refine_factor)
         .select("_cand_id")
     )
-    d_full = F.round(l2_squared(F.col(vec_col), query_vector_literal(q)), round_digits)
+    return _rerank(corpus, candidates, query, k, id_col, vec_col, round_digits)
+
+
+def _rerank(
+    corpus: DataFrame, candidates: DataFrame, query: Sequence[float], k: int,
+    id_col: str, vec_col: str, round_digits: int,
+) -> DataFrame:
+    """Exact L2 top-k of the corpus rows whose id is in ``candidates``'
+    ``_cand_id`` column (broadcast semi-join, then re-rank)."""
+    joined = corpus.join(
+        F.broadcast(candidates), on=F.col(id_col) == F.col("_cand_id")
+    )
     return (
-        corpus.join(
-            F.broadcast(candidates), on=F.col(id_col) == F.col("_cand_id")
-        )
-        .select(F.col(id_col).alias("vec_id"), d_full.alias("dist"))
+        _scored(joined, query, id_col, vec_col, "l2_squared", round_digits)
         .orderBy("dist", "vec_id")
         .limit(k)
     )
@@ -471,18 +491,7 @@ def knn_refine_bq(
         vec_col=vec_col,
         codes_col=codes_col,
     ).select(F.col("vec_id").alias("_cand_id"))
-    q = [float(x) for x in query]
-    d_full = F.round(
-        l2_squared(F.col(vec_col), query_vector_literal(q)), round_digits
-    )
-    return (
-        corpus.join(
-            F.broadcast(candidates), on=F.col(id_col) == F.col("_cand_id")
-        )
-        .select(F.col(id_col).alias("vec_id"), d_full.alias("dist"))
-        .orderBy("dist", "vec_id")
-        .limit(k)
-    )
+    return _rerank(corpus, candidates, query, k, id_col, vec_col, round_digits)
 
 
 def hard_negatives(
@@ -519,9 +528,7 @@ def hard_negatives(
     pairs = corpus.join(F.broadcast(queries), how="cross").where(
         F.col(label_col) != F.col(query_label_col)
     )
-    dist = _dist(metric, F.col(vec_col), F.col(query_vec_col))
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
+    dist = F.expr(_dist(metric, _col(vec_col), _col(query_vec_col), round_digits))
     scored = pairs.select(
         F.col(query_id_col).alias("query_id"),
         F.col(id_col).alias("vec_id"),

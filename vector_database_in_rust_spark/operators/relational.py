@@ -36,7 +36,7 @@ def multimodal_join(docs: DataFrame, emb: DataFrame) -> DataFrame:
             "label",
             F.size("embedding").alias("dim"),
             F.round(
-                F.sqrt(dot_product(F.col("embedding"), F.col("embedding"))), 4
+                F.sqrt(dot_product("`embedding`", "`embedding`")), 4
             ).alias("emb_norm"),
         )
     )
@@ -171,7 +171,7 @@ def label_topk_per_query(
         "label",
         F.col("vec_id").alias("vec_id"),
         F.round(
-            l2_squared(F.col("embedding"), F.col("query_embedding")), 4
+            l2_squared("`embedding`", "`query_embedding`"), 4
         ).alias("dist"),
     )
     w = Window.partitionBy("query_id", "label").orderBy("dist", "vec_id")

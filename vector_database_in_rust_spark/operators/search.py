@@ -475,7 +475,7 @@ def maxsim_search(
     sims = dtok.crossJoin(F.broadcast(qtok)).select(
         "doc_id",
         "qtoken",
-        F.round(cosine_similarity(F.col("dv"), F.col("qv")), 6).alias("cos"),
+        F.round(cosine_similarity("`dv`", "`qv`"), 6).alias("cos"),
     )
     per_qt = sims.groupBy("doc_id", "qtoken").agg(F.max("cos").alias("best"))
     return (

@@ -1,25 +1,25 @@
 """SQL-first interface: the same engine surface through ``spark.sql``.
 
 Everything the DataFrame operators express is also reachable as ANSI-ish
-Spark SQL over registered views — the distance expressions are plain SQL
-higher-order functions (``aggregate``/``zip_with``), so a SQL-only user
-of the engine gets identical plans (Catalyst compiles both paths to the
-same physical operators; the parity harness proves result equality).
+Spark SQL over registered views. The distance expressions are not copied
+here: ``functions/vectors`` writes each metric once as a SQL template
+(``l2_squared_sql`` and friends) and the query vector once as a SQL
+literal (``query_vector_sql``), and the DataFrame operators and this
+module format the same text. A SQL-only user of the engine therefore gets
+the identical arithmetic and plans (the parity harness proves result
+equality).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vector_database_in_rust_spark.functions.vectors import (
+    l2_squared_sql,
+    query_vector_sql,
+)
 from vector_database_in_rust_spark.schemas import TABLE_NAMES
 from vector_database_in_rust_spark.sources.tables import load_table
-
-# Reusable SQL fragment: squared L2 between two ARRAY<FLOAT> columns,
-# computed in DOUBLE (mirrors functions/vectors.l2_squared).
-SQL_L2SQ = (
-    "aggregate(zip_with(cast({a} as array<double>), cast({b} as array<double>),"
-    " (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, v) -> acc + v)"
-)
 
 
 def register_views(spark: SparkSession, sf_dir: str, *, prefix: str = "") -> None:
@@ -32,11 +32,11 @@ def sql_knn(spark: SparkSession, sf_dir: str, query_vec: list[float], k: int = 5
     """Exact k-NN authored entirely in SQL — compiles to the same
     TakeOrderedAndProject plan as the DataFrame form."""
     register_views(spark, sf_dir)
-    vec_sql = "array(" + ", ".join(f"cast({float(x)} as float)" for x in query_vec) + ")"
+    dist = l2_squared_sql("`embedding`", query_vector_sql(query_vec))
     return spark.sql(
         f"""
         SELECT vec_id,
-               round({SQL_L2SQ.format(a='embedding', b=vec_sql)}, 4) AS dist
+               round({dist}, 4) AS dist
         FROM embeddings
         ORDER BY dist, vec_id
         LIMIT {int(k)}
