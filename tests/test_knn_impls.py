@@ -272,14 +272,17 @@ def test_batch_query_guard_raises_on_oversized_frame(spark, emb, monkeypatch):
 def _py4j_calls(spark, construct) -> int:
     """py4j round trips made while ``construct()`` builds (not runs) a
     plan: the gateway client's ``send_command`` is counted for the
-    length of the call."""
+    length of the call. Memory-release commands are not counted:
+    Python's garbage collector sends them whenever it frees a Java
+    reference, so they do not belong to the construction."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
 
-    def counted(*args, **kwargs):
-        calls.append(1)
-        return send(*args, **kwargs)
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls.append(1)
+        return send(command, *args, **kwargs)
 
     client.send_command = counted
     try:
